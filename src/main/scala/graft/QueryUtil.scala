@@ -45,6 +45,30 @@ object QueryUtil {
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
   }
 
+  /** Plan a TINY input as one stage — the mirror of [[fanOutIfNarrow]].
+    * When the frame's optimizer size estimate
+    * (`optimizedPlan.stats.sizeInBytes`) is at most the session's
+    * `spark.sql.files.openCostInBytes`, return `df.coalesce(1)`;
+    * otherwise return `df` unchanged.
+    *
+    * Threshold: Spark defines the open cost as the bytes one task
+    * scans in the time it takes to open a file, so an input that small
+    * cannot pay for a second stage (shuffle map tasks, a range-bound
+    * sampling job, a reduce stage). It is an existing setting, the one
+    * figure Spark already uses to price a task's fixed cost, so the
+    * choice needs no switch of its own.
+    *
+    * Shape: `CoalesceExec(1)` reports `SinglePartition`, which satisfies
+    * any clustered or ordered distribution above it, so an aggregate or
+    * global sort plans with no `Exchange`. Filters, column pruning and
+    * partition pruning still push below the coalesce into the scan.
+    *
+    * Cost: one optimizer pass over the input plan; no Spark job. */
+  def singleStageIfTiny(df: DataFrame): DataFrame = {
+    val openCost = df.sparkSession.sessionState.conf.filesOpenCostInBytes
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= openCost) df.coalesce(1) else df
+  }
+
   /** Run `f` against a fresh temp directory, deleting the tree on ANY
     * exit path. */
   def inTempDir[T](prefix: String)(f: String => T): T = {

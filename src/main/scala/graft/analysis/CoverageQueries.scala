@@ -2,8 +2,9 @@ package graft.analysis
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.QueryUtil.singleStageIfTiny
 import graft.model.CampaignWindow
-import graft.stats.StudentT
+import graft.stats.{ExactMoments, StudentT}
 
 /** The reference's query + stats surface, generalized from per-selection
   * scalars to grouped aggregates over (country, antigen).
@@ -15,6 +16,16 @@ import graft.stats.StudentT
   * reference's single-selection flow is the degenerate `filter` of it
   * (SURVEY §7.0). All inputs are a "fact" DataFrame with columns
   * (country, antigen, year, coverage_pct).
+  *
+  * Small inputs: every entry point first passes its fact through
+  * [[graft.QueryUtil.singleStageIfTiny]]. A fact whose size estimate is
+  * at most `spark.sql.files.openCostInBytes` (the dashboard's one
+  * published snapshot, a CLI selection) is planned as ONE stage:
+  * `Coalesce 1` under the aggregate or sort, so no `Exchange`, no
+  * shuffle and no range-sampling job — `seriesOf(..).collect()` runs
+  * one Spark job instead of three, `beforeAfterFull` one instead of
+  * two. Filters and projections still push into the scan below the
+  * coalesce. Larger facts keep the distributed plan unchanged.
   */
 object CoverageQueries {
 
@@ -42,18 +53,19 @@ object CoverageQueries {
     * (`/root/reference/etl_pipeline.py:109-118`). Catalyst pushes both
     * equality predicates and the 2-column projection into the scan. */
   def seriesOf(fact: DataFrame, country: String, antigen: String): DataFrame =
-    fact.filter(col("country") === country && col("antigen") === antigen)
+    singleStageIfTiny(fact)
+      .filter(col("country") === country && col("antigen") === antigen)
       .select("year", "coverage_pct")
       .orderBy("year")
 
   /** Distinct (country, antigen) index — S3/A1/L2
     * (`/root/reference/streamlit_app.py:103-105`). */
   def index(fact: DataFrame): DataFrame =
-    fact.select("country", "antigen").distinct().orderBy("country", "antigen")
+    singleStageIfTiny(fact).select("country", "antigen").distinct().orderBy("country", "antigen")
 
   /** Antigens available for one country — P8 (dependent dropdown). */
   def antigensFor(fact: DataFrame, country: String): DataFrame =
-    fact.filter(col("country") === country)
+    singleStageIfTiny(fact).filter(col("country") === country)
       .select("antigen").distinct().orderBy("antigen")
 
   /** Per-series KPIs — A4/A5/A9/A10: span, point count, earliest/latest
@@ -61,14 +73,14 @@ object CoverageQueries {
     * window — no sort, plain hash aggregate), net change
     * (`/root/reference/streamlit_app.py:199-234`). */
   def kpis(fact: DataFrame): DataFrame =
-    fact.groupBy("country", "antigen").agg(
+    singleStageIfTiny(fact).groupBy("country", "antigen").agg(
       min("year").as("year_min"),
       max("year").as("year_max"),
       count("coverage_pct").as("n_points"),
       min_by(col("coverage_pct"), col("year")).as("earliest"),
       max_by(col("coverage_pct"), col("year")).as("latest"),
       exactAvg(col("coverage_pct")).as("mean_coverage"),
-    ).withColumn("delta", col("latest") - col("earliest"))
+    ).select(col("*"), (col("latest") - col("earliest")).as("delta"))
       .orderBy("country", "antigen")
 
   private def inBefore(w: CampaignWindow): Column =
@@ -76,45 +88,64 @@ object CoverageQueries {
   private def inAfter(w: CampaignWindow): Column =
     col("year").between(w.afterLo, w.afterHi)
 
-  /** Before/after window means + diff, single-pass conditional aggregate
-    * — P4/A3/A6/A10 (`/root/reference/etl_pipeline.py:124-145`). One
-    * scan instead of the reference's two boolean-mask slices. */
-  def beforeAfterMeans(fact: DataFrame, w: CampaignWindow): DataFrame =
-    fact.groupBy("country", "antigen").agg(
-      count(when(inBefore(w), col("coverage_pct"))).as("n_before"),
-      count(when(inAfter(w), col("coverage_pct"))).as("n_after"),
-      exactAvg(when(inBefore(w), col("coverage_pct"))).as("mean_before"),
-      exactAvg(when(inAfter(w), col("coverage_pct"))).as("mean_after"),
-    ).withColumn("diff", col("mean_after") - col("mean_before"))
-      .orderBy("country", "antigen")
-
-  /** Welch t-test expressed relationally — A8. Same math as the
-    * [[graft.stats.WelchTTest]] aggregator but built purely from
-    * Catalyst built-ins (avg/var_samp/count with conditional inputs), so
-    * it stays inside whole-stage codegen AND is DuckDB-oracle-checkable.
-    * The p-value needs the t CDF (commons-math3) and is added by
-    * [[beforeAfterFull]]. Null t where either side has n<2 — the
-    * reference's guard (`etl_pipeline.py:136`). */
-  def welchRelational(fact: DataFrame, w: CampaignWindow): DataFrame = {
+  /** Per-side point counts and exact means: n_before, n_after,
+    * mean_before, mean_after. */
+  private def sideMeans(w: CampaignWindow): Seq[Column] = {
     val v = col("coverage_pct")
-    fact.groupBy("country", "antigen").agg(
+    Seq(
       count(when(inBefore(w), v)).as("n_before"),
       count(when(inAfter(w), v)).as("n_after"),
       exactAvg(when(inBefore(w), v)).as("mean_before"),
-      exactAvg(when(inAfter(w), v)).as("mean_after"),
-      // exact decimal-accumulated variance (NULL at n<2): with exact
-      // means AND vars, t/df are fixed IEEE op chains over identical
-      // inputs — bitwise-mirrorable, no rounding bridge needed
-      graft.stats.ExactMoments.exactVar(when(inBefore(w), v)).as("var_before"),
-      graft.stats.ExactMoments.exactVar(when(inAfter(w), v)).as("var_after"),
-    ).withColumn("t_stat",
-      when(col("n_before") > 1 && col("n_after") > 1,
+      exactAvg(when(inAfter(w), v)).as("mean_after"))
+  }
+
+  /** Per-side exact sample variances (NULL at n<2): var_before,
+    * var_after. With exact means AND vars, t/df are fixed IEEE op
+    * chains over identical inputs — bitwise-mirrorable, no rounding
+    * bridge needed. */
+  private def sideVars(w: CampaignWindow): Seq[Column] = {
+    val v = col("coverage_pct")
+    Seq(
+      ExactMoments.exactVar(when(inBefore(w), v)).as("var_before"),
+      ExactMoments.exactVar(when(inAfter(w), v)).as("var_after"))
+  }
+
+  /** Welch t and Welch–Satterthwaite df over [[sideMeans]] +
+    * [[sideVars]]: t_stat, welch_df. Null where either side has n<2 —
+    * the reference's guard (`etl_pipeline.py:136`). */
+  private def welchCols: Seq[Column] = {
+    val testable = col("n_before") > 1 && col("n_after") > 1
+    Seq(
+      when(testable,
         StudentT.welchT(col("mean_before"), col("var_before"), col("n_before"),
-          col("mean_after"), col("var_after"), col("n_after"))))
-      .withColumn("welch_df",
-        when(col("n_before") > 1 && col("n_after") > 1,
-          StudentT.welchDf(col("var_before"), col("n_before"),
-            col("var_after"), col("n_after"))))
+          col("mean_after"), col("var_after"), col("n_after"))).as("t_stat"),
+      when(testable,
+        StudentT.welchDf(col("var_before"), col("n_before"),
+          col("var_after"), col("n_after"))).as("welch_df"))
+  }
+
+  private val diff: Column = (col("mean_after") - col("mean_before")).as("diff")
+
+  /** Before/after window means + diff, single-pass conditional aggregate
+    * — P4/A3/A6/A10 (`/root/reference/etl_pipeline.py:124-145`). One
+    * scan instead of the reference's two boolean-mask slices. */
+  def beforeAfterMeans(fact: DataFrame, w: CampaignWindow): DataFrame = {
+    val aggs = sideMeans(w)
+    singleStageIfTiny(fact).groupBy("country", "antigen").agg(aggs.head, aggs.tail: _*)
+      .select(col("*"), diff)
+      .orderBy("country", "antigen")
+  }
+
+  /** Welch t-test expressed relationally — A8. Same math as the
+    * [[graft.stats.WelchTTest]] aggregator but built purely from
+    * Catalyst built-ins (count and exact decimal moments with
+    * conditional inputs), so it stays inside whole-stage codegen AND is
+    * DuckDB-oracle-checkable. The p-value needs the t CDF
+    * (commons-math3) and is added by [[beforeAfterFull]]. */
+  def welchRelational(fact: DataFrame, w: CampaignWindow): DataFrame = {
+    val aggs = sideMeans(w) ++ sideVars(w)
+    singleStageIfTiny(fact).groupBy("country", "antigen").agg(aggs.head, aggs.tail: _*)
+      .select(col("*") +: welchCols: _*)
   }
 
   /** Full before/after analysis: means, 95% CIs (A7 — scipy
@@ -128,42 +159,31 @@ object CoverageQueries {
     * (n, mean, SEM, diff, t, df) is oracle-checkable SQL (q05 covers
     * t/df, q101 the SEM lane); only the t-quantile/CDF multiplication
     * itself (ci_*, p_value, verdict) rides on spec-carried
-    * commons-math3 constants ([[graft.stats.StudentT]]). */
+    * commons-math3 constants ([[graft.stats.StudentT]]).
+    *
+    * Derived columns are added one `select` per dependency level
+    * (CIs/diff/t/df, then p, then the verdict): each `select` analyses
+    * its new plan eagerly, so fewer levels plan faster. */
   def beforeAfterFull(fact: DataFrame, w: CampaignWindow, conf: Double = 0.95): DataFrame = {
     val v = col("coverage_pct")
-    import graft.stats.ExactMoments
-    val withStats = fact.groupBy("country", "antigen").agg(
-      count(when(inBefore(w), v)).as("n_before"),
-      count(when(inAfter(w), v)).as("n_after"),
-      exactAvg(when(inBefore(w), v)).as("mean_before"),
-      exactAvg(when(inAfter(w), v)).as("mean_after"),
-      ExactMoments.exactVar(when(inBefore(w), v)).as("var_before"),
-      ExactMoments.exactVar(when(inAfter(w), v)).as("var_after"),
+    val aggs = sideMeans(w) ++ sideVars(w) ++ Seq(
       (ExactMoments.exactStddev(when(inBefore(w), v)) /
         sqrt(count(when(inBefore(w), v)))).as("sem_before"),
       (ExactMoments.exactStddev(when(inAfter(w), v)) /
-        sqrt(count(when(inAfter(w), v)))).as("sem_after"),
-    )
-    val tested = withStats
-      .withColumn("ci_before", StudentT.ciHalfWidth(col("sem_before"), col("n_before"), conf))
-      .withColumn("ci_after", StudentT.ciHalfWidth(col("sem_after"), col("n_after"), conf))
-      .withColumn("diff", col("mean_after") - col("mean_before"))
-      .withColumn("t_stat",
-        when(col("n_before") > 1 && col("n_after") > 1,
-          StudentT.welchT(col("mean_before"), col("var_before"), col("n_before"),
-            col("mean_after"), col("var_after"), col("n_after"))))
-      .withColumn("welch_df",
-        when(col("n_before") > 1 && col("n_after") > 1,
-          StudentT.welchDf(col("var_before"), col("n_before"),
-            col("var_after"), col("n_after"))))
-      .withColumn("p_value", StudentT.tPValue2(col("t_stat"), col("welch_df")))
-    // Tri-state narrative label (streamlit_app.py:331-342): significant
-    // rise / significant fall / no significant change / not enough data.
-    tested.withColumn("verdict",
-      when(col("p_value").isNull, lit("insufficient_data"))
-        .when(col("p_value") < 0.05 && col("diff") > 0, lit("significant_increase"))
-        .when(col("p_value") < 0.05 && col("diff") < 0, lit("significant_decrease"))
-        .otherwise(lit("no_significant_change")))
+        sqrt(count(when(inAfter(w), v)))).as("sem_after"))
+    singleStageIfTiny(fact).groupBy("country", "antigen").agg(aggs.head, aggs.tail: _*)
+      .select(Seq(col("*"),
+        StudentT.ciHalfWidth(col("sem_before"), col("n_before"), conf).as("ci_before"),
+        StudentT.ciHalfWidth(col("sem_after"), col("n_after"), conf).as("ci_after"),
+        diff) ++ welchCols: _*)
+      .select(col("*"), StudentT.tPValue2(col("t_stat"), col("welch_df")).as("p_value"))
+      // Tri-state narrative label (streamlit_app.py:331-342): significant
+      // rise / significant fall / no significant change / not enough data.
+      .select(col("*"),
+        when(col("p_value").isNull, lit("insufficient_data"))
+          .when(col("p_value") < 0.05 && col("diff") > 0, lit("significant_increase"))
+          .when(col("p_value") < 0.05 && col("diff") < 0, lit("significant_decrease"))
+          .otherwise(lit("no_significant_change")).as("verdict"))
   }
 
   /** Top-k head of the ordered series — L3 (`report_generator.py:77-78`).

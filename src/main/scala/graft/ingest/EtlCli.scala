@@ -79,7 +79,9 @@ object EtlCli {
     for (country <- c.country; antigen <- c.antigen) yield {
       val published = spark.read.parquet(s"${c.out}/immunization")
       val series = CoverageQueries.seriesOf(published, country, antigen)
-      if (series.isEmpty)
+      val pts = series.collect()
+        .map(r => (r.getAs[Number](0).intValue, r.getAs[Number](1).doubleValue)).toSeq
+      if (pts.isEmpty)
         throw new IllegalArgumentException(
           s"no data for country=$country antigen=$antigen")
       val stem = s"${WideCsvIngest.sanitizeName(country)}_" +
@@ -97,8 +99,6 @@ object EtlCli {
       // plot (etl_pipeline.py:156-172) and 2-page PDF policy report
       // (report_generator.py). Driver-side rendering of the bounded,
       // already-aggregated series + stats row.
-      val pts = series.collect()
-        .map(r => (r.getAs[Number](0).intValue, r.getAs[Number](1).doubleValue)).toSeq
       def opt(name: String): Option[Double] =
         if (row.isNullAt(row.fieldIndex(name))) None else Some(row.getAs[Double](name))
       graft.report.PngChart.writeCoveragePlot(pts, country, antigen,

@@ -399,8 +399,8 @@ object DvPack {
   * count, bounded by the single container a compact would write.
   * Input containers are immutable commit artifacts; the output is
   * byte-identical to [[DvBitmap.pack]] of the united position set
-  * (the [[DvAcc.packed]] re-decision), so downstream probes and size
-  * decisions see exactly compact's bytes. NULL inputs are ignored; a
+  * (the [[DvAcc.packed]] re-decision), so downstream probes see
+  * exactly compact's bytes. NULL inputs are ignored; a
   * group with no container evaluates to NULL.
   *
   * The position-multiset contract is weaker than [[DvPack]]'s:

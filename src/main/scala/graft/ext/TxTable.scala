@@ -295,8 +295,9 @@ object TxTable {
       * LOUDLY instead of replaying manifests it half-understands into
       * a silently wrong file list — the lakehouse formats'
       * reader-version gate. Headers without the field (every log
-      * written before the gate, and the kind-less legacy shape) read
-      * as protocol 1. Purely additive fields do NOT bump it. */
+      * written before the gate) read as protocol 1; a header must
+      * still declare its kind ([[parse]]). Purely additive fields do
+      * NOT bump it. */
     val SupportedProtocol = 1
 
     private def entryNode(f: FileEntry): ObjectNode = {
@@ -436,39 +437,20 @@ object TxTable {
           s"up to $SupportedProtocol — upgrade the engine before touching " +
           "this table (replaying half-understood manifests would derive " +
           "a silently wrong file list)")
-      // Legacy (pre-kind) manifests: no "kind" in the header, every
-      // line a bare full-list entry `{"path":…[,"bucket":…][,"sc":…,
-      // "lo":…,"hi":…]}`. They are always full snapshots (the old
-      // writer had no deltas), so kind=full + adds-only reads them
-      // losslessly: single-column stats map, no bloom, sizes/rows
-      // unrecorded (0 / -1 sentinels the rest of the engine already
-      // honors).
-      val kindless = !h.has("kind")
+      // a header must declare its kind: the body alone cannot tell a
+      // full list from a delta, and replaying a delta as full would
+      // reset state and drop every carried-forward file
+      require(h.has("kind"),
+        s"kind-less manifest header in $src — this engine reads only " +
+          "manifests that declare their kind (full or delta)")
       val adds = Seq.newBuilder[FileEntry]
       val removes = Seq.newBuilder[String]
-      var sawModern = false
       lines.foreach { line =>
         val n = mapper.readTree(line)
-        if (n.has("a")) { sawModern = true; adds += parseEntry(n.get("a")) }
-        else if (n.has("r")) { sawModern = true; removes += n.get("r").asText() }
-        else if (kindless && n.has("path")) {
-          val stats =
-            if (n.has("sc"))
-              Map(n.get("sc").asText() ->
-                (n.get("lo").asLong(), n.get("hi").asLong()))
-            else Map.empty[String, (Long, Long)]
-          adds += FileEntry(n.get("path").asText(),
-            Option(n.get("bucket")).map(_.asText()), stats, None, 0L, -1L)
-        } else sys.error(s"malformed manifest line in $src: $line")
+        if (n.has("a")) adds += parseEntry(n.get("a"))
+        else if (n.has("r")) removes += n.get("r").asText()
+        else sys.error(s"malformed manifest line in $src: $line")
       }
-      // legacy acceptance requires the BODY to match the legacy shape
-      // too: a modern delta whose header merely LOST its "kind" must
-      // fail loudly, not be silently replayed as a full snapshot
-      // (which would reset state and drop every carried-forward file)
-      require(!(kindless && sawModern),
-        s"kind-less header but modern a/r delta lines in $src — " +
-          "corrupt manifest, refusing to reinterpret a delta as full")
-      val legacy = kindless
       val schemas =
         if (!h.has("schemas")) Map.empty[String, String]
         else {
@@ -496,7 +478,7 @@ object TxTable {
       ParsedLog(h.get("version").asLong(),
         Option(h.get("base")).map(_.asLong()).getOrElse(h.get("version").asLong() - 1),
         Option(h.get("op")).map(_.asText()).getOrElse("unknown"),
-        if (legacy) "full" else h.get("kind").asText(),
+        h.get("kind").asText(),
         adds.result(), removes.result(),
         Option(h.get("schema")).map(_.asText()), schemas,
         Option(h.get("txn")).map(t => (t.get("app").asText(), t.get("ver").asLong())),
@@ -1687,7 +1669,6 @@ object TxTable {
     * construction. */
   private[graft] val DvFileCol = "__graft_dv_file"
   private[graft] val DvPosCol = "__graft_dv_pos"
-  private[graft] val DvBitsCol = "__graft_dv_bits"
 
   /** Write `doomed`'s ([[DvFileCol]], [[DvPosCol]]) row identities as a
     * deletion-vector sidecar at `root/dvRel` — ONE row per tombstoned
@@ -1768,46 +1749,23 @@ object TxTable {
   }
 
   /** Read entries as one DataFrame, applying any deletion vectors.
-    * Entries WITHOUT DVs read exactly as before (zero join, zero
-    * metadata projection — the common case pays nothing); entries
-    * WITH DVs read with (file, pos) row identity, join the per-FILE
-    * bitmap side on the path alone, and drop rows whose position the
-    * file's bitmap tombstones ([[DvContains]] — a static O(1) probe
-    * inside whole-stage codegen). The per-commit bitmap STACK is
-    * OR-merged at read into ONE container per file ([[DvUnion]] —
-    * dense partials adopted by reference, never replayed), so a
-    * compaction-starved table hit by N DML waves still carries one
-    * bitmap per file and the scan probes ONE container per row —
-    * exactly the bytes a compact would have reconciled, paid once per
-    * query instead of N times per row. The bitmap side holds ONE row
-    * per tombstoned file, so it is broadcast-sized by construction
-    * for point DML; the decision still keys on the sidecars' ACTUAL
-    * on-disk bytes with a mass-delete shuffle fallback (the merged
-    * side is never LARGER than the stacked sidecar bytes: OR can only
-    * collapse). Pre-bitmap sidecars (one (file, pos) row per
-    * tombstone) are packed into the same shape at read time, so
-    * tables written before the bitmap format upgrade keep reading.
-    * `withRowId` additionally exposes [[DvFileCol]]/[[DvPosCol]] to
-    * DML writers. */
-  /** True when a DV sidecar dir holds the bitmap form (a `bits`
-    * column in the parquet schema), decided by ONE driver-side footer
-    * read of the dir's first data file — no spark job. Any failure to
-    * decide (empty dir, unreadable footer) returns false, which routes
-    * the caller to the inferring legacy read — correct either way,
-    * just without the saved job. */
-  private def sidecarIsBitmapForm(fs: FileSystem, dir: Path): Boolean =
-    try {
-      fs.listStatus(dir).collectFirst {
-        case st if st.isFile && st.getLen > 0 &&
-            st.getPath.getName.startsWith("part-") =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, fs.getConf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFileMetaData.getSchema.containsField("bits")
-          finally r.close()
-      }.getOrElse(false)
-    } catch { case scala.util.control.NonFatal(_) => false }
-
+    * Entries WITHOUT DVs read exactly as before (no metadata
+    * projection — the common case pays nothing). For entries WITH DVs,
+    * every sidecar dir of the version is read in ONE scan under the
+    * declared `file STRING, bits BINARY` schema (no inference job, no
+    * driver-side footer probe), the per-commit bitmap STACK is
+    * OR-merged into ONE container per file ([[DvUnion]] — dense
+    * partials adopted by reference, never replayed), and the merged
+    * per-file map is collected, broadcast and probed inside the scan
+    * filter ([[DvMapContains]]). So a compaction-starved table hit by
+    * N DML waves still carries one bitmap per file and the scan probes
+    * ONE container per row. That collect is the read-build's only
+    * job, up to `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (32) stacked sidecar dirs; past it Spark lists them with a job of
+    * its own. A sidecar without a `bits` column (the pre-bitmap row form)
+    * fails it loudly, naming the file, instead of reading as "nothing
+    * tombstoned". `withRowId` additionally exposes
+    * [[DvFileCol]]/[[DvPosCol]] to DML writers. */
   private def readFiles(
       spark: SparkSession, root: Path, files: Seq[FileEntry],
       schemas: Map[String, String] = Map.empty,
@@ -1819,58 +1777,25 @@ object TxTable {
       Option.when(plain.nonEmpty)(
         rawRead(spark, root, plain, schemas, withRowId)),
       Option.when(dved.nonEmpty) {
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val dvDirs = dved.flatMap(_.dvs.map(_.dir)).distinct
-        val perDir = dvDirs.map { d =>
-          val p = new Path(root, d)
-          // form detection via ONE driver-side footer read instead of a
-          // schema-inference spark JOB per sidecar dir per read-build:
-          // DV dirs stack one per DML commit until a compact, so an
-          // interactive read of a busy table paid one job per commit
-          // just to learn a schema this engine wrote. The bitmap form
-          // (the only form this engine writes) then reads under its
-          // declared subset schema; legacy row-form sidecars — and any
-          // dir the probe cannot read — keep the inferring read.
-          if (sidecarIsBitmapForm(fs, p))
-            spark.read.schema("file STRING, bits BINARY")
-              .parquet(p.toString).select("file", "bits")
-          else {
-            val raw = spark.read.parquet(p.toString)
-            if (raw.columns.contains("bits")) raw.select("file", "bits")
-            else raw.groupBy("file") // legacy row-form sidecar: pack now
-              .agg(DvPack.agg(col("pos")).as("bits"))
-          }
-        }
-        val dv = perDir.reduce(_.unionByName(_))
-          .groupBy(col("file").as(DvFileCol))
-          .agg(DvUnion.agg(col("bits")).as(DvBitsCol))
-        // broadcast decision on the sidecars' ACTUAL bytes (driver-side
-        // FS stat, one RPC per DML commit since the last compact), with
-        // headroom for parquet-decode expansion of the bitmap payloads
-        val dvBytes = dvDirs.map(d =>
-          fs.getContentSummary(new Path(root, d)).getLength).sum
-        val filtered = if (dvBytes * 8 <= (32L << 20)) {
-          // broadcast path (r20): collect the per-file merged bitmaps —
-          // the very rows the former broadcast-join side shipped — and
-          // probe them as a broadcast map inside the scan filter. The
-          // join formulation read the BINARY bits column out of every
-          // joined row, and UnsafeRow.getBinary copies the whole
-          // container per row: a dense bitmap over an N-row file cost
-          // O(N · span/8) bytes of memcpy in the scan (the r19 suite
-          // "stall"). Map probe: zero copies, no join node, and the
-          // sidecar union job runs once at read-build time.
-          val dvMap = dv.collect()
-            .map(r => UTF8String.fromString(r.getString(0)) ->
-              r.getAs[Array[Byte]](1)).toMap
-          val bcast = spark.sparkContext.broadcast(dvMap)
-          rawRead(spark, root, dved, schemas, withRowId = true)
-            .where(!DvMapContains(col(DvFileCol), col(DvPosCol),
-              bcast, dvMap.size))
-        } else rawRead(spark, root, dved, schemas, withRowId = true)
-          .join(dv, Seq(DvFileCol), "left")
-          .where(col(DvBitsCol).isNull ||
-            !DvContains(col(DvBitsCol), col(DvPosCol)))
-          .drop(DvBitsCol)
+          .map(d => new Path(root, d).toString)
+        // coalesce(1): the one-row-per-file result goes to the driver
+        // anyway, so one task merges it and the union is ONE job (no
+        // shuffle stage)
+        val dvMap = spark.read.schema("file STRING, bits BINARY")
+          .parquet(dvDirs: _*)
+          .select(col("file"), coalesce(col("bits"), raise_error(concat(
+            lit("row-form deletion-vector sidecar (no bits column): "),
+            col("_metadata.file_path"),
+            lit("; this engine reads only bitmap sidecars")))).as("bits"))
+          .coalesce(1)
+          .groupBy("file").agg(DvUnion.agg(col("bits")))
+          .collect()
+          .map(r => UTF8String.fromString(r.getString(0)) ->
+            r.getAs[Array[Byte]](1)).toMap
+        val bcast = spark.sparkContext.broadcast(dvMap)
+        val filtered = rawRead(spark, root, dved, schemas, withRowId = true)
+          .where(!DvMapContains(col(DvFileCol), col(DvPosCol), bcast, dvMap.size))
         if (withRowId) filtered else filtered.drop(DvFileCol, DvPosCol)
       }).flatten
     parts.reduce(_.unionByName(_, allowMissingColumns = true))

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,4 +17,32 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Spark jobs started on this thread while `f` runs, counted by a
+    * listener. Listener events arrive asynchronously but in order, so
+    * once a fence job started after `f` has been seen, every job of
+    * `f` has been counted. */
+  def jobsStarted(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (group, fenceGroup) = ("spec-job-count", "spec-job-fence")
+    val counted = new AtomicInteger
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet()
+          case Some(`fenceGroup`) => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(fenceGroup, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, TimeUnit.SECONDS), "listener never saw the fence job")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -1,8 +1,5 @@
 package graft.analysis
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.{QueryUtil, SparkSpec}
@@ -62,34 +59,6 @@ class SmallInputPlanSpec extends SparkSpec {
     entryPoints(f).map { case (name, df) =>
       (name, df.queryExecution.executedPlan.toString, df.collect().toSeq)
     }
-
-  /** Spark jobs started on this thread while `f` runs, counted by a
-    * listener. Listener events arrive asynchronously but in order, so
-    * once a fence job started after `f` has been seen, every job of
-    * `f` has been counted. */
-  private def jobsStarted(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val (group, fenceGroup) = ("small-input-count", "small-input-fence")
-    val counted = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => counted.incrementAndGet()
-          case Some(`fenceGroup`) => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(fenceGroup, "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(60, TimeUnit.SECONDS), "listener never saw the fence job")
-      counted.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("tiny and large facts give identical rows; only the large plan shuffles") {
     withSnapshot { f =>

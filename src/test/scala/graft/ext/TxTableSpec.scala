@@ -766,28 +766,29 @@ abstract class TxTableBehaviors extends SparkSpec {
     }
   }
 
-  test("legacy (pre-kind) manifests parse as full snapshots and stay readable") {
-    // codec level: the r10 line shapes — kind-less header, bare
-    // entries, single sc/lo/hi stats — must parse losslessly
+  test("kind-less (pre-kind) manifests are refused by parse and by a read") {
+    // codec level: the pre-kind line shapes — kind-less header, bare
+    // entries, single sc/lo/hi stats — are no longer read
     val legacy =
       """{"version":3,"base":2,"op":"replace","n_files":2}
         |{"path":"data/v3-x/a.parquet","bucket":"p=0","sc":"event_id","lo":5,"hi":9}
         |{"path":"data/v3-x/b.parquet"}
         |""".stripMargin
-    val p = TxTable.ManifestJson.parse(legacy, "legacy-test")
-    assert(p.kind === "full" && p.version === 3L && p.base === 2L)
-    assert(p.adds.map(_.path) === Seq("data/v3-x/a.parquet", "data/v3-x/b.parquet"))
-    assert(p.adds.head.bucket.contains("p=0"))
-    assert(p.adds.head.stats === Map("event_id" -> (5L, 9L)))
-    assert(p.adds.head.bloom.isEmpty && p.adds.head.bytes === 0L &&
-      p.adds.head.rows === -1L)
-    assert(p.removes.isEmpty)
-    // end to end: a table whose v1 manifest is rewritten in the legacy
-    // format reads AND merges (the upgrade path an existing r10 table
-    // takes on first contact with the new engine)
-    inDir { dir =>
-      TxTable.commitReplace(spark, dir, snap(8), Some("pbucket"))
-      val m = TxTable.readManifest(spark, dir, 1L)
+    val e = intercept[IllegalArgumentException] {
+      TxTable.ManifestJson.parse(legacy, "legacy-test")
+    }
+    assert(e.getMessage.contains("kind-less"), e.getMessage)
+    // end to end: a table whose v1 manifest is in the pre-kind shape
+    // refuses the read. It is assembled on the filesystem (a committed
+    // table's data files plus a hand-written log), so every log store
+    // reads the hand-written manifest rather than its own record of v1.
+    inDir { base =>
+      val src = s"$base/src"
+      val dir = s"$base/legacy"
+      TxTable.commitReplace(spark, src, snap(8), Some("pbucket"))
+      val m = TxTable.readManifest(spark, src, 1L)
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(src, "data"), new java.io.File(dir, "data"))
       val sb = new StringBuilder
       sb.append(s"""{"version":1,"base":0,"op":"replace","n_files":${m.files.size}}""")
         .append('\n')
@@ -797,11 +798,10 @@ abstract class TxTableBehaviors extends SparkSpec {
         sb.append("}\n")
       }
       val mp = java.nio.file.Paths.get(dir, "_graft_log", f"${1L}%020d.json")
+      java.nio.file.Files.createDirectories(mp.getParent)
       java.nio.file.Files.write(mp, sb.toString.getBytes("UTF-8"))
-      assert(rows(TxTable.read(spark, dir)) === rows(snap(8)))
-      // merge on top of the legacy manifest
-      TxTable.mergeChangeSet(spark, dir, changes(), "event_id", "op", "pbucket")
-      assert(rows(TxTable.read(spark, dir)).exists(_._1 === 100L))
+      val r = intercept[IllegalArgumentException](TxTable.read(spark, dir))
+      assert(r.getMessage.contains("kind-less"), r.getMessage)
     }
   }
 
@@ -1692,6 +1692,24 @@ abstract class TxTableBehaviors extends SparkSpec {
     }
   }
 
+  test("building a read over 3 stacked DV commits runs exactly one job") {
+    inDir { dir =>
+      TxTable.commitReplace(spark, dir, snap(40), Some("pbucket"))
+      Seq(col("event_id") % 3 === 0, col("event_id") % 5 === 1,
+        col("event_id") % 7 === 2).foreach(p => TxTable.deleteWhereDv(spark, dir, p))
+      val m = TxTable.readManifest(spark, dir, TxTable.latestVersion(spark, dir).get)
+      assert(m.files.flatMap(_.dvs.map(_.dir)).distinct.size === 3,
+        "each DML commit must leave its own sidecar dir (no compaction)")
+      // the sidecar union collect is the only job: no schema-inference
+      // job per sidecar dir, no job for the data files' declared schemas
+      var visible: DataFrame = null
+      assert(jobsStarted { visible = TxTable.read(spark, dir) } === 1)
+      val expect = snap(40).where(!(col("event_id") % 3 === 0) &&
+        !(col("event_id") % 5 === 1) && !(col("event_id") % 7 === 2))
+      assert(rows(visible) === rows(expect))
+    }
+  }
+
   test("table root containing a space: DV tombstones attach; COW DML matches") {
     inDir { base =>
       // the scan's _metadata.file_path renders this root URL-ENCODED
@@ -1890,17 +1908,15 @@ abstract class TxTableBehaviors extends SparkSpec {
     }
   }
 
-  test("pre-bitmap (row-form) DV sidecars keep reading; bitmap DVs stack on top") {
+  test("row-form (pre-bitmap) DV sidecars are refused, never under-deleted") {
     inDir { dir =>
       TxTable.commitReplace(spark, dir, snap(30), Some("pbucket"))
       TxTable.deleteWhereDv(spark, dir, col("event_id") % 3 === 0)
-      val expect1 = snap(30).where(!(col("event_id") % 3 === 0))
       // rewrite the just-written sidecar into the PRE-BITMAP row form
-      // (one (file, pos) row per tombstone) — the exact layout the
-      // engine published before the bitmap-container upgrade, so a
-      // table carrying old sidecars must keep reading unchanged
-      val m = TxTable.readManifest(spark, dir,
-        TxTable.latestVersion(spark, dir).get)
+      // (one (file, pos) row per tombstone), the layout the engine
+      // published before the bitmap-container format
+      val v = TxTable.latestVersion(spark, dir).get
+      val m = TxTable.readManifest(spark, dir, v)
       val dvDirs = m.files.flatMap(_.dvs.map(_.dir)).distinct
       assert(dvDirs.size === 1)
       val dvPath = java.nio.file.Paths.get(dir, dvDirs.head)
@@ -1908,27 +1924,28 @@ abstract class TxTableBehaviors extends SparkSpec {
         .select("file", "bits").collect()
         .flatMap(r => DvBitmap.positions(r.getAs[Array[Byte]]("bits"))
           .map(p => (r.getString(0), p)))
+      assert(rowForm.nonEmpty)
       import spark.implicits._
       val tmpOut = java.nio.file.Paths.get(dir, "legacy_tmp")
       rowForm.toSeq.toDF("file", "pos").write.parquet(tmpOut.toString)
-      def rmTree(p: java.nio.file.Path): Unit =
-        java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => java.nio.file.Files.delete(q))
-      rmTree(dvPath)
+      org.apache.commons.io.FileUtils.deleteDirectory(dvPath.toFile)
       java.nio.file.Files.move(tmpOut, dvPath)
-      // the legacy sidecar still subtracts its tombstones
-      assert(rows(TxTable.read(spark, dir)) === rows(expect1))
-      assert(TxTable.metaCount(spark, dir) === expect1.count())
-      // a NEW bitmap DV stacks on the legacy one (the predicate scan
-      // itself reads THROUGH the row-form sidecar)
-      TxTable.deleteWhereDv(spark, dir, col("event_id") % 2 === 1)
-      val expect2 = expect1.where(!(col("event_id") % 2 === 1))
-      assert(rows(TxTable.read(spark, dir)) === rows(expect2))
-      assert(TxTable.metaCount(spark, dir) === expect2.count())
-      // compact reconciles the MIXED stack physically
-      TxTable.compact(spark, dir, "pbucket")
-      assert(rows(TxTable.read(spark, dir)) === rows(expect2))
+      // the read fails naming the sidecar file: it never returns the
+      // tombstoned rows as if nothing were deleted
+      def refused(what: String)(f: => Any): Unit = {
+        val e = intercept[Exception](f)
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+        assert(msgs.contains("row-form deletion-vector sidecar") &&
+          msgs.contains(dvDirs.head), s"$what: $msgs")
+      }
+      refused("read")(TxTable.read(spark, dir).collect())
+      // nor does a writer that reads through the sidecar publish a
+      // version built on the under-deleted rows
+      refused("deleteWhereDv")(
+        TxTable.deleteWhereDv(spark, dir, col("event_id") % 2 === 1))
+      refused("compact")(TxTable.compact(spark, dir, "pbucket"))
+      assert(TxTable.latestVersion(spark, dir).get === v)
     }
   }
 

@@ -45,11 +45,9 @@ object QueryUtil {
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
   }
 
-  /** Plan a TINY input as one stage — the mirror of [[fanOutIfNarrow]].
-    * When the frame's optimizer size estimate
+  /** Whether a frame is TINY: its optimizer size estimate
     * (`optimizedPlan.stats.sizeInBytes`) is at most the session's
-    * `spark.sql.files.openCostInBytes`, return `df.coalesce(1)`;
-    * otherwise return `df` unchanged.
+    * `spark.sql.files.openCostInBytes`.
     *
     * Threshold: Spark defines the open cost as the bytes one task
     * scans in the time it takes to open a file, so an input that small
@@ -58,16 +56,21 @@ object QueryUtil {
     * figure Spark already uses to price a task's fixed cost, so the
     * choice needs no switch of its own.
     *
+    * Cost: one optimizer pass over the input plan; no Spark job. */
+  def isTiny(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      df.sparkSession.sessionState.conf.filesOpenCostInBytes
+
+  /** Plan a TINY input ([[isTiny]]) as one stage — the mirror of
+    * [[fanOutIfNarrow]]: return `df.coalesce(1)` when it is tiny,
+    * otherwise `df` unchanged.
+    *
     * Shape: `CoalesceExec(1)` reports `SinglePartition`, which satisfies
     * any clustered or ordered distribution above it, so an aggregate or
     * global sort plans with no `Exchange`. Filters, column pruning and
-    * partition pruning still push below the coalesce into the scan.
-    *
-    * Cost: one optimizer pass over the input plan; no Spark job. */
-  def singleStageIfTiny(df: DataFrame): DataFrame = {
-    val openCost = df.sparkSession.sessionState.conf.filesOpenCostInBytes
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= openCost) df.coalesce(1) else df
-  }
+    * partition pruning still push below the coalesce into the scan. */
+  def singleStageIfTiny(df: DataFrame): DataFrame =
+    if (isTiny(df)) df.coalesce(1) else df
 
   /** Run `f` against a fresh temp directory, deleting the tree on ANY
     * exit path. */

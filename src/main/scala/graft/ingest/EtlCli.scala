@@ -3,15 +3,20 @@ package graft.ingest
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.analysis.CoverageQueries
-import graft.model.CampaignWindow
+import graft.model.{CampaignWindow, Schemas}
 
 /** The reference's CLI entry point (`python etl_pipeline.py [--country
   * --antigen --start-year --pre-years --post-years]`,
-  * `/root/reference/etl_pipeline.py:183-195`) as a spark-submit main:
-  * ETL always runs (staged wide CSV → tidy fact published as sorted
-  * parquet, replacing the SQLite db); the before/after analysis runs
-  * when a country+antigen selection is given, emitting the series CSV
-  * artifact and the stats summary the reference prints/plots.
+  * `/root/reference/etl_pipeline.py:183-195`) as a spark-submit main.
+  * ETL always runs: the staged wide CSV is published under `--out` as
+  * `owid_raw/` (the raw frame) and `immunization/` (the tidy fact,
+  * sorted parquet, replacing the SQLite db). With a country+antigen
+  * selection the before/after analysis runs too: it prints the stats
+  * summary and writes three driver-side artifacts beside the tables,
+  * `<stem>` being `<country>_<antigen>` with [[WideCsvIngest.sanitizeName]]:
+  *   - `coverage_<stem>.csv`: the series, header `year,coverage_pct`;
+  *   - `plot_<stem>.png`: the coverage plot;
+  *   - `report_<stem>.pdf`: the 2-page policy report.
   *
   * Usage:
   * {{{
@@ -34,16 +39,23 @@ object EtlCli {
       url: Option[String] = None)
 
   def parse(args: List[String], c: Config = Config()): Config = args match {
-    case "--source" :: v :: rest => parse(rest, c.copy(source = v))
-    case "--url" :: v :: rest => parse(rest, c.copy(url = Some(v)))
-    case "--out" :: v :: rest => parse(rest, c.copy(out = v))
-    case "--country" :: v :: rest => parse(rest, c.copy(country = Some(v)))
-    case "--antigen" :: v :: rest => parse(rest, c.copy(antigen = Some(v)))
-    case "--start-year" :: v :: rest => parse(rest, c.copy(startYear = v.toInt))
-    case "--pre-years" :: v :: rest => parse(rest, c.copy(preYears = v.toInt))
-    case "--post-years" :: v :: rest => parse(rest, c.copy(postYears = v.toInt))
     case Nil => c
-    case other => throw new IllegalArgumentException(s"unknown argument: ${other.head}")
+    case flag :: rest =>
+      val set: String => Config = flag match {
+        case "--source" => v => c.copy(source = v)
+        case "--url" => v => c.copy(url = Some(v))
+        case "--out" => v => c.copy(out = v)
+        case "--country" => v => c.copy(country = Some(v))
+        case "--antigen" => v => c.copy(antigen = Some(v))
+        case "--start-year" => v => c.copy(startYear = v.toInt)
+        case "--pre-years" => v => c.copy(preYears = v.toInt)
+        case "--post-years" => v => c.copy(postYears = v.toInt)
+        case _ => throw new IllegalArgumentException(s"unknown argument: $flag")
+      }
+      rest match {
+        case v :: tail => parse(tail, set(v))
+        case Nil => throw new IllegalArgumentException(s"missing value for $flag")
+      }
   }
 
   def main(args: Array[String]): Unit = {
@@ -71,22 +83,21 @@ object EtlCli {
     // E1 steps 2-5: validate, transform, load.
     val raw = WideCsvIngest.readWideCsv(spark, source)
     raw.write.mode("overwrite").parquet(s"${c.out}/owid_raw")
-    val fact = WideCsvIngest.tidy(raw)
-    WideCsvIngest.writeFact(fact, s"${c.out}/immunization")
+    WideCsvIngest.writeFact(raw, s"${c.out}/immunization")
     println(s"[etl] published ${c.out}/immunization")
 
     // E1 steps 6-9 when a selection is given.
     for (country <- c.country; antigen <- c.antigen) yield {
-      val published = spark.read.parquet(s"${c.out}/immunization")
-      val series = CoverageQueries.seriesOf(published, country, antigen)
-      val pts = series.collect()
+      // the schema is known: no footer-reading inference job
+      val published = spark.read.schema(Schemas.coverage).parquet(s"${c.out}/immunization")
+      val pts = CoverageQueries.seriesOf(published, country, antigen).collect()
         .map(r => (r.getAs[Number](0).intValue, r.getAs[Number](1).doubleValue)).toSeq
       if (pts.isEmpty)
         throw new IllegalArgumentException(
           s"no data for country=$country antigen=$antigen")
       val stem = s"${WideCsvIngest.sanitizeName(country)}_" +
         WideCsvIngest.sanitizeName(antigen)
-      WideCsvIngest.writeCsv(series, s"${c.out}/coverage_$stem")
+      writeSeriesCsv(pts, s"${c.out}/coverage_$stem.csv")
       val w = CampaignWindow(c.startYear, c.preYears, c.postYears)
       val row = CoverageQueries.beforeAfterFull(published, w)
         .filter(col("country") === country && col("antigen") === antigen)
@@ -107,8 +118,18 @@ object EtlCli {
         c.startYear, c.preYears, c.postYears,
         graft.report.PdfReport.Stats(opt("mean_before"), opt("mean_after"), opt("p_value")),
         s"${c.out}/report_$stem.pdf")
-      println(s"[artifacts] ${c.out}/plot_$stem.png ${c.out}/report_$stem.pdf")
+      println(s"[artifacts] ${c.out}/coverage_$stem.csv ${c.out}/plot_$stem.png " +
+        s"${c.out}/report_$stem.pdf")
       row
     }
   }
+
+  /** The series artifact, `coverage_<country>_<antigen>.csv`
+    * (`etl_pipeline.py:152-154`), written on the driver from the points
+    * already collected for the plot: header `year,coverage_pct`, then
+    * one `year,value` line per point (`Double.toString`, `\n` line ends,
+    * the text Spark's CSV writer gives the same rows). */
+  private def writeSeriesCsv(pts: Seq[(Int, Double)], path: String): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      pts.map { case (year, pct) => s"$year,$pct\n" }.mkString("year,coverage_pct\n", "", ""))
 }

@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QueryUtil.isTiny
 
 /** Wide-CSV → tidy fact-table ETL, the reference's `run_etl`
   * (`/root/reference/etl_pipeline.py:49-100`) re-expressed as a lazy
@@ -15,15 +16,24 @@ import org.apache.spark.sql.functions._
   * with composite PK (`etl_pipeline.py:84-95`).
   *
   * Scale notes: the unpivot multiplies rows ×N(antigens) but is a
-  * narrow (no-shuffle) transform; dedup is the only shuffle and keys on
-  * the full PK so it is maximally parallel; the write repartitions by
-  * `country` and sorts within partitions by (country, antigen, year) so
-  * parquet row-group min/max stats serve point lookups the way the
-  * reference's PK index does (SURVEY §4.2).
+  * narrow (no-shuffle) transform. [[writeFact]] lays the tidy rows out
+  * before the dedup: a tiny raw CSV ([[graft.QueryUtil.isTiny]]) is
+  * coalesced to one partition, so unpivot, dedup, sort and write run as
+  * ONE stage with no `Exchange`; anything larger is hash-repartitioned
+  * on `country`, which already clusters every (country, antigen, year)
+  * key, so the dedup aggregate adds no second shuffle. That one shuffle
+  * also gives the published layout: hash-distributed on country, each
+  * file sorted within by (country, antigen, year) so parquet row-group
+  * min/max stats serve point lookups the way the reference's PK index
+  * does (SURVEY §4.2).
   */
 object WideCsvIngest {
 
   val CoveragePrefix = "coverage__"
+
+  /** The plausible year range, inclusive on both sides (`etl_pipeline.py:75`). */
+  private val MinYear = 1980
+  private val MaxYear = 2100
 
   final case class ResolvedColumns(entity: String, year: String, coverage: Seq[String])
 
@@ -52,11 +62,14 @@ object WideCsvIngest {
   def readWideCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
-  /** Wide → tidy: unpivot, strip the `coverage__` prefix into the
-    * antigen key, coerce-or-null the numeric columns, drop missing,
-    * filter to the plausible year range (inclusive bounds,
-    * `etl_pipeline.py:75`), dedup on the composite PK. */
-  def tidy(raw: DataFrame, yearLo: Int = 1980, yearHi: Int = 2100): DataFrame = {
+  /** Wide → tidy: [[tidyRows]] deduplicated on the composite PK. */
+  def tidy(raw: DataFrame, yearLo: Int = MinYear, yearHi: Int = MaxYear): DataFrame =
+    dedup(tidyRows(raw, yearLo, yearHi))
+
+  /** Unpivot, strip the `coverage__` prefix into the antigen key,
+    * coerce-or-null the numeric columns, drop missing, filter to
+    * [yearLo, yearHi]. */
+  private def tidyRows(raw: DataFrame, yearLo: Int, yearHi: Int): DataFrame = {
     val cols = resolveColumns(raw)
     tidyColumns(
       raw.unpivot(
@@ -65,10 +78,12 @@ object WideCsvIngest {
         "antigen", "coverage_pct"),
       yearLo, yearHi)
       .select("country", "antigen", "year", "coverage_pct")
-      // SQLite PK would reject duplicate (country, antigen, year) keys;
-      // Spark enforces nothing, so make the convention explicit (S5).
-      .dropDuplicates("country", "antigen", "year")
   }
+
+  /** SQLite's PK would reject duplicate (country, antigen, year) keys;
+    * Spark enforces nothing, so make the convention explicit (S5). */
+  private def dedup(rows: DataFrame): DataFrame =
+    rows.dropDuplicates("country", "antigen", "year")
 
   /** The shared unpivoted→tidy column pipeline — ONE definition for the
     * batch ([[tidy]]) and streaming ([[graft.streaming.IncrementalIngest]])
@@ -88,22 +103,18 @@ object WideCsvIngest {
       .filter(col("year").between(yearLo, yearHi))
       .withColumn("antigen", regexp_replace(col("antigen"), "(?i)^" + CoveragePrefix, ""))
 
-  /** Publish the tidy fact table as Parquet laid out for point lookups:
-    * hash-distributed on country, row-groups sorted by the full PK. */
-  def writeFact(fact: DataFrame, path: String, numPartitions: Int = 0): Unit = {
-    val repartitioned =
-      if (numPartitions > 0) fact.repartition(numPartitions, col("country"))
-      else fact.repartition(col("country"))
-    repartitioned
+  /** Publish the raw wide frame as the tidy fact table: [[tidy]]'s
+    * rows laid out for point lookups (see "Scale notes"), deduplicated
+    * within that layout, sorted by the full PK within each file. The
+    * size rule reads the raw frame, not the tidy rows: the unpivot
+    * multiplies the estimate by the number of coverage columns. */
+  def writeFact(raw: DataFrame, path: String): Unit = {
+    val rows = tidyRows(raw, MinYear, MaxYear)
+    val laidOut = if (isTiny(raw)) rows.coalesce(1) else rows.repartition(col("country"))
+    dedup(laidOut)
       .sortWithinPartitions("country", "antigen", "year")
       .write.mode("overwrite").parquet(path)
   }
-
-  /** Single-file CSV artifact sink (`etl_pipeline.py:152-154`). coalesce(1)
-    * is deliberate: these exports are per-(country,antigen) series or
-    * small stat frames, never the raw fact table. */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
   /** Filename sanitization for artifact names (`etl_pipeline.py:152`):
     * spaces → underscores, slashes → dashes. Driver-side scalar. */

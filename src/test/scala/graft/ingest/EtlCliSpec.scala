@@ -11,6 +11,9 @@ class EtlCliSpec extends SparkSpec {
       "--start-year", "2001", "--pre-years", "4", "--post-years", "3"))
     assert(c == EtlCli.Config("s.csv", "/tmp/o", Some("India"), Some("dtp3"), 2001, 4, 3))
     intercept[IllegalArgumentException](EtlCli.parse(List("--nope")))
+    val missing = intercept[IllegalArgumentException](
+      EtlCli.parse(List("--source", "s.csv", "--country")))
+    assert(missing.getMessage == "missing value for --country")
   }
 
   test("etl-only run publishes raw + fact; analysis run adds artifact + stats") {
@@ -30,8 +33,18 @@ class EtlCliSpec extends SparkSpec {
     val row = EtlCli.run(spark, EtlCli.Config(csv.toString, out,
       Some("S"), Some("x"), startYear = 2000, preYears = 4, postYears = 3)).get
     assert(row.getAs[String]("verdict") == "significant_increase")
-    assert(new java.io.File(s"$out/coverage_S_x").listFiles()
-      .exists(_.getName.endsWith(".csv")))
+    // the series artifact is one file: the header plus the 8 points
+    assert(Files.readString(dir.resolve("warehouse/coverage_S_x.csv")) ==
+      """year,coverage_pct
+        |1996,10.0
+        |1997,11.0
+        |1998,12.0
+        |1999,13.0
+        |2000,14.0
+        |2001,15.0
+        |2002,16.0
+        |2003,17.0
+        |""".stripMargin)
     // S7 presentation artifacts: the reference's plot + 2-page report
     assert(Files.exists(dir.resolve("warehouse/plot_S_x.png")))
     val pdf = Files.readAllBytes(dir.resolve("warehouse/report_S_x.pdf"))

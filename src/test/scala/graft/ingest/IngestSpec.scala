@@ -10,25 +10,9 @@ import java.nio.file.Files
   * year bounds, NaN drops, PK dedup. */
 class IngestSpec extends SparkSpec {
 
-  private def writeCsv(content: String): String = {
-    val dir = Files.createTempDirectory("graft_csv")
-    val f = dir.resolve("wide.csv")
-    Files.writeString(f, content)
-    f.toString
-  }
+  import IngestSpec.writeCsv
 
-  // FIXTURES.md §A1 replica: mixed-case headers, extra column, out-of-
-  // range years, NaN holes, duplicate key.
-  private val golden = writeCsv(
-    """Entity,Code,Year,coverage__dtp3,coverage__mcv1,notes
-      |India,IN,1999,85.5,,x
-      |India,IN,2000,86.0,70.0,x
-      |India,IN,2000,86.0,70.0,dup
-      |Ghana,GH,1979,50.0,50.0,too-early
-      |Ghana,GH,2101,60.0,60.0,too-late
-      |Ghana,GH,1995,,,all-nan
-      |World,,2000,90.0,80.0,x
-      |""".stripMargin)
+  private val golden = writeCsv(IngestSpec.GoldenWideCsv)
 
   test("tidy: unpivot + clean + year filter + dedup") {
     val raw = WideCsvIngest.readWideCsv(spark, golden)
@@ -91,8 +75,7 @@ class IngestSpec extends SparkSpec {
 
   test("write/read round trip preserves the fact table") {
     val out = Files.createTempDirectory("graft_fact").toString + "/fact"
-    val tidy = WideCsvIngest.tidy(WideCsvIngest.readWideCsv(spark, golden))
-    WideCsvIngest.writeFact(tidy, out, numPartitions = 2)
+    WideCsvIngest.writeFact(WideCsvIngest.readWideCsv(spark, golden), out)
     val back = spark.read.parquet(out)
     assert(back.count() == 5)
     assert(back.columns.toSeq == Seq("country", "antigen", "year", "coverage_pct"))
@@ -104,14 +87,7 @@ class IngestSpec extends SparkSpec {
     assert(w.afterLo == 2000 && w.afterHi == 2003)
   }
 
-  test("CSV sink writes a single headered file; names sanitize") {
-    val out = Files.createTempDirectory("graft_csv_out").toString + "/series"
-    val tidy = WideCsvIngest.tidy(WideCsvIngest.readWideCsv(spark, golden))
-    WideCsvIngest.writeCsv(tidy.select("year", "coverage_pct"), out)
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".csv"))
-    assert(files.length == 1, "coalesce(1) must yield exactly one csv part")
-    val lines = Files.readAllLines(files.head.toPath)
-    assert(lines.get(0) == "year,coverage_pct" && lines.size() == 6)
+  test("artifact names sanitize: spaces and slashes") {
     assert(WideCsvIngest.sanitizeName("Congo / Kinshasa x") == "Congo_-_Kinshasa_x")
   }
 
@@ -135,5 +111,28 @@ class IngestSpec extends SparkSpec {
     assert(math.abs(r.getAs[Double]("t_stat") - -43.81780460041329) < 1e-9)
     assert(r.getAs[Double]("p_value") < 1e-6)
     assert(r.getAs[String]("verdict") == "significant_increase")
+  }
+}
+
+object IngestSpec {
+
+  /** FIXTURES.md §A1 replica: mixed-case headers, extra column, out-of-
+    * range years, NaN holes, an exact-duplicate row. */
+  val GoldenWideCsv: String =
+    """Entity,Code,Year,coverage__dtp3,coverage__mcv1,notes
+      |India,IN,1999,85.5,,x
+      |India,IN,2000,86.0,70.0,x
+      |India,IN,2000,86.0,70.0,dup
+      |Ghana,GH,1979,50.0,50.0,too-early
+      |Ghana,GH,2101,60.0,60.0,too-late
+      |Ghana,GH,1995,,,all-nan
+      |World,,2000,90.0,80.0,x
+      |""".stripMargin
+
+  /** `content` as `wide.csv` in a fresh temp directory; returns its path. */
+  def writeCsv(content: String): String = {
+    val f = Files.createTempDirectory("graft_csv").resolve("wide.csv")
+    Files.writeString(f, content)
+    f.toString
   }
 }

@@ -1,6 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+
+  /** The bench population, shared by every measurement main: every
+    * oracle-registered query PLUS the bench-only production hash lanes
+    * (BenchProdLanes — murmur3/xxhash64 faces of the md5 oracle
+    * mirrors; spec-tied, not oracle-checked, named `*_prod`) and the
+    * probe lanes (BenchProbes). */
+  lazy val pool: Map[String, (SparkSession, String) => DataFrame] =
+    SparkEntry.queries ++ BenchProdLanes.queries.toMap ++ BenchProbes.queries.toMap
 
   /** Median with the even case averaged (not the upper-middle element:
     * when one of two repeat runs fails, upper-middle of the 2 surviving
@@ -187,14 +195,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pin UTC: events.ts is stored NTZ and canonicalized via a cast
-      // whose instant depends on the session zone (EventsFact.canonicalTs)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftExtensions.builder(GraftExtensions.localSlots)
       // serial-run safety net behind the explicit per-query hygiene:
       // ContextCleaner's own periodic GC (default 30 min) would never
       // fire inside one bench run
@@ -276,7 +277,6 @@ object Bench {
     // (q37 measured 10x its steady-state cost on a cold JVM). A
     // minimal one-column stateful stream, NOT any bench query.
     locally {
-      import org.apache.spark.sql.DataFrame
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
       val wq = graft.streaming.StreamTuning.withStreamPartitions(spark, 4) {
         spark.readStream
@@ -315,16 +315,10 @@ object Bench {
     }
     // local-iteration subset: SPARK_GRAFT_ONLY=q87,q90 times only those
     // queries (comma-separated name prefixes). Unset for the driver run.
-    // The bench population = every oracle-registered query PLUS the
-    // bench-only production hash lanes (BenchProdLanes — murmur3/
-    // xxhash64 faces of the md5 oracle mirrors; spec-tied, not
-    // oracle-checked, named `*_prod`).
-    val allQueries = SparkEntry.queries ++ BenchProdLanes.queries.toMap ++
-      BenchProbes.queries.toMap
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).filter(_.nonEmpty))
     val selected = only match {
-      case Some(prefixes) => allQueries.filter { case (n, _) => prefixes.exists(n.startsWith) }
-      case None => allQueries
+      case Some(prefixes) => pool.filter { case (n, _) => prefixes.exists(n.startsWith) }
+      case None => pool
     }
     // STREAMING-LANE ISOLATION: the micro-batch lanes (3–6 s each of
     // trigger/checkpoint overhead) dominate both the total and its

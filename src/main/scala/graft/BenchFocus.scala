@@ -1,35 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Focused micro-bench: run a subset of [[SparkEntry.queries]] several
   * times in one JVM to get steady-state numbers without full-suite
   * noise. Usage:
   *   sbt "runMain graft.BenchFocus q57_decontamination q79_bloom_decontamination"
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default
-  * 32), SPARK_GRAFT_REPS (default 3). Prints per-rep seconds so
+  * the core count), SPARK_GRAFT_REPS (default 3). Prints per-rep seconds so
   * warm-up effects are visible instead of averaged away.
   */
 object BenchFocus {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same UTC pin as Bench: events.ts is NTZ on disk and the
-      // canonical instant depends on the session zone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(GraftExtensions.localSlots).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
-    val pool = SparkEntry.queries ++ BenchProdLanes.queries.toMap ++
-      BenchProbes.queries.toMap
-    val names = if (args.nonEmpty) args.toSeq else pool.keys.toSeq.sorted
+    val names = if (args.nonEmpty) args.toSeq else Bench.pool.keys.toSeq.sorted
     for (name <- names) {
-      val fn = pool.getOrElse(name,
+      val fn = Bench.pool.getOrElse(name,
         sys.error(s"unknown query '$name'"))
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()

@@ -374,7 +374,6 @@ object GovernanceQueries {
     // not a parallel reader. The oracle replays the three states
     // relationally.
     Q("q180_tx_sql_tvf", GovernanceOracles.sqlTvf) { (s, dir) =>
-      graft.GraftExtensions.install(s)
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_tvf") { tmp =>
         val table = s"$tmp/table"
@@ -411,7 +410,6 @@ object GovernanceQueries {
     // relationally (n_at_ts ≡ the v1 expression by the resolution
     // contract, which is exactly what the requires prove).
     Q("q181_tx_timestamp_travel", GovernanceOracles.timestampTravel) { (s, dir) =>
-      graft.GraftExtensions.install(s)
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_tt") { tmp =>
         val table = s"$tmp/table"

@@ -13,11 +13,11 @@ import graft.stats.{TCdf, TPpf}
   * spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * (or `SparkSession.builder.withExtensions(new GraftExtensions)`), or
-  * on an already-running session with `GraftExtensions.install(spark)`.
-  * Either way the engine's native expressions become SQL functions —
-  * the SURVEY §7.3 "(c)" integration path, so a SQL-only user of the
-  * library needs no Scala imports:
+  * (or `SparkSession.builder.withExtensions(new GraftExtensions)`).
+  * Every engine session is built with it, through `GraftExtensions.builder`.
+  * The engine's native expressions become SQL functions — the SURVEY
+  * §7.3 "(c)" integration path, so a SQL-only user of the library needs
+  * no Scala imports:
   *
   *   - `simhash64(tokens)`    — 64-bit SimHash of a string array
   *     ([[graft.ext.SimHash64]])
@@ -61,8 +61,7 @@ object GraftExtensions {
 
   import graft.stats.TDistExpression.toDouble
 
-  /** The SQL function surface, shared by the extensions path (new
-    * session) and [[install]] (existing session). */
+  /** The SQL function surface. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("simhash64"),
       info("simhash64", "simhash64(tokens) - 64-bit SimHash fingerprint of an array<string>"),
@@ -200,14 +199,25 @@ object GraftExtensions {
       }),
   )
 
-  /** Register the SQL functions on an existing session (notebooks,
-    * shells — anywhere the builder config is already out of reach). */
-  def install(spark: SparkSession): Unit = {
-    functions.foreach { case (ident, inf, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, inf, builder)
-    }
-    tableFunctions.foreach { case (ident, inf, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(ident, inf, builder)
-    }
-  }
+  /** The one session builder every engine main and spec goes through:
+    * it loads these extensions, pins the session zone to UTC (events.ts
+    * is stored NTZ and canonicalized through a cast whose instant
+    * depends on the zone, [[graft.analysis.EventsFact.canonicalTs]])
+    * and turns the UI off. The master is left to spark-submit. */
+  def builder(): SparkSession.Builder =
+    SparkSession.builder()
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+
+  /** `builder()` for a local session: `slots` task slots and as many
+    * shuffle partitions. */
+  def builder(slots: Int): SparkSession.Builder =
+    builder().master(s"local[$slots]")
+      .config("spark.sql.shuffle.partitions", slots.toLong)
+
+  /** Task slots of the local mains: `SPARK_GRAFT_CPUS`, else the
+    * machine's core count. */
+  def localSlots: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
 }

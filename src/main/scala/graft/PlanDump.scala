@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Optimization-round instrumentation (guide §1): run named queries from
@@ -9,21 +8,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * WHERE its seconds go — the final frame's plan alone can't. Usage:
   *   sbt "runMain graft.PlanDump <tag> q133_mad q108_pagerank"
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default
-  * 32). Each query runs once cold-ish (after the shared lineitem warm
+  * the core count). Each query runs once cold-ish (after the shared lineitem warm
   * probe), then once more timed — the second run's jobs are reported so
   * one-time session costs don't pollute the attribution.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = args.headOption.getOrElse(sys.error("usage: PlanDump <tag> <query>..."))
     val names = args.drop(1).toSeq
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftExtensions.builder(GraftExtensions.localSlots)
     // diagnostic-only conf overrides: SPARK_GRAFT_CONF="k=v;k=v"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
@@ -52,12 +46,10 @@ object PlanDump {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = ()
     })
 
-    val pool = SparkEntry.queries ++ BenchProdLanes.queries.toMap ++
-      BenchProbes.queries.toMap
     val outDir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(outDir)
     for (name <- names) {
-      val fn = pool.getOrElse(name, sys.error(s"unknown query '$name'"))
+      val fn = Bench.pool.getOrElse(name, sys.error(s"unknown query '$name'"))
       // pass 1: plan capture (also warms codegen/caches for this lane)
       val df = fn(spark, sfDir)
       val plan = df.queryExecution.explainString(

@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local stand-in for the driver's t1 smoke: runs SparkEntry.entry on
   * sf0.001 and asserts rows > 0, printing the result head + plan. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(GraftExtensions.localSlots).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

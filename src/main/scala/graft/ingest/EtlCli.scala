@@ -64,10 +64,7 @@ object EtlCli {
       "--source or --url, and --out, are required")
     require(c.source.isEmpty || c.url.isEmpty,
       "--source and --url are mutually exclusive (a fetch would overwrite the pre-staged file)")
-    val spark = SparkSession.builder()
-      .appName("graft-etl")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftExtensions.builder().appName("graft-etl").getOrCreate()
     run(spark, c)
   }
 

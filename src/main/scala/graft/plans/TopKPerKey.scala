@@ -24,9 +24,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *
   * The node arrives resolved (attributes are taken from the child's
   * analyzed output), so no analyzer rule is needed; the strategy is
-  * registered per-session via `spark.experimental.extraStrategies`
-  * (done lazily by [[TopKPerKey.topKPerKey]]) or globally through
-  * `graft.GraftExtensions`.
+  * injected by `graft.GraftExtensions`, which every engine session
+  * loads, so [[TopKPerKey.topKPerKey]] plans only on such a session.
   */
 case class TopKPerKeyNode(
     keys: Seq[Attribute],
@@ -166,9 +165,6 @@ object TopKPerKey {
       tiebreakCols: Seq[String] = Nil): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k (k=0 would NPE on the empty heap's peek)")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
     val child = df.queryExecution.analyzed
     def attr(name: String): Attribute = child.output.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(

@@ -75,7 +75,7 @@ object TopKWindowRewrite extends Rule[LogicalPlan] {
     * removed at runtime), so it stays INERT unless this session conf
     * enables it — a silent always-on rewrite could flip `row_number`
     * tie selections of third-party queries between extension and
-    * non-extension sessions. [[install]]/[[scoped]] flip the flag. */
+    * non-extension sessions. [[scoped]] flips the flag. */
   final val EnabledKey = "spark.graft.topkRewrite.enabled"
 
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -93,32 +93,15 @@ object TopKWindowRewrite extends Rule[LogicalPlan] {
         Project(projectList, TopKPerKeyNode(keys, order, k, inner))
     }
 
-  /** Idempotently register the rule + the planner strategy on a live
-    * session (the `spark.experimental` hooks; new sessions get both
-    * through [[graft.GraftExtensions]]). */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(TopKWindowRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKWindowRewrite
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    spark.conf.set(EnabledKey, "true")
-  }
-
-  /** Disable the rule again via [[EnabledKey]] — the registration
-    * itself is inert while disabled, and an extensions-injected copy
-    * could not be deregistered anyway. The q144 lane installs SCOPED
-    * around a forced materialization: a rule left enabled would
-    * rewrite OTHER queries' window plans as a side effect of having
-    * run q144 first — correctness-neutral, but plan snapshots must
-    * not depend on query execution order. */
-  def uninstall(spark: SparkSession): Unit = synchronized {
-    spark.conf.set(EnabledKey, "false")
-  }
-
-  /** install → run `body` (which must FORCE optimization/execution —
-    * laziness deferred past the uninstall sees no rule) → uninstall.
+  /** Enable the rule via [[EnabledKey]] → run `body` (which must FORCE
+    * optimization/execution — laziness deferred past the scope sees no
+    * rewrite) → disable it again. The q144 lane runs SCOPED around a
+    * forced materialization: a rule left enabled would rewrite OTHER
+    * queries' window plans as a side effect of having run q144 first —
+    * correctness-neutral, but plan snapshots must not depend on query
+    * execution order. The session must carry [[graft.GraftExtensions]]
+    * (every session from `GraftExtensions.builder` does); elsewhere the
+    * flag has no rule to enable.
     *
     * Concurrency contract: [[EnabledKey]] is SESSION-global, so two
     * threads calling `scoped` on the SAME SparkSession can disable the
@@ -128,7 +111,7 @@ object TopKWindowRewrite extends Rule[LogicalPlan] {
     * body on `spark.newSession()` (own conf, shared catalog/state),
     * where the flag flip is invisible to every other session. */
   def scoped[T](spark: SparkSession)(body: => T): T = {
-    install(spark)
-    try body finally uninstall(spark)
+    spark.conf.set(EnabledKey, "true")
+    try body finally spark.conf.set(EnabledKey, "false")
   }
 }

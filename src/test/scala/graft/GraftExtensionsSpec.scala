@@ -1,28 +1,35 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+/** The library as a SQL-surfaced Spark extension: the shared spec
+  * session, like every engine session, is built by
+  * GraftExtensions.builder with spark.sql.extensions=graft.GraftExtensions,
+  * so plain SQL calls the native expressions with no Scala imports and
+  * no per-session registration. */
+class GraftExtensionsSpec extends SparkSpec {
 
-/** The library as a SQL-surfaced Spark extension: a session configured
-  * with spark.sql.extensions=graft.GraftExtensions (or retro-fitted via
-  * GraftExtensions.install) can call the native expressions from plain
-  * SQL with no Scala imports. The spec goes through install() because
-  * the shared-JVM test harness may already hold a session, which the
-  * builder config cannot amend; both paths register the same
-  * GraftExtensions.functions list. */
-class GraftExtensionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("GraftExtensionsSpec")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftExtensions.install(s)
-    s
+  test("one registration path: the extensions alone plan and resolve everything") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val df = (1 to 40).map(i => (s"k${i % 3}", i.toLong)).toDF("k", "v")
+    val viaOperator = graft.plans.TopKPerKey.topKPerKey(df, Seq("k"), "v",
+      descending = true, k = 2)
+    assert(viaOperator.count() == 6L)
+    graft.plans.TopKWindowRewrite.scoped(spark) {
+      val ranked = df.withColumn("rn",
+        row_number().over(Window.partitionBy("k").orderBy(desc("v"))))
+        .where(col("rn") <= 2).drop("rn")
+      assert(ranked.queryExecution.executedPlan.toString.contains("TopKPerKey"))
+    }
+    // neither path patched the session's experimental hooks
+    val hooks = spark.experimental
+    assert(hooks.extraStrategies.isEmpty && hooks.extraOptimizations.isEmpty)
+    // ... and the SQL surfaces resolve with no registration call
+    assert(!spark.sql("SELECT simhash64(array('a'))").head().isNullAt(0))
+    graft.QueryUtil.inTempDir("graft_ext_spec") { tmp =>
+      graft.ext.TxTable.commitReplace(spark, s"$tmp/t", df, None)
+      assert(spark.sql(s"SELECT count(*) FROM tx_table('$tmp/t')").head().getLong(0) == 40L)
+    }
   }
 
   test("simhash64 is callable from SQL and matches the column API") {

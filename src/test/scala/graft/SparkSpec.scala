@@ -6,15 +6,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session per suite (lazy; local[4], UTC, ANSI default). */
+/** Shared session per suite (lazy; the engine's session from
+  * `GraftExtensions.builder`, ANSI default). Fixed at 4 slots: the
+  * plan goldens spell `hashpartitioning(…, 4)`. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftExtensions.builder(4).appName(getClass.getSimpleName).getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 

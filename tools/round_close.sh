@@ -20,7 +20,7 @@ SF001=${SF001:-/root/testdata/sf0.01}
 SF01=${SF01:-/root/testdata/sf0.1}
 SF1DIR=${SF1DIR:-/tmp/graft_sf1}
 OUT=${OUT:-/tmp/graft_roundclose}
-CPUS=${SPARK_GRAFT_CPUS:-32}
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
 rm -rf "$OUT"; mkdir -p "$OUT"
 summary() { echo "$@" | tee -a "$OUT/summary.txt"; }
 

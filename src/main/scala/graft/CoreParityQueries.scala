@@ -24,6 +24,42 @@ object CoreParityQueries {
   private def exactAvgSql(e: String): String =
     s"CAST(sum(CAST(floor(($e) * 1000000.0) AS BIGINT)) AS DOUBLE) / count($e) / 1000000.0"
 
+  // The before/after mirrors (q04-q06, q101, q39): one per-side
+  // subquery over W, its columns picked from these lines.
+  private val countLines = Seq(s"count($beforeCase) AS n_before", s"count($afterCase) AS n_after")
+  private val counts = countLines.mkString(", ")
+  private def perSide(stat: String, sql: String => String): Seq[String] =
+    Seq(s"${sql(beforeCase)} AS ${stat}_before", s"${sql(afterCase)} AS ${stat}_after")
+  private val means = perSide("mean", exactAvgSql)
+  private val vars = perSide("var", graft.stats.ExactMoments.exactVarSql)
+  private val sems = perSide("sem", e => s"${graft.stats.ExactMoments.exactStddevSql(e)} / sqrt(count($e))")
+
+  /** `SELECT country, antigen, <outer> FROM (<per-side subquery>)`,
+    * ordered by (country, antigen), over the events fact. */
+  private[graft] def beforeAfterSql(outer: String, sides: Seq[String]): String =
+    cte(s"""SELECT country, antigen, $outer
+           |FROM (
+           |  SELECT country, antigen,
+           |${sides.map("    " + _).mkString(",\n")}
+           |  FROM fact GROUP BY country, antigen)
+           |ORDER BY country, antigen""".stripMargin)
+
+  /** Welch t and Welch–Satterthwaite df over the side columns, the
+    * IEEE op chains of StudentT.welchT / welchDf (x*x, never pow). */
+  private val welchTDfSql: String =
+    """  CASE WHEN n_before > 1 AND n_after > 1 THEN
+      |    (mean_before - mean_after) / sqrt(var_before/n_before + var_after/n_after)
+      |  END AS t_stat,
+      |  CASE WHEN n_before > 1 AND n_after > 1 THEN
+      |    ((var_before/n_before + var_after/n_after) * (var_before/n_before + var_after/n_after)) /
+      |      ((var_before/n_before) * (var_before/n_before) / (n_before-1)
+      |        + (var_after/n_after) * (var_after/n_after) / (n_after-1))
+      |  END AS welch_df""".stripMargin
+
+  /** The unrounded Welch t/df mirror q39 checks [[graft.stats.WelchExactTTest]] against. */
+  private[graft] val welchAggregatorSql: String =
+    beforeAfterSql(s"n_before, n_after,\n$welchTDfSql", counts +: (means ++ vars))
+
   val all: Seq[Q] = Seq(
 
     // S2/P1/P2/L1 — filtered ordered series (etl_pipeline.py:109-118).
@@ -56,16 +92,8 @@ object CoreParityQueries {
 
     // P4/A3/A6/A10 — single-pass conditional before/after means.
     Q("q04_before_after_means",
-      cte(s"""SELECT country, antigen, n_before, n_after, mean_before, mean_after,
-             |  mean_after - mean_before AS diff
-             |FROM (
-             |  SELECT country, antigen,
-             |    count($beforeCase) AS n_before,
-             |    count($afterCase) AS n_after,
-             |    ${exactAvgSql(beforeCase)} AS mean_before,
-             |    ${exactAvgSql(afterCase)} AS mean_after
-             |  FROM fact GROUP BY country, antigen)
-             |ORDER BY country, antigen""".stripMargin)) { (s, dir) =>
+      beforeAfterSql("n_before, n_after, mean_before, mean_after,\n  mean_after - mean_before AS diff",
+        countLines ++ means)) { (s, dir) =>
       CoverageQueries.beforeAfterMeans(EventsFact.fact(s, dir), W)
     },
 
@@ -77,25 +105,8 @@ object CoreParityQueries {
     // mirrors every op (incl. x*x instead of pow), so the hash matches
     // bit-for-bit with no rounding bridge.
     Q("q05_welch_relational",
-      cte(s"""SELECT country, antigen, n_before, n_after,
-             |  mean_before, mean_after, var_before, var_after,
-             |  CASE WHEN n_before > 1 AND n_after > 1 THEN
-             |    (mean_before - mean_after) / sqrt(var_before/n_before + var_after/n_after)
-             |  END AS t_stat,
-             |  CASE WHEN n_before > 1 AND n_after > 1 THEN
-             |    ((var_before/n_before + var_after/n_after) * (var_before/n_before + var_after/n_after)) /
-             |      ((var_before/n_before) * (var_before/n_before) / (n_before-1)
-             |        + (var_after/n_after) * (var_after/n_after) / (n_after-1))
-             |  END AS welch_df
-             |FROM (
-             |  SELECT country, antigen,
-             |    count($beforeCase) AS n_before, count($afterCase) AS n_after,
-             |    ${exactAvgSql(beforeCase)} AS mean_before,
-             |    ${exactAvgSql(afterCase)} AS mean_after,
-             |    ${graft.stats.ExactMoments.exactVarSql(beforeCase)} AS var_before,
-             |    ${graft.stats.ExactMoments.exactVarSql(afterCase)} AS var_after
-             |  FROM fact GROUP BY country, antigen)
-             |ORDER BY country, antigen""".stripMargin)) { (s, dir) =>
+      beforeAfterSql(s"n_before, n_after,\n  mean_before, mean_after, var_before, var_after,\n$welchTDfSql",
+        counts +: (means ++ vars))) { (s, dir) =>
       CoverageQueries.welchRelational(EventsFact.fact(s, dir), W)
         .select(
           col("country"), col("antigen"), col("n_before"), col("n_after"),
@@ -117,28 +128,8 @@ object CoreParityQueries {
     // commons-math3 constants (StudentTSpec/WelchSpec) — shrinking the
     // no_oracle surface to zero registry rows (r15 VERDICT task 4).
     Q("q06_before_after_full",
-      cte(s"""SELECT country, antigen, n_before, n_after,
-             |  mean_before, mean_after, sem_before, sem_after,
-             |  mean_after - mean_before AS diff,
-             |  CASE WHEN n_before > 1 AND n_after > 1 THEN
-             |    (mean_before - mean_after) / sqrt(var_before/n_before + var_after/n_after)
-             |  END AS t_stat,
-             |  CASE WHEN n_before > 1 AND n_after > 1 THEN
-             |    ((var_before/n_before + var_after/n_after) * (var_before/n_before + var_after/n_after)) /
-             |      ((var_before/n_before) * (var_before/n_before) / (n_before-1)
-             |        + (var_after/n_after) * (var_after/n_after) / (n_after-1))
-             |  END AS welch_df
-             |FROM (
-             |  SELECT country, antigen,
-             |    count($beforeCase) AS n_before, count($afterCase) AS n_after,
-             |    ${exactAvgSql(beforeCase)} AS mean_before,
-             |    ${exactAvgSql(afterCase)} AS mean_after,
-             |    ${graft.stats.ExactMoments.exactVarSql(beforeCase)} AS var_before,
-             |    ${graft.stats.ExactMoments.exactVarSql(afterCase)} AS var_after,
-             |    ${graft.stats.ExactMoments.exactStddevSql(beforeCase)} / sqrt(count($beforeCase)) AS sem_before,
-             |    ${graft.stats.ExactMoments.exactStddevSql(afterCase)} / sqrt(count($afterCase)) AS sem_after
-             |  FROM fact GROUP BY country, antigen)
-             |ORDER BY country, antigen""".stripMargin)) { (s, dir) =>
+      beforeAfterSql(s"n_before, n_after,\n  mean_before, mean_after, sem_before, sem_after,\n" +
+        s"  mean_after - mean_before AS diff,\n$welchTDfSql", counts +: (means ++ vars ++ sems))) { (s, dir) =>
       CoverageQueries.beforeAfterFull(EventsFact.fact(s, dir), W)
         .select(
           col("country"), col("antigen"), col("n_before"), col("n_after"),
@@ -156,17 +147,8 @@ object CoreParityQueries {
     // Selected from beforeAfterFull's own frame — this proves q06's
     // actual SEM columns, not a parallel reimplementation.
     Q("q101_before_after_sem",
-      cte(s"""SELECT country, antigen, n_before, n_after,
-             |  sem_before, sem_after, mean_after - mean_before AS diff
-             |FROM (
-             |  SELECT country, antigen,
-             |    count($beforeCase) AS n_before, count($afterCase) AS n_after,
-             |    ${exactAvgSql(beforeCase)} AS mean_before,
-             |    ${exactAvgSql(afterCase)} AS mean_after,
-             |    ${graft.stats.ExactMoments.exactStddevSql(beforeCase)} / sqrt(count($beforeCase)) AS sem_before,
-             |    ${graft.stats.ExactMoments.exactStddevSql(afterCase)} / sqrt(count($afterCase)) AS sem_after
-             |  FROM fact GROUP BY country, antigen)
-             |ORDER BY country, antigen""".stripMargin)) { (s, dir) =>
+      beforeAfterSql("n_before, n_after,\n  sem_before, sem_after, mean_after - mean_before AS diff",
+        counts +: (means ++ sems))) { (s, dir) =>
       CoverageQueries.beforeAfterFull(EventsFact.fact(s, dir), W)
         .select(
           col("country"), col("antigen"), col("n_before"), col("n_after"),

@@ -706,30 +706,5 @@ object ExtensionOracles {
   /** Unrounded mirror of WelchExactTTest: exact quantized means/vars
     * (ExactMoments formulas), then the identical IEEE t/df op chains
     * (x*x, never pow). */
-  val welchAggregator: String = {
-    val w = CoreParityQueries.W
-    val beforeCase = s"CASE WHEN year BETWEEN ${w.beforeLo} AND ${w.beforeHi} THEN coverage_pct END"
-    val afterCase = s"CASE WHEN year BETWEEN ${w.afterLo} AND ${w.afterHi} THEN coverage_pct END"
-    def exactAvgSql(e: String): String =
-      s"CAST(sum(CAST(floor(($e) * 1000000.0) AS BIGINT)) AS DOUBLE) / count($e) / 1000000.0"
-    EventsFact.withFactCte(
-      s"""SELECT country, antigen, n_before, n_after,
-         |  CASE WHEN n_before > 1 AND n_after > 1 THEN
-         |    (mean_before - mean_after) / sqrt(var_before/n_before + var_after/n_after)
-         |  END AS t_stat,
-         |  CASE WHEN n_before > 1 AND n_after > 1 THEN
-         |    ((var_before/n_before + var_after/n_after) * (var_before/n_before + var_after/n_after)) /
-         |      ((var_before/n_before) * (var_before/n_before) / (n_before-1)
-         |        + (var_after/n_after) * (var_after/n_after) / (n_after-1))
-         |  END AS welch_df
-         |FROM (
-         |  SELECT country, antigen,
-         |    count($beforeCase) AS n_before, count($afterCase) AS n_after,
-         |    ${exactAvgSql(beforeCase)} AS mean_before,
-         |    ${exactAvgSql(afterCase)} AS mean_after,
-         |    ${graft.stats.ExactMoments.exactVarSql(beforeCase)} AS var_before,
-         |    ${graft.stats.ExactMoments.exactVarSql(afterCase)} AS var_after
-         |  FROM fact GROUP BY country, antigen)
-         |ORDER BY country, antigen""".stripMargin)
-  }
+  val welchAggregator: String = CoreParityQueries.welchAggregatorSql
 }

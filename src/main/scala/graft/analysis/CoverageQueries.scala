@@ -26,6 +26,12 @@ import graft.stats.{ExactMoments, StudentT}
   * one Spark job instead of three, `beforeAfterFull` one instead of
   * two. Filters and projections still push into the scan below the
   * coalesce. Larger facts keep the distributed plan unchanged.
+  *
+  * Before/after statistics: [[beforeAfterMeans]], [[welchRelational]]
+  * and [[beforeAfterFull]] read ONE per-side aggregate of base sums,
+  * (n, Σq, Σq²) with q = floor(x·1e6), and derive every statistic —
+  * mean, var, SEM, CI, diff, t, df, p, verdict — as projections over
+  * those six columns, so the planner sees each CASE and sum once.
   */
 object CoverageQueries {
 
@@ -45,9 +51,12 @@ object CoverageQueries {
     * around n·x̄·1e6 ≈ 9e18 — a few hundred million price-scale rows —
     * where the DuckDB mirror's HUGEINT would not; the decimal→double
     * cast is correctly-rounded like long→double, so values are
-    * unchanged where both fit). */
+    * unchanged where both fit). The before/after means use the same
+    * finish ([[graft.stats.ExactMoments.meanOf]]) over the Σq they share
+    * with the variance: DECIMAL(18,0) quanta summed in DECIMAL(28,0),
+    * exact while |Σq| < 1e28, and the same double wherever both fit. */
   def exactAvg(c: Column): Column =
-    sum(floor(c * lit(1e6)).cast("decimal(38,0)")).cast("double") / count(c) / lit(1e6)
+    ExactMoments.meanOf(count(c), sum(floor(c * lit(1e6)).cast("decimal(38,0)")))
 
   /** Filtered ordered series — S2/P1/P2/L1
     * (`/root/reference/etl_pipeline.py:109-118`). Catalyst pushes both
@@ -83,37 +92,34 @@ object CoverageQueries {
     ).select(col("*"), (col("latest") - col("earliest")).as("delta"))
       .orderBy("country", "antigen")
 
-  private def inBefore(w: CampaignWindow): Column =
-    col("year").between(w.beforeLo, w.beforeHi)
-  private def inAfter(w: CampaignWindow): Column =
-    col("year").between(w.afterLo, w.afterHi)
+  private val Sides = Seq("before", "after")
+  private def n(side: String): Column = col(s"n_$side")
+  private def mean(side: String): Column = ExactMoments.meanOf(n(side), col(s"s1_$side"))
+  private def variance(side: String): Column =
+    ExactMoments.varOf(n(side), col(s"s1_$side"), col(s"s2_$side"))
 
-  /** Per-side point counts and exact means: n_before, n_after,
-    * mean_before, mean_after. */
-  private def sideMeans(w: CampaignWindow): Seq[Column] = {
-    val v = col("coverage_pct")
-    Seq(
-      count(when(inBefore(w), v)).as("n_before"),
-      count(when(inAfter(w), v)).as("n_after"),
-      exactAvg(when(inBefore(w), v)).as("mean_before"),
-      exactAvg(when(inAfter(w), v)).as("mean_after"))
+  /** The one before/after aggregate and the moments over it. Per side,
+    * over the masked value x and its quantum q = floor(x·1e6) as
+    * DECIMAL(18,0), it sums only n = count(x), Σq and (with `spread`)
+    * Σq² — the state [[graft.stats.WelchExactTTest]] keeps — then
+    * projects country, antigen, n_*, mean_* and, with `spread`, var_*. */
+  private def sideMoments(fact: DataFrame, w: CampaignWindow, spread: Boolean): DataFrame = {
+    val x = Map(
+      "before" -> when(col("year").between(w.beforeLo, w.beforeHi), col("coverage_pct")),
+      "after" -> when(col("year").between(w.afterLo, w.afterHi), col("coverage_pct")))
+    def q(side: String) = ExactMoments.qd(x(side))
+    val sums = Sides.map(s => count(x(s)).as(s"n_$s")) ++ Sides.map(s => sum(q(s)).as(s"s1_$s")) ++
+      (if (spread) Sides.map(s => sum(q(s) * q(s)).as(s"s2_$s")) else Nil)
+    val moments = Sides.map(n) ++ Sides.map(s => mean(s).as(s"mean_$s")) ++
+      (if (spread) Sides.map(s => variance(s).as(s"var_$s")) else Nil)
+    singleStageIfTiny(fact).groupBy("country", "antigen").agg(sums.head, sums.tail: _*)
+      .select(Seq(col("country"), col("antigen")) ++ moments: _*)
   }
 
-  /** Per-side exact sample variances (NULL at n<2): var_before,
-    * var_after. With exact means AND vars, t/df are fixed IEEE op
-    * chains over identical inputs — bitwise-mirrorable, no rounding
-    * bridge needed. */
-  private def sideVars(w: CampaignWindow): Seq[Column] = {
-    val v = col("coverage_pct")
-    Seq(
-      ExactMoments.exactVar(when(inBefore(w), v)).as("var_before"),
-      ExactMoments.exactVar(when(inAfter(w), v)).as("var_after"))
-  }
-
-  /** Welch t and Welch–Satterthwaite df over [[sideMeans]] +
-    * [[sideVars]]: t_stat, welch_df. Null where either side has n<2 —
-    * the reference's guard (`etl_pipeline.py:136`). */
-  private def welchCols: Seq[Column] = {
+  /** Welch t and Welch–Satterthwaite df over the side moments: t_stat,
+    * welch_df. Null where either side has n<2 — the reference's guard
+    * (`etl_pipeline.py:136`). */
+  private def welchTDf: Seq[Column] = {
     val testable = col("n_before") > 1 && col("n_after") > 1
     Seq(
       when(testable,
@@ -128,54 +134,48 @@ object CoverageQueries {
 
   /** Before/after window means + diff, single-pass conditional aggregate
     * — P4/A3/A6/A10 (`/root/reference/etl_pipeline.py:124-145`). One
-    * scan instead of the reference's two boolean-mask slices. */
-  def beforeAfterMeans(fact: DataFrame, w: CampaignWindow): DataFrame = {
-    val aggs = sideMeans(w)
-    singleStageIfTiny(fact).groupBy("country", "antigen").agg(aggs.head, aggs.tail: _*)
+    * scan instead of the reference's two boolean-mask slices; only
+    * (n, Σq) are aggregated. */
+  def beforeAfterMeans(fact: DataFrame, w: CampaignWindow): DataFrame =
+    sideMoments(fact, w, spread = false)
       .select(col("*"), diff)
       .orderBy("country", "antigen")
-  }
 
   /** Welch t-test expressed relationally — A8. Same math as the
     * [[graft.stats.WelchTTest]] aggregator but built purely from
-    * Catalyst built-ins (count and exact decimal moments with
-    * conditional inputs), so it stays inside whole-stage codegen AND is
+    * Catalyst built-ins (count and exact decimal sums with conditional
+    * inputs), so it stays inside whole-stage codegen AND is
     * DuckDB-oracle-checkable. The p-value needs the t CDF
     * (commons-math3) and is added by [[beforeAfterFull]]. */
-  def welchRelational(fact: DataFrame, w: CampaignWindow): DataFrame = {
-    val aggs = sideMeans(w) ++ sideVars(w)
-    singleStageIfTiny(fact).groupBy("country", "antigen").agg(aggs.head, aggs.tail: _*)
-      .select(col("*") +: welchCols: _*)
-  }
+  def welchRelational(fact: DataFrame, w: CampaignWindow): DataFrame =
+    sideMoments(fact, w, spread = true).select(col("*") +: welchTDf: _*)
 
   /** Full before/after analysis: means, 95% CIs (A7 — scipy
     * `sem * t.ppf`, ddof=1 ⇒ sample stddev), Welch t/df/p (A8), and the
     * reference's tri-state significance narrative (F8,
     * `/root/reference/streamlit_app.py:331-342`).
     *
-    * Moment discipline: means via [[exactAvg]] and var/SEM via
-    * [[graft.stats.ExactMoments]] — order-independent AND
-    * bitwise-mirrorable, so every column UP TO the Student-t factor
-    * (n, mean, SEM, diff, t, df) is oracle-checkable SQL (q05 covers
-    * t/df, q101 the SEM lane); only the t-quantile/CDF multiplication
-    * itself (ci_*, p_value, verdict) rides on spec-carried
-    * commons-math3 constants ([[graft.stats.StudentT]]).
+    * Moment discipline: ONE aggregate of base sums per side, (n, Σq,
+    * Σq²) with q = floor(x·1e6) ([[sideMoments]]); every statistic is a
+    * projection over them — mean and var via
+    * [[graft.stats.ExactMoments.meanOf]]/[[graft.stats.ExactMoments.varOf]],
+    * sem = sqrt(var)/sqrt(n). Exact integer sums make every column UP
+    * TO the Student-t factor (n, mean, SEM, diff, t, df) order-independent
+    * AND bitwise-mirrorable SQL (q05 covers t/df, q101 the SEM lane);
+    * only the t-quantile/CDF multiplication itself (ci_*, p_value,
+    * verdict) rides on spec-carried commons-math3 constants
+    * ([[graft.stats.StudentT]]).
     *
     * Derived columns are added one `select` per dependency level
-    * (CIs/diff/t/df, then p, then the verdict): each `select` analyses
-    * its new plan eagerly, so fewer levels plan faster. */
+    * (moments, then SEM/CIs/diff/t/df, then p, then the verdict):
+    * each `select` analyses its new plan eagerly, so fewer, smaller
+    * levels plan faster. */
   def beforeAfterFull(fact: DataFrame, w: CampaignWindow, conf: Double = 0.95): DataFrame = {
-    val v = col("coverage_pct")
-    val aggs = sideMeans(w) ++ sideVars(w) ++ Seq(
-      (ExactMoments.exactStddev(when(inBefore(w), v)) /
-        sqrt(count(when(inBefore(w), v)))).as("sem_before"),
-      (ExactMoments.exactStddev(when(inAfter(w), v)) /
-        sqrt(count(when(inAfter(w), v)))).as("sem_after"))
-    singleStageIfTiny(fact).groupBy("country", "antigen").agg(aggs.head, aggs.tail: _*)
-      .select(Seq(col("*"),
-        StudentT.ciHalfWidth(col("sem_before"), col("n_before"), conf).as("ci_before"),
-        StudentT.ciHalfWidth(col("sem_after"), col("n_after"), conf).as("ci_after"),
-        diff) ++ welchCols: _*)
+    def sem(side: String) = sqrt(col(s"var_$side")) / sqrt(n(side))
+    sideMoments(fact, w, spread = true)
+      .select(Seq(col("*")) ++ Sides.map(s => sem(s).as(s"sem_$s")) ++
+        Sides.map(s => StudentT.ciHalfWidth(sem(s), n(s), conf).as(s"ci_$s")) ++
+        (diff +: welchTDf): _*)
       .select(col("*"), StudentT.tPValue2(col("t_stat"), col("welch_df")).as("p_value"))
       // Tri-state narrative label (streamlit_app.py:331-342): significant
       // rise / significant fall / no significant change / not enough data.

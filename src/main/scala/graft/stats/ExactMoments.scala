@@ -18,11 +18,17 @@ import org.apache.spark.sql.functions._
   * sequence of IEEE double ops applied to exactly-equal integers, hence
   * bitwise-identical across engines and partitionings:
   *
-  *   var  = toDouble(n·Σq² − (Σq)²) / n / (n−1) / 1e12
+  *   mean = toDouble(Σq) / n / 1e6                       ([[meanOf]])
+  *   var  = toDouble(n·Σq² − (Σq)²) / n / (n−1) / 1e12   ([[varOf]])
   *   cov  = toDouble(n·Σqxqy − Σqx·Σqy) / n / (n−1) / 1e12
   *   corr = toDouble(Nxy) / sqrt(toDouble(Nxx) · toDouble(Nyy))
   *          (the 1/(n(n−1)·1e12) scale cancels exactly in ℝ, so corr
   *          uses the raw integer numerators N)
+  *
+  * [[meanOf]] and [[varOf]] take the base sums (n, Σq, Σq²) as columns,
+  * so a caller that already holds them (the before/after statistics in
+  * [[graft.analysis.CoverageQueries]]) finishes them without a second
+  * aggregate.
   *
   * Semantics note: these are the exact moments OF THE QUANTIZED values
   * (1e-6 grid). For data already quantized at ≤6 decimals (prices,
@@ -39,27 +45,37 @@ object ExactMoments {
   /** floor(x·1e6) as a decimal — the exact quantized accumuland.
     * (Spark's floor(double) is LongType; DECIMAL(18,0) keeps products
     * inside DECIMAL(37,0) with no precision cap in play.) */
-  private def qd(c: Column): Column = floor(c * lit(1e6)).cast("decimal(18,0)")
+  private[graft] def qd(c: Column): Column = floor(c * lit(1e6)).cast("decimal(18,0)")
 
   // HUGEINT (int128): q for price-scale values is ~1e11, so q² (~1e22)
   // overflows DuckDB's BIGINT; the Spark side's DECIMAL(18,0) products
   // land in DECIMAL(37,0) and have the same headroom.
   private def qdSql(e: String): String = s"CAST(floor(($e) * 1000000.0) AS HUGEINT)"
 
-  /** Integer numerator n·Σq² − (Σq)² — NULL-safe: rows where `c` is
-    * NULL count into neither sum nor n (aggregate null-skip). */
+  /** Integer numerator n·Σq² − (Σq)² over the base sums. */
+  private def varNumOf(n: Column, s1: Column, s2: Column): Column =
+    n.cast("decimal(18,0)") * s2 - s1 * s1
+
+  /** [[varNumOf]] of `c` — NULL-safe: rows where `c` is NULL count
+    * into neither sum nor n (aggregate null-skip). */
   private def varNum(c: Column): Column =
-    count(c).cast("decimal(18,0)") * sum(qd(c) * qd(c)) - sum(qd(c)) * sum(qd(c))
+    varNumOf(count(c), sum(qd(c)), sum(qd(c) * qd(c)))
 
   private def varNumSql(e: String): String =
     s"count($e) * sum(${qdSql(e)} * ${qdSql(e)}) - sum(${qdSql(e)}) * sum(${qdSql(e)})"
 
-  /** Exact sample variance (ddof=1) of the quantized values; NULL when
-    * n < 2 (mirrors var_samp, and keeps the 0/0 path unevaluated so
-    * engines can't disagree on NaN-vs-NULL). */
-  def exactVar(c: Column): Column =
-    when(count(c) > 1,
-      varNum(c).cast("double") / count(c) / (count(c) - lit(1)) / lit(1e12))
+  /** The mean over base sums (n, Σq): toDouble(Σq) / n / 1e6. NULL at
+    * n = 0 (Σq is NULL there, and NULL/0 is NULL even under ANSI). */
+  def meanOf(n: Column, s1: Column): Column = s1.cast("double") / n / lit(1e6)
+
+  /** The sample variance (ddof=1) over base sums (n, Σq, Σq²); NULL
+    * when n < 2 (mirrors var_samp, and keeps the 0/0 path unevaluated
+    * so engines can't disagree on NaN-vs-NULL). */
+  def varOf(n: Column, s1: Column, s2: Column): Column =
+    when(n > 1, varNumOf(n, s1, s2).cast("double") / n / (n - lit(1)) / lit(1e12))
+
+  /** Exact sample variance (ddof=1) of the quantized values. */
+  def exactVar(c: Column): Column = varOf(count(c), sum(qd(c)), sum(qd(c) * qd(c)))
 
   def exactVarSql(e: String): String =
     s"""CASE WHEN count($e) > 1 THEN
@@ -114,8 +130,8 @@ object ExactMoments {
 
   def exactIntercept(y: Column, x: Column): Column = {
     val (px, py) = pairMask(x, y)
-    val meanX = sum(qd(px)).cast("double") / count(px) / lit(1e6)
-    val meanY = sum(qd(py)).cast("double") / count(px) / lit(1e6)
+    val meanX = meanOf(count(px), sum(qd(px)))
+    val meanY = meanOf(count(px), sum(qd(py)))
     when(count(px) > 1 && varNum(px) > 0, meanY - exactSlope(y, x) * meanX)
   }
 

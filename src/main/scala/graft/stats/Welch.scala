@@ -74,22 +74,11 @@ object WelchTTest extends Aggregator[WelchIn, WelchBuf, WelchOut] {
   }
 
   override def finish(b: WelchBuf): WelchOut = {
-    val meanB = if (b.nB > 0) Some(b.meanB) else None
-    val meanA = if (b.nA > 0) Some(b.meanA) else None
-    val varB = if (b.nB > 1) Some(b.m2B / (b.nB - 1)) else None
-    val varA = if (b.nA > 1) Some(b.m2A / (b.nA - 1)) else None
-    // Reference guard: test requires n>1 on BOTH sides (etl_pipeline.py:136).
-    val test = for { vb <- varB; va <- varA } yield {
-      val sb = vb / b.nB
-      val sa = va / b.nA
-      val se2 = sb + sa
-      val t = (b.meanB - b.meanA) / math.sqrt(se2)
-      val df = se2 * se2 / (sb * sb / (b.nB - 1) + sa * sa / (b.nA - 1))
-      val p = 2.0 * (1.0 - new TDistribution(df).cumulativeProbability(math.abs(t)))
-      (t, df, p)
-    }
-    WelchOut(b.nB, b.nA, meanB, meanA, varB, varA,
-      test.map(_._1), test.map(_._2), test.map(_._3))
+    def side(n: Long, mean: Double, m2: Double) =
+      (if (n > 0) Some(mean) else None, if (n > 1) Some(m2 / (n - 1)) else None)
+    val (meanB, varB) = side(b.nB, b.meanB, b.m2B)
+    val (meanA, varA) = side(b.nA, b.meanA, b.m2A)
+    Welch.finish(b.nB, meanB, varB, b.nA, meanA, varA)
   }
 
   override def bufferEncoder: Encoder[WelchBuf] = Encoders.product[WelchBuf]
@@ -143,11 +132,11 @@ object WelchExactTTest extends Aggregator[WelchIn, WelchExactBuf, WelchOut] {
       x.nB + y.nB, x.s1B + y.s1B, addExact(x.s2B, y.s2B),
       x.nA + y.nA, x.s1A + y.s1A, addExact(x.s2A, y.s2A))
 
-  /** Mirrors exactAvg: toDouble(Σq) / n / 1e6, same op order. */
+  /** Mirrors ExactMoments.meanOf: toDouble(Σq) / n / 1e6, same op order. */
   private def meanOf(n: Long, s1: Long): Option[Double] =
     if (n > 0) Some(s1.toDouble / n / 1e6) else None
 
-  /** Mirrors ExactMoments.exactVar: toDouble(n·Σq² − (Σq)²) / n / (n−1) / 1e12. */
+  /** Mirrors ExactMoments.varOf: toDouble(n·Σq² − (Σq)²) / n / (n−1) / 1e12. */
   private def varOf(n: Long, s1: Long, s2: BigDecimal): Option[Double] =
     if (n > 1) {
       val s2q = s2.bigDecimal.movePointRight(12) // Σq², exact integer
@@ -156,25 +145,29 @@ object WelchExactTTest extends Aggregator[WelchIn, WelchExactBuf, WelchOut] {
       Some(num.doubleValue / n / (n - 1) / 1e12)
     } else None
 
-  override def finish(b: WelchExactBuf): WelchOut = {
-    val meanB = meanOf(b.nB, b.s1B)
-    val meanA = meanOf(b.nA, b.s1A)
-    val varB = varOf(b.nB, b.s1B, b.s2B)
-    val varA = varOf(b.nA, b.s1A, b.s2A)
-    val test = for { vb <- varB; va <- varA; mb <- meanB; ma <- meanA } yield {
-      // the same IEEE op chains as StudentT.welchT / welchDf
-      val a = vb / b.nB
-      val c = va / b.nA
-      val t = (mb - ma) / math.sqrt(a + c)
-      val se2 = a + c
-      val df = se2 * se2 / (a * a / (b.nB - 1) + c * c / (b.nA - 1))
-      val p = 2.0 * (1.0 - new TDistribution(df).cumulativeProbability(math.abs(t)))
-      (t, df, p)
-    }
-    WelchOut(b.nB, b.nA, meanB, meanA, varB, varA,
-      test.map(_._1), test.map(_._2), test.map(_._3))
-  }
+  override def finish(b: WelchExactBuf): WelchOut =
+    Welch.finish(b.nB, meanOf(b.nB, b.s1B), varOf(b.nB, b.s1B, b.s2B),
+      b.nA, meanOf(b.nA, b.s1A), varOf(b.nA, b.s1A, b.s2A))
 
   override def bufferEncoder: Encoder[WelchExactBuf] = Encoders.product[WelchExactBuf]
   override def outputEncoder: Encoder[WelchOut] = Encoders.product[WelchOut]
+}
+
+/** The one scalar Welch finish both aggregators share: t, df and the
+  * two-sided p from per-side (n, mean, var), in the same IEEE op chains
+  * as StudentT.welchT / welchDf. No test unless both sides have n>1 —
+  * the reference's guard (`etl_pipeline.py:136`). */
+private object Welch {
+  def finish(nB: Long, meanB: Option[Double], varB: Option[Double],
+             nA: Long, meanA: Option[Double], varA: Option[Double]): WelchOut = {
+    val test = for { vb <- varB; va <- varA; mb <- meanB; ma <- meanA } yield {
+      val (a, c) = (vb / nB, va / nA)
+      val se2 = a + c
+      val t = (mb - ma) / math.sqrt(se2)
+      val df = se2 * se2 / (a * a / (nB - 1) + c * c / (nA - 1))
+      val p = 2.0 * (1.0 - new TDistribution(df).cumulativeProbability(math.abs(t)))
+      (t, df, p)
+    }
+    WelchOut(nB, nA, meanB, meanA, varB, varA, test.map(_._1), test.map(_._2), test.map(_._3))
+  }
 }

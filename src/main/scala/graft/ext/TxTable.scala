@@ -1832,7 +1832,48 @@ object TxTable {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
 
-  /** Snapshot read: latest version, or `versionAsOf` (time travel). */
+  private type FrameKey = (SparkSession, Path, Seq[FileEntry], Map[String, String])
+
+  /** Upper bound on the snapshot frames [[read]] keeps. */
+  private val FrameMemoSize = 16
+
+  /** [[read]]'s frames, least recently read first. Guarded by itself. */
+  private val frames =
+    new java.util.LinkedHashMap[FrameKey, DataFrame](FrameMemoSize, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[FrameKey, DataFrame]): Boolean =
+        size() > FrameMemoSize
+    }
+
+  /** How many of [[read]]'s kept frames read the table at `dir`. */
+  private[ext] def framesKept(spark: SparkSession, dir: String): Int = {
+    import scala.jdk.CollectionConverters._
+    val root = fsOf(spark, dir)._2
+    frames.synchronized(frames.keySet.asScala.count(_._2 == root))
+  }
+
+  /** Snapshot read: latest version, or `versionAsOf` (time travel).
+    *
+    * The version is resolved and its manifest replayed on every call,
+    * so freshness, the refusal to read vacuumed versions and the
+    * manifest checks are those of the log. The frame itself is built
+    * once per snapshot content: it is kept under (session, table root,
+    * live files, commit schemas) and a later read that replays to the
+    * same key returns the same frame, with no file index to build and
+    * no deletion-vector collect job to run. The key names the rows:
+    * data files and DV sidecars live under per-commit dirs with a
+    * random suffix, so a new version, or a table deleted and recreated
+    * at the same path, keys differently, and a frame is only ever
+    * served for the very files it reads. At most 16 frames are kept
+    * ([[FrameMemoSize]]), least recently read evicted first; an
+    * evicted frame is not destroyed (a caller may still hold it) and
+    * its DV broadcast is freed once nothing references it. A build
+    * that throws keeps nothing. Two threads that miss together both
+    * build, and both get the frame kept first.
+    *
+    * A kept frame is analyzed once, under the session conf of its
+    * first read; queries derived from it are still optimized and
+    * planned under the conf current when they run. */
   def read(
       spark: SparkSession, dir: String,
       versionAsOf: Option[Long] = None): DataFrame = {
@@ -1840,7 +1881,11 @@ object TxTable {
     val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
       sys.error(s"no committed version at $dir"))
     val m = readManifest(spark, dir, v)
-    sliceOrEmpty(spark, root, m.files, m.files, m.schemas)
+    val key: FrameKey = (spark, root, m.files, m.schemas)
+    Option(frames.synchronized(frames.get(key))).getOrElse {
+      val built = sliceOrEmpty(spark, root, m.files, m.files, m.schemas)
+      Option(frames.synchronized(frames.putIfAbsent(key, built))).getOrElse(built)
+    }
   }
 
   /** TIMESTAMP time travel: the latest version whose commit timestamp

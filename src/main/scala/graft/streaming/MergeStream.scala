@@ -443,10 +443,12 @@ object MergeStream {
             rawChanges, partitionCol) { (changes, touched) =>
         if (touched.nonEmpty) {
           // roll forward any crashed predecessor BEFORE reading the
-          // fact: TxTable.read pins its version eagerly, and a view
-          // derived from a pre-recovery snapshot would silently miss
-          // the recovered batch (commitAll recovers too, but only
-          // after this read would have happened)
+          // fact: TxTable.read pins its version eagerly (it resolves
+          // the latest version when called, and the frame it returns,
+          // kept or fresh, reads exactly that version's live files),
+          // and a view derived from a pre-recovery snapshot would
+          // silently miss the recovered batch (commitAll recovers too,
+          // but only after this read would have happened)
           graft.ext.PairTxn.recoverPairs(spark, coordDir)
           val cur = graft.ext.TxTable.read(spark, factDir)
           // the LEDGER decides the recompute shape: a batch already

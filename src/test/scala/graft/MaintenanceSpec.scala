@@ -4,12 +4,8 @@ import org.apache.spark.sql.functions._
 
 class MaintenanceSpec extends SparkSpec {
 
-  private def inTempDir[T](f: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_maint_spec")
-      .toFile.getAbsolutePath
-    try f(dir)
-    finally Fs.deleteTree(java.nio.file.Paths.get(dir))
-  }
+  private def inTempDir[T](f: String => T): T =
+    QueryUtil.inTempDir("graft_maint_spec")(f)
 
   test("compaction collapses 64 fragments to the byte-targeted count " +
       "and preserves content exactly") {

@@ -4,12 +4,31 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{Args, Status, Suite}
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Temp directories owned by one suite: every directory `tempDir`
+  * makes, while the suite is built or while a test runs, is deleted
+  * when the suite's run ends, whether its tests pass, fail or throw. */
+trait TempDirs extends Suite {
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  /** A fresh directory under `java.io.tmpdir`, named `prefix…`. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    made.add(dir)
+    dir
+  }
+
+  override def run(testName: Option[String], args: Args): Status =
+    try super.run(testName, args)
+    finally while (!made.isEmpty) Fs.deleteTree(made.poll())
+}
 
 /** Shared session per suite (lazy; the engine's session from
   * `GraftExtensions.builder`, ANSI default). Fixed at 4 slots: the
   * plan goldens spell `hashpartitioning(…, 4)`. */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession =
     GraftExtensions.builder(4).appName(getClass.getSimpleName).getOrCreate()
 

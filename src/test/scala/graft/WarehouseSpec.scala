@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import QueryUtil.inTempDir
 
 /** Operator-level specs for the warehouse batch (q121–q128): the
   * properties the DuckDB oracle cannot see — executed-plan shapes
@@ -8,13 +9,6 @@ import org.apache.spark.sql.functions._
   * brute-force reference, SCD2 interval invariants, and the
   * algebraic-merge law behind incremental aggregation. */
 class WarehouseSpec extends SparkSpec {
-
-  private def inTempDir[T](prefix: String)(f: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-      .toFile.getAbsolutePath
-    try f(dir)
-    finally Fs.deleteTree(java.nio.file.Paths.get(dir))
-  }
 
   // ---------------------------------------------------------------- DPP
 

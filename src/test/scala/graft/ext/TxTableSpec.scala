@@ -1707,6 +1707,93 @@ abstract class TxTableBehaviors extends SparkSpec {
       val expect = snap(40).where(!(col("event_id") % 3 === 0) &&
         !(col("event_id") % 5 === 1) && !(col("event_id") % 7 === 2))
       assert(rows(visible) === rows(expect))
+      // a second read of the same version is served the kept frame:
+      // no file index to build, no sidecar collect to run
+      var again: DataFrame = null
+      assert(jobsStarted { again = TxTable.read(spark, dir) } === 0)
+      assert(again eq visible)
+    }
+  }
+
+  test("two reads of one version return the same frame") {
+    inDir { dir =>
+      TxTable.commitReplace(spark, dir, snap(12), Some("pbucket"))
+      val first = TxTable.read(spark, dir)
+      assert(TxTable.read(spark, dir) eq first)
+      assert(TxTable.read(spark, dir, versionAsOf = Some(1L)) eq first)
+    }
+  }
+
+  test("a commit between two reads gives the new rows") {
+    inDir { dir =>
+      TxTable.commitReplace(spark, dir, snap(12), Some("pbucket"))
+      val before = TxTable.read(spark, dir)
+      assert(rows(before) === rows(snap(12)))
+      TxTable.mergeChangeSet(spark, dir, changes(), "event_id", "op", "pbucket")
+      val after = TxTable.read(spark, dir)
+      assert(after ne before)
+      assert(rows(after) ===
+        rows(Cdc.applyChangeSet(snap(12), changes(), "event_id", "op")))
+      // time travel to the first version still gets its own frame
+      assert(TxTable.read(spark, dir, versionAsOf = Some(1L)) eq before)
+    }
+  }
+
+  test("a table deleted and recreated at the same path gives the new rows") {
+    inDir { base =>
+      val dir = s"$base/t"
+      TxTable.commitReplace(spark, dir, snap(12), Some("pbucket"))
+      val old = TxTable.read(spark, dir)
+      assert(rows(old) === rows(snap(12)))
+      graft.Fs.deleteTree(java.nio.file.Paths.get(dir))
+      TxTable.commitReplace(spark, dir, snap(5), Some("pbucket"))
+      val fresh = TxTable.read(spark, dir)
+      assert(fresh ne old)
+      assert(rows(fresh) === rows(snap(5)))
+    }
+  }
+
+  test("a tx_table SQL read sees a new version") {
+    inDir { dir =>
+      TxTable.commitReplace(spark, dir, snap(12), Some("pbucket"))
+      def viaSql(): DataFrame = spark.sql(s"SELECT * FROM tx_table('$dir')")
+      assert(rows(viaSql()) === rows(snap(12)))
+      TxTable.deleteWhereDv(spark, dir, col("event_id") % 3 === 0)
+      assert(rows(viaSql()) === rows(snap(12).where(col("event_id") % 3 =!= 0)))
+    }
+  }
+
+  test("two sessions get different frames of one version") {
+    inDir { dir =>
+      TxTable.commitReplace(spark, dir, snap(12), Some("pbucket"))
+      val other = spark.newSession()
+      val mine = TxTable.read(spark, dir)
+      val theirs = TxTable.read(other, dir)
+      assert(theirs ne mine)
+      assert(theirs.sparkSession eq other)
+      assert(rows(theirs) === rows(mine))
+    }
+  }
+
+  test("two threads reading a new version together keep one frame, equal rows") {
+    inDir { dir =>
+      TxTable.commitReplace(spark, dir, snap(40), Some("pbucket"))
+      TxTable.deleteWhereDv(spark, dir, col("event_id") % 3 === 0)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val ts = Seq.fill(2)(new Thread(() => {
+        start.await()
+        try got.add(TxTable.read(spark, dir))
+        catch { case t: Throwable => errs.add(t) }
+      }))
+      ts.foreach(_.start()); start.countDown(); ts.foreach(_.join(120000))
+      assert(errs.isEmpty, s"both readers must succeed: ${errs.peek()}")
+      assert(got.size === 2)
+      assert(TxTable.framesKept(spark, dir) === 1)
+      val Seq(a, b) = got.toArray(Array.empty[DataFrame]).toSeq
+      assert(a eq b, "both readers must get the frame kept first")
+      assert(rows(a) === rows(snap(40).where(col("event_id") % 3 =!= 0)))
     }
   }
 

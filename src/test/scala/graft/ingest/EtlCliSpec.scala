@@ -17,7 +17,7 @@ class EtlCliSpec extends SparkSpec {
   }
 
   test("etl-only run publishes raw + fact; analysis run adds artifact + stats") {
-    val dir = Files.createTempDirectory("graft_cli")
+    val dir = tempDir("graft_cli")
     val csv = dir.resolve("wide.csv")
     val rows = (1996 to 2003).map(y => s"S,$y,${10.0 + y - 1996}").mkString("\n")
     Files.writeString(csv, s"entity,year,coverage__x\n$rows\n")
@@ -76,7 +76,7 @@ class EtlCliSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val out = Files.createTempDirectory("graft_cli_http").resolve("warehouse").toString
+      val out = tempDir("graft_cli_http").resolve("warehouse").toString
 
       // E1/E4 entry parity: extract is a real GET, then validate/transform/load.
       val row = EtlCli.run(spark, EtlCli.Config(out = out,
@@ -88,14 +88,14 @@ class EtlCliSpec extends SparkSpec {
       assert(spark.read.parquet(s"$out/immunization").count() == 8)
 
       // raise_for_status parity: non-2xx throws, no partial staging file left
-      val out2 = Files.createTempDirectory("graft_cli_http404").resolve("w").toString
+      val out2 = tempDir("graft_cli_http404").resolve("w").toString
       intercept[java.io.IOException](
         EtlCli.run(spark, EtlCli.Config(out = out2, url = Some(s"$base/missing.csv"))))
       assert(!Files.exists(java.nio.file.Path.of(s"$out2/staging/owid_wide.csv")))
 
       // re-fetch truncates: a shorter upstream body must not leave the
       // previous download's tail bytes behind
-      val staged = Files.createTempDirectory("graft_restage").resolve("s.csv").toString
+      val staged = tempDir("graft_restage").resolve("s.csv").toString
       Files.writeString(java.nio.file.Path.of(
         HttpStaging.fetchToStaging(s"$base/wide.csv", staged)), "") // warm path exists
       Files.writeString(java.nio.file.Path.of(staged),

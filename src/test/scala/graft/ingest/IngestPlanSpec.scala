@@ -22,7 +22,7 @@ import graft.model.Schemas
 class IngestPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val OpenCost = "spark.sql.files.openCostInBytes"
-  private val golden = IngestSpec.writeCsv(IngestSpec.GoldenWideCsv)
+  private val golden = IngestSpec.writeCsv(tempDir("graft_csv"), IngestSpec.GoldenWideCsv)
 
   /** The golden fixture's fact in PK order; the exact-duplicate India
     * 2000 row collapses to one row per antigen. */
@@ -44,7 +44,7 @@ class IngestPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * file order. */
   private def publish(): (Int, SparkPlan, Seq[Seq[Row]]) = {
     val raw = WideCsvIngest.readWideCsv(spark, golden)
-    val out = Files.createTempDirectory("graft_ingest_plan").resolve("fact").toString
+    val out = tempDir("graft_ingest_plan").resolve("fact").toString
     val plan = new AtomicReference[SparkPlan]
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -102,7 +102,7 @@ class IngestPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("EtlCli.run with a selection starts exactly 6 Spark jobs") {
-    val out = Files.createTempDirectory("graft_ingest_cli").resolve("warehouse").toString
+    val out = tempDir("graft_ingest_cli").resolve("warehouse").toString
     val cfg = EtlCli.Config(source = golden, out = out,
       country = Some("India"), antigen = Some("dtp3"))
     // CSV header + schema inference, raw write, fact publish, series

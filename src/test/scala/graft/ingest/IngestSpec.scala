@@ -10,7 +10,8 @@ import java.nio.file.Files
   * year bounds, NaN drops, PK dedup. */
 class IngestSpec extends SparkSpec {
 
-  import IngestSpec.writeCsv
+  private def writeCsv(content: String): String =
+    IngestSpec.writeCsv(tempDir("graft_csv"), content)
 
   private val golden = writeCsv(IngestSpec.GoldenWideCsv)
 
@@ -62,7 +63,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("mixed-case coverage prefix strips like discovery resolves (case-insensitive)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_case")
+    val dir = tempDir("graft_case")
     val csv = dir.resolve("mixed.csv")
     java.nio.file.Files.writeString(csv,
       "Entity,Year,Coverage__MCV1,COVERAGE__dtp3\nIndia,2000,70.0,85.0\n")
@@ -74,7 +75,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("write/read round trip preserves the fact table") {
-    val out = Files.createTempDirectory("graft_fact").toString + "/fact"
+    val out = tempDir("graft_fact").toString + "/fact"
     WideCsvIngest.writeFact(WideCsvIngest.readWideCsv(spark, golden), out)
     val back = spark.read.parquet(out)
     assert(back.count() == 5)
@@ -129,9 +130,9 @@ object IngestSpec {
       |World,,2000,90.0,80.0,x
       |""".stripMargin
 
-  /** `content` as `wide.csv` in a fresh temp directory; returns its path. */
-  def writeCsv(content: String): String = {
-    val f = Files.createTempDirectory("graft_csv").resolve("wide.csv")
+  /** `content` as `wide.csv` in `dir`; returns its path. */
+  def writeCsv(dir: java.nio.file.Path, content: String): String = {
+    val f = dir.resolve("wide.csv")
     Files.writeString(f, content)
     f.toString
   }

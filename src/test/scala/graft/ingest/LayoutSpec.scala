@@ -2,7 +2,6 @@ package graft.ingest
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The at-rest layouts must show up in the physical plan: directory
   * partitioning as PartitionFilters pruning, bucketing as a
@@ -10,7 +9,7 @@ import java.nio.file.Files
 class LayoutSpec extends SparkSpec {
 
   test("partitioned layout prunes directories at planning time") {
-    val dir = Files.createTempDirectory("graft_layout").toString + "/fact"
+    val dir = tempDir("graft_layout").toString + "/fact"
     val fact = graft.analysis.EventsFact.fact(spark, sf())
     Layout.writePartitioned(fact, dir, Seq("country"))
     val scan = spark.read.parquet(dir).filter(col("country") === "cohort_1")
@@ -24,7 +23,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("co-bucketed tables join with no exchange") {
-    val dir = Files.createTempDirectory("graft_bucketed").toString
+    val dir = tempDir("graft_bucketed").toString
     val o = spark.read.parquet(s"${sf()}/orders.parquet")
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val l = spark.read.parquet(s"${sf()}/lineitem.parquet")

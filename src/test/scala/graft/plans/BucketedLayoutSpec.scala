@@ -14,7 +14,7 @@ class BucketedLayoutSpec extends SparkSpec {
   import spark.implicits._
 
   test("co-bucketed tables sort-merge join with zero shuffle exchanges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+    val dir = tempDir("graft-bucketed").toString
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       // force SMJ so the assertion is about bucketing, not broadcast
@@ -41,7 +41,7 @@ class BucketedLayoutSpec extends SparkSpec {
   }
 
   test("zOrderBy files carry tight min/max boxes on BOTH dims vs a random layout") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val dir = tempDir("graft-zorder").toString
     // a 64x64 grid: every (x, y) cell once, arriving in hash order
     val grid = (0 until 4096).map(i => (i % 64, i / 64)).toDF("x", "y")
       .repartition(8)

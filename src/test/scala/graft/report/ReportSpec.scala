@@ -5,12 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** S7 presentation sinks: the PNG plot and 2-page PDF report are real
   * files a viewer can open — checked structurally (no Spark needed). */
-class ReportSpec extends AnyFunSuite {
+class ReportSpec extends AnyFunSuite with graft.TempDirs {
 
   private val series = (1996 to 2010).map(y => (y, 40.0 + (y - 1996) * 3.5))
 
   test("PNG plot: valid image, right dimensions, deterministic") {
-    val dir = Files.createTempDirectory("graft_png")
+    val dir = tempDir("graft_png")
     val p1 = dir.resolve("plot1.png").toString
     PngChart.writeCoveragePlot(series, "India", "dtp3", 2003, 5, 5, p1)
     val img = javax.imageio.ImageIO.read(new java.io.File(p1))
@@ -30,7 +30,7 @@ class ReportSpec extends AnyFunSuite {
   }
 
   test("PDF report: two pages, valid xref, expected text content") {
-    val dir = Files.createTempDirectory("graft_pdf")
+    val dir = tempDir("graft_pdf")
     val path = dir.resolve("report.pdf").toString
     PdfReport.writeReport(series, "India", "dtp3", 2003, 5, 5,
       PdfReport.Stats(Some(47.2), Some(68.9), Some(0.0012)), path,
@@ -65,7 +65,7 @@ class ReportSpec extends AnyFunSuite {
   }
 
   test("PDF report: missing stats render as N/A (n<2 guard parity)") {
-    val dir = Files.createTempDirectory("graft_pdf_na")
+    val dir = tempDir("graft_pdf_na")
     val path = dir.resolve("report.pdf").toString
     PdfReport.writeReport(Seq((2000, 50.0)), "X", "y", 2003, 5, 5,
       PdfReport.Stats(None, None, None), path)

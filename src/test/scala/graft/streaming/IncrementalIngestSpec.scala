@@ -11,7 +11,7 @@ import java.nio.file.Files
 class IncrementalIngestSpec extends SparkSpec {
 
   test("two drops, three runs: no reprocessing, batch parity") {
-    val base = Files.createTempDirectory("graft_incr")
+    val base = tempDir("graft_incr")
     val staging = base.resolve("staging"); Files.createDirectories(staging)
     val out = base.resolve("fact").toString
     val ckpt = base.resolve("ckpt").toString

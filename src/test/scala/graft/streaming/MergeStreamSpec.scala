@@ -10,12 +10,8 @@ class MergeStreamSpec extends SparkSpec {
     StructField("event_id", LongType), StructField("op", StringType),
     StructField("value", DoubleType), StructField("pbucket", LongType)))
 
-  private def inTempDir[T](f: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_spec")
-      .toFile.getAbsolutePath
-    try f(dir)
-    finally graft.Fs.deleteTree(java.nio.file.Paths.get(dir))
-  }
+  private def inTempDir[T](f: String => T): T =
+    graft.QueryUtil.inTempDir("graft_merge_spec")(f)
 
   test("streamed merge equals the one-shot batch apply; only touched " +
       "partitions are rewritten; batch count = change files") {

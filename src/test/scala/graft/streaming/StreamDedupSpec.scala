@@ -14,7 +14,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 class StreamDedupSpec extends SparkSpec {
 
   test("streamed dropDuplicates over a doubled source equals batch distinct") {
-    val src = Files.createTempDirectory("graft_stream_dup")
+    val src = tempDir("graft_stream_dup")
     val orig = Paths.get(s"${sf()}/events.parquet")
     Files.copy(orig, src.resolve("a.parquet"), StandardCopyOption.REPLACE_EXISTING)
     Files.copy(orig, src.resolve("b.parquet"), StandardCopyOption.REPLACE_EXISTING)

@@ -21,7 +21,7 @@ object CoreParityQueries {
 
   /** DuckDB spelling of [[graft.analysis.CoverageQueries.exactAvg]]:
     * same floor-quantized integer accumulation, same division order. */
-  private def exactAvgSql(e: String): String =
+  private[graft] def exactAvgSql(e: String): String =
     s"CAST(sum(CAST(floor(($e) * 1000000.0) AS BIGINT)) AS DOUBLE) / count($e) / 1000000.0"
 
   // The before/after mirrors (q04-q06, q101, q39): one per-side

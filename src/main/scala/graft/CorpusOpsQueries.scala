@@ -505,12 +505,10 @@ object CorpusOpsQueries {
     // quantized integer fold, so dist2 is bitwise-deterministic and
     // the oracle replays it exactly — no FP-sum order dependence.
     Q("q97_embedding_outliers",
-      """WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
         |g AS (SELECT label, i.i AS dim, CAST(embedding[i.i] AS DOUBLE) AS v
         |      FROM e CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i) i),
-        |c AS (SELECT label, dim,
-        |        CAST(sum(CAST(floor(v * 1000000.0) AS BIGINT)) AS DOUBLE)
-        |          / count(v) / 1000000.0 AS c
+        |c AS (SELECT label, dim, ${CoreParityQueries.exactAvgSql("v")} AS c
         |      FROM g GROUP BY 1, 2),
         |ca AS (SELECT label, list(c ORDER BY dim) AS carr FROM c GROUP BY label),
         |d AS (SELECT e.vec_id, e.label,

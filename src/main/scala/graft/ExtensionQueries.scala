@@ -432,8 +432,7 @@ object ExtensionOracles {
        |  SELECT * FROM scored WHERE quality >= 0.5 AND lang_pred <> 'und')
        |SELECT lang_pred, count(*) AS n_docs,
        |  CAST(sum(len(toks)) AS BIGINT) AS total_tokens,
-       |  CAST(sum(CAST(floor(quality * 1000000.0) AS BIGINT)) AS DOUBLE)
-       |    / count(quality) / 1000000.0 AS avg_quality
+       |  ${CoreParityQueries.exactAvgSql("quality")} AS avg_quality
        |FROM kept GROUP BY lang_pred ORDER BY lang_pred""".stripMargin
 
   val langId: String = {
@@ -694,13 +693,13 @@ object ExtensionOracles {
   }
 
   val labelStats: String =
-    """WITH n AS (
+    s"""WITH n AS (
       |  SELECT label,
       |    sqrt(list_sum(list_transform(generate_series(1, len(embedding)),
       |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS norm
       |  FROM embeddings)
       |SELECT label, count(*) AS n,
-      |  CAST(sum(CAST(floor(norm * 1000000.0) AS BIGINT)) AS DOUBLE) / count(norm) / 1000000.0 AS avg_norm
+      |  ${CoreParityQueries.exactAvgSql("norm")} AS avg_norm
       |FROM n GROUP BY label ORDER BY label""".stripMargin
 
   /** Unrounded mirror of WelchExactTTest: exact quantized means/vars

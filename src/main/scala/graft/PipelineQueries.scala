@@ -291,8 +291,7 @@ object PipelineQueries {
          |         % 1000000) < th.threshold)
          |SELECT lang, count(*) AS n_docs,
          |  CAST(sum(len(toks)) AS BIGINT) AS total_tokens,
-         |  CAST(sum(CAST(floor(quality * 1000000.0) AS BIGINT)) AS DOUBLE)
-         |    / count(quality) / 1000000.0 AS avg_quality
+         |  ${CoreParityQueries.exactAvgSql("quality")} AS avg_quality
          |FROM mixed GROUP BY lang ORDER BY lang""".stripMargin
     }) { (s, dir) =>
       // single-file parquet = ONE scan partition (the q132 NOTES

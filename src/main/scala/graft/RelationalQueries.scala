@@ -25,12 +25,12 @@ object RelationalQueries {
     // TPC-H Q1-shaped pricing summary: the canonical partial-agg
     // (map-side combine) + tiny shuffle plan; 4 groups at any scale.
     Q("q11_pricing_summary",
-      """SELECT l_returnflag, l_linestatus,
+      s"""SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
         |  CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(sum(CAST(floor(l_quantity * 1000000.0) AS BIGINT)) AS DOUBLE) / count(l_quantity) / 1000000.0 AS avg_qty,
-        |  CAST(sum(CAST(floor(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / count(l_extendedprice) / 1000000.0 AS avg_price,
+        |  ${CoreParityQueries.exactAvgSql("l_quantity")} AS avg_qty,
+        |  ${CoreParityQueries.exactAvgSql("l_extendedprice")} AS avg_price,
         |  count(*) AS n_rows
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1999-12-31 00:00:00'

@@ -171,9 +171,8 @@ object PairTxn {
   private def stage(
       spark: SparkSession, c: SideCommit,
       coordRoot: Path, id: String): StagedSide = {
-    val (fs, root) = TxTable.fsOf(spark, c.dir)
+    val (tblStore, root) = TxTable.storeOf(spark, c.dir)
     val base = TxTable.latestVersion(spark, c.dir).getOrElse(0L)
-    val (tblStore, _) = TxTable.storeOf(spark, c.dir)
     // the sentinel lands BEFORE the first data byte (no window for
     // vacuum to mistake this txn's staged files for aged orphans);
     // tolerate an existing one (an OCC retry restages the same
@@ -187,21 +186,9 @@ object PairTxn {
         val baseManifest =
           if (base == 0L) TxTable.Manifest(0L, Seq.empty)
           else TxTable.readManifest(spark, p.dir, base)
-        val commitDir = TxTable.newCommitDir(root, base + 1)
-        val writer = p.df.write.mode("errorifexists")
-        p.partitionCol.fold(writer)(c => writer.partitionBy(c))
-          .parquet(commitDir.toString)
-        val listed = TxTable.listCommitFiles(fs, root, commitDir, p.partitionCol)
-        val entries =
-          if (p.replace)
-            TxTable.gatherFileMeta(spark, root, listed, p.statsCols, None,
-              ndvMirrorable = false,
-              fileSchema = Some(TxTable.dataFileSchema(p.df.schema, p.partitionCol)))
-          else
-            TxTable.propagateSkipping(spark, root, baseManifest, listed,
-              p.df.schema, p.partitionCol)
-        TxTable.enforceConstraints(spark, root, baseManifest, entries,
-          Some(p.df.schema.json))
+        val (_, entries) = TxTable.writeCommitFiles(spark, root, baseManifest,
+          p.df, p.partitionCol,
+          if (p.replace) Some(TxTable.FileMetaSpec(p.statsCols)) else None)
         val newFiles = if (p.replace) entries else baseManifest.files ++ entries
         val extraProps =
           if (p.replace && p.statsCols.nonEmpty) Map(TxTable.NdvLaneProp -> "xx")

@@ -162,16 +162,18 @@ object TxTable {
     * parquet footers for schema inference (at 100 TB that is one
     * footer round-trip per live commit dir per query, and locally it
     * was the single largest cost of every TxTable operation). A dir
-    * absent from the map falls back to inference. */
-  /** `txns` maps a writer application id to the highest transaction
+    * absent from the map falls back to inference.
+    *
+    * `txns` maps a writer application id to the highest transaction
     * version it has committed (accumulated along the log; checkpoints
     * carry the full map) — the idempotent-writer ledger: an
     * at-least-once producer (foreachBatch replays its last micro-batch
     * after a crash between table commit and stream checkpoint) tags
     * each commit with (appId, batchId), and a re-application of an
     * already-recorded version is SKIPPED instead of double-applying
-    * the changeset. */
-  /** `props` are table properties accumulated along the log (each
+    * the changeset.
+    *
+    * `props` are table properties accumulated along the log (each
     * commit header carries only the entries it SETS; checkpoints carry
     * the full map) — they SURVIVE full-replace commits, like the txn
     * ledger: a compaction around a governed table must not drop its
@@ -181,7 +183,14 @@ object TxTable {
       version: Long, files: Seq[FileEntry],
       schemas: Map[String, String] = Map.empty,
       txns: Map[String, Long] = Map.empty,
-      props: Map[String, String] = Map.empty)
+      props: Map[String, String] = Map.empty) {
+
+    /** True when the ledger already records `txn` (its app at this
+      * version or later): the idempotent-writer gate every tagged
+      * commit checks before it writes anything. */
+    private[graft] def applied(txn: Option[(String, Long)]): Boolean =
+      txn.exists { case (app, ver) => txns.get(app).exists(_ >= ver) }
+  }
 
   final class CommitConflictException(msg: String)
     extends java.util.ConcurrentModificationException(msg)
@@ -578,6 +587,19 @@ object TxTable {
     readSnapshots(store, root, versions)
   }
 
+  /** The latest version of an initialized table; `op` names the
+    * refused operation when there is none. */
+  private def latestOrFail(spark: SparkSession, dir: String, op: String): Long =
+    latestVersion(spark, dir).getOrElse(
+      sys.error(s"$op needs an initialized table at $dir"))
+
+  /** The manifest a mutation builds on: version `at` (a caller's
+    * optimistic base) or else the latest one. */
+  private def openTable(
+      spark: SparkSession, dir: String, op: String,
+      at: Option[Long] = None): Manifest =
+    readManifest(spark, dir, at.getOrElse(latestOrFail(spark, dir, op)))
+
   /** DESCRIBE HISTORY: one row per RETAINED version — (version, op,
     * base, n_files, n_added, n_carried). One read per delta manifest
     * (change-sized) in a single forward replay; on a vacuumed table the
@@ -627,13 +649,6 @@ object TxTable {
       "commit_ts")
   }
 
-  /** Publish version `base + 1`: a change-sized DELTA manifest (adds =
-    * fresh paths, removes = base paths absent from the new state) or a
-    * "full" manifest for replace commits; plus a checkpoint when the
-    * version hits the [[checkpointInterval]] cadence or the commit is
-    * full. Refuses (and throws [[CommitConflictException]]) if that
-    * manifest already exists — the competing writer won; this writer's
-    * data files are orphans for [[vacuum]]. */
   /** A commit fully RENDERED but not yet published: the version it
     * targets, the manifest bytes, and the checkpoint bytes when the
     * cadence (or a full commit) calls for one. Staging is pure — no
@@ -704,6 +719,13 @@ object TxTable {
     staged.version
   }
 
+  /** Publish version `base + 1`: a change-sized DELTA manifest (adds =
+    * fresh paths, removes = base paths absent from the new state) or a
+    * "full" manifest for replace commits; plus a checkpoint when the
+    * version hits the [[checkpointInterval]] cadence or the commit is
+    * full. Refuses (and throws [[CommitConflictException]]) if that
+    * manifest already exists — the competing writer won; this writer's
+    * data files are orphans for [[vacuum]]. */
   private def commit(
       store: LogStore, root: Path, baseManifest: Manifest,
       newFiles: Seq[FileEntry], newSchema: Option[String],
@@ -727,8 +749,7 @@ object TxTable {
     * call, same stance as Delta's RESTORE). */
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long = {
     val (store, root) = storeOf(spark, dir)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"restore needs an initialized table at $dir"))
+    val base = latestOrFail(spark, dir, "restore")
     if (toVersion == base) return base
     val ms = readManifests(spark, dir, Seq(toVersion, base))
     // carry only the dirs the restored version actually references —
@@ -753,9 +774,7 @@ object TxTable {
   def setTableProperty(
       spark: SparkSession, dir: String, key: String, value: String): Long = {
     val (store, root) = storeOf(spark, dir)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"setTableProperty needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
+    val m = openTable(spark, dir, "setTableProperty")
     commit(store, root, m, m.files, newSchema = None, op = "setprop",
       full = false, extraProps = Map(key -> value))
   }
@@ -772,9 +791,7 @@ object TxTable {
   def addCheckConstraint(
       spark: SparkSession, dir: String, name: String, exprSql: String): Long = {
     val (store, root) = storeOf(spark, dir)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"addCheckConstraint needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
+    val m = openTable(spark, dir, "addCheckConstraint")
     if (m.files.nonEmpty) {
       val bad = readFiles(spark, root, m.files, m.schemas)
         .where(!coalesce(expr(exprSql), lit(false))).count()
@@ -801,7 +818,7 @@ object TxTable {
     * scan grounds that induction. Zero cost when the table has no
     * constraints. A constraint on a column the evolved schema dropped
     * fails analysis here — loud, by design. */
-  private[ext] def enforceConstraints(
+  private def enforceConstraints(
       spark: SparkSession, root: Path, m: Manifest,
       fresh: Seq[FileEntry], schemaJson: Option[String]): Unit = {
     val cs = constraintsOf(m.props)
@@ -821,10 +838,84 @@ object TxTable {
         violated.mkString("; "))
   }
 
+  /** Which per-file skipping metadata a commit's fresh files record
+    * ([[gatherFileMeta]]): min/max, NDV sketch and NULL count for each
+    * of `statsCols`, an optional (col, mBits, numHashes) Bloom filter,
+    * and the NDV hash lane (`ndvMirrorable` = the md5 oracle lane, see
+    * [[NdvLaneProp]]). A replace states it; every other commit
+    * inherits it from its base ([[inheritedMeta]]). */
+  private[ext] final case class FileMetaSpec(
+      statsCols: Seq[String],
+      bloom: Option[(String, Int, Int)] = None,
+      ndvMirrorable: Boolean = false)
+
+  /** Re-derive the skipping metadata the BASE manifest carried (range
+    * stats columns, NDV sketches, the bloom column) for a commit's
+    * FRESH files, so file skipping SURVIVES merges/DML/compaction
+    * instead of decaying to conservative must-read on every rewritten
+    * file (a long-lived table is mostly rewrites — without this,
+    * skipping quality halves with every wave of DML). Columns absent
+    * from the rewritten schema (an evolution that dropped them) are
+    * skipped. The NDV hash lane follows the table property the base
+    * commit recorded ([[NdvLaneProp]]): per-file register sketches
+    * only compose when every file hashed the same way, so a rewrite
+    * must never flip lanes. */
+  private def inheritedMeta(
+      base: Manifest, written: org.apache.spark.sql.types.StructType): FileMetaSpec = {
+    val freshCols = written.fieldNames.toSeq
+    FileMetaSpec(
+      base.files.flatMap(_.stats.keys).distinct.filter(freshCols.contains),
+      base.files.flatMap(_.bloom).map(b => (b.col, b.bits.length * 64, b.k))
+        .distinct.headOption.filter { case (c, _, _) => freshCols.contains(c) },
+      base.props.get(NdvLaneProp).contains("md5"))
+  }
+
+  /** The one write path of every commit that adds data files (replace,
+    * merges, DML, compaction, [[PairTxn]] sides): writes `rows` into a
+    * fresh `data/v<base+1>-<token>/` dir (`col=value` subdirs when
+    * `partitionCol` is set), lists what the write produced, records
+    * each file's metadata in ONE column-pruned pass over those files
+    * only ([[gatherFileMeta]]: exact row count even with no stats
+    * columns, so every commit keeps COUNT(*) metadata-only), then
+    * validates them against the table's CHECK constraints
+    * ([[enforceConstraints]]). `meta` = None inherits the base's
+    * metadata spec ([[inheritedMeta]]); a replace passes its own.
+    * Returns the commit dir (a caller that finds nothing to publish
+    * deletes it) and the fresh entries; nothing is published.
+    *
+    * `checked = false` is for compaction alone (`compact`,
+    * `purgeTombstoned`, `compactClustered`): it rewrites rows that
+    * are already live, each validated by the commit that wrote it (or
+    * by [[addCheckConstraint]]'s whole-table scan), and adds none, so
+    * a constraint pass would re-prove what the log already guarantees
+    * at the cost of a scan of every rewritten file. */
+  private[ext] def writeCommitFiles(
+      spark: SparkSession, root: Path, base: Manifest, rows: DataFrame,
+      partitionCol: Option[String], meta: Option[FileMetaSpec] = None,
+      checked: Boolean = true): (Path, Seq[FileEntry]) = {
+    val commitDir = new Path(new Path(root, "data"),
+      s"v${base.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}")
+    val writer = rows.write.mode("errorifexists")
+    partitionCol.fold(writer)(writer.partitionBy(_)).parquet(commitDir.toString)
+    val listed = listCommitFiles(
+      root.getFileSystem(spark.sessionState.newHadoopConf()), root, commitDir, partitionCol)
+    // the data files' schema as written: partitionBy lifts the
+    // partition column into the dir names, and a parquet read-back
+    // reports every field nullable
+    val fileSchema = org.apache.spark.sql.types.StructType(
+      rows.schema.filterNot(f => partitionCol.contains(f.name)).map(_.copy(nullable = true)))
+    val fresh =
+      if (listed.isEmpty) listed
+      else gatherFileMeta(spark, root, listed,
+        meta.getOrElse(inheritedMeta(base, rows.schema)), fileSchema)
+    if (checked) enforceConstraints(spark, root, base, fresh, Some(rows.schema.json))
+    (commitDir, fresh)
+  }
+
   /** List the parquet files a commit's write produced, as entries
     * relative to the table root, with partition values parsed from the
     * `col=value` directory names when `partitionCol` is set. */
-  private[ext] def listCommitFiles(
+  private def listCommitFiles(
       fs: FileSystem, root: Path, commitDir: Path,
       partitionCol: Option[String]): Seq[FileEntry] = {
     val it = fs.listFiles(commitDir, true)
@@ -844,10 +935,6 @@ object TxTable {
     }
     out.toSeq
   }
-
-  private[ext] def newCommitDir(root: Path, version: Long): Path =
-    new Path(new Path(root, "data"),
-      s"v$version-${java.util.UUID.randomUUID().toString.take(8)}")
 
   /** ALL per-file skipping metadata for the files just written in ONE
     * bounded scan of the commit's own data (column-pruned to the stats
@@ -872,13 +959,15 @@ object TxTable {
     * the pass costs one map-side-combined exchange of #files ×
     * O(manifest-entry) bytes regardless of row count. A file whose
     * column is all-NULL records NO stats/bloom for it (the read side's
-    * conservative must-read path) instead of NPE-ing the commit. */
-  private[ext] def gatherFileMeta(
+    * conservative must-read path) instead of NPE-ing the commit. The
+    * files' schema is passed in (the commit just wrote them), which
+    * skips the parquet schema-inference job — one Spark job and a
+    * footer read per commit. */
+  private def gatherFileMeta(
       spark: SparkSession, root: Path, entries: Seq[FileEntry],
-      statsCols: Seq[String],
-      bloom: Option[(String, Int, Int)],
-      ndvMirrorable: Boolean,
-      fileSchema: Option[org.apache.spark.sql.types.StructType] = None): Seq[FileEntry] = {
+      meta: FileMetaSpec,
+      fileSchema: org.apache.spark.sql.types.StructType): Seq[FileEntry] = {
+    val FileMetaSpec(statsCols, bloom, ndvMirrorable) = meta
     bloom.foreach { case (_, mBits, _) =>
       // mirror Bloom.build's contract: a non-multiple-of-64 width would
       // allocate floor(mBits/64) longs while Bloom.positions yields
@@ -900,11 +989,7 @@ object TxTable {
       BloomPack.agg(col(c).cast("string"), mBits, k).as("_bloom") }.toSeq
     val aggs = count(lit(1)).as("_rc") +: (statAggs ++ bloomAgg)
     val bloomIdx = 2 + 4 * statsCols.size
-    // the commit paths just WROTE these files and pass their schema in,
-    // skipping the parquet schema-inference job (one spark job + footer
-    // read per commit, pure ingest-path overhead — guide §6); absent a
-    // known schema (no caller today) the reader infers as before
-    val byFile = fileSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(
+    val byFile = spark.read.schema(fileSchema).parquet(
         entries.map(f => new Path(root, f.path).toString): _*)
       .groupBy(input_file_name().as("_f"))
       .agg(aggs.head, aggs.tail: _*)
@@ -940,48 +1025,6 @@ object TxTable {
           withBloom.copy(stats = m, rows = rc, hll = hll, nulls = nn)
         }
     }
-  }
-
-  /** Re-derive the skipping metadata the BASE manifest carried (range
-    * stats columns, NDV sketches, the bloom column) for a commit's
-    * FRESH files, so file skipping SURVIVES merges/DML/compaction
-    * instead of decaying to conservative must-read on every rewritten
-    * file (a long-lived table is mostly rewrites — without this,
-    * skipping quality halves with every wave of DML). Cost: one extra
-    * column-pruned pass over the fresh files only. Columns absent from
-    * the rewritten schema (an evolution that dropped them) are
-    * skipped. Row counts ride the same single pass even when no stats
-    * columns propagate — every rewrite keeps COUNT(*) metadata-only.
-    * The NDV hash lane follows the table property the base commit
-    * recorded ([[NdvLaneProp]]): per-file register sketches only
-    * compose when every file hashed the same way, so a rewrite must
-    * never flip lanes. */
-  /** The schema of a commit's DATA FILES as written: the frame's own
-    * schema minus the partition column (partitionBy lifts it into the
-    * directory structure), nullability relaxed the way a parquet
-    * read-back reports it. Passing this into [[gatherFileMeta]] skips
-    * the per-commit schema-inference job. */
-  private[ext] def dataFileSchema(
-      written: org.apache.spark.sql.types.StructType,
-      partitionCol: Option[String]): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      written.filterNot(f => partitionCol.contains(f.name))
-        .map(_.copy(nullable = true)))
-
-  private[ext] def propagateSkipping(
-      spark: SparkSession, root: Path, base: Manifest,
-      fresh: Seq[FileEntry],
-      writtenSchema: org.apache.spark.sql.types.StructType,
-      partitionCol: Option[String]): Seq[FileEntry] = {
-    if (fresh.isEmpty) return fresh
-    val freshCols = writtenSchema.fieldNames.toSeq
-    val statsCols = base.files.flatMap(_.stats.keys).distinct.filter(freshCols.contains)
-    val bloomSpec = base.files.flatMap(_.bloom).map(b => (b.col, b.bits.length * 64, b.k))
-      .distinct.headOption
-      .filter { case (c, _, _) => freshCols.contains(c) }
-    gatherFileMeta(spark, root, fresh, statsCols, bloomSpec,
-      ndvMirrorable = base.props.get(NdvLaneProp).contains("md5"),
-      fileSchema = Some(dataFileSchema(writtenSchema, partitionCol)))
   }
 
   /** Estimated distinct count (NDV) of all sketch-carrying columns at
@@ -1146,6 +1189,13 @@ object TxTable {
     }.sum
   }
 
+  /** Table property recording which 60-bit hash lane the per-file NDV
+    * sketches use ("xx" = xxhash64 production default, "md5" = the
+    * SQL-mirrorable oracle lane). Set by every [[commitReplace]] and
+    * honored by every rewrite ([[inheritedMeta]]): registers only
+    * compose across files hashed the same way. */
+  val NdvLaneProp = "graft.ndv.lane"
+
   /** Publish `df` as the COMPLETE next version (full replace; also the
     * init path for version 1). Partitioned layout when `partitionCol`
     * is set — required later for [[mergeChangeSet]]'s pruning.
@@ -1161,13 +1211,6 @@ object TxTable {
     * the false-positive rate — size it ~10× the expected distinct
     * keys per file for ~1 % FPP; a production deployment would
     * side-car filters past a few KB instead of inlining them. */
-  /** Table property recording which 60-bit hash lane the per-file NDV
-    * sketches use ("xx" = xxhash64 production default, "md5" = the
-    * SQL-mirrorable oracle lane). Set by every [[commitReplace]] and
-    * honored by every rewrite ([[propagateSkipping]]): registers only
-    * compose across files hashed the same way. */
-  val NdvLaneProp = "graft.ndv.lane"
-
   def commitReplace(
       spark: SparkSession, dir: String, df: DataFrame,
       partitionCol: Option[String] = None,
@@ -1176,37 +1219,19 @@ object TxTable {
       bloomBits: Int = 1 << 16,
       txn: Option[(String, Long)] = None,
       ndvMirrorable: Boolean = false): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(0L)
+    val (store, root) = storeOf(spark, dir)
+    // the REAL base manifest (when one exists), not an empty stand-in:
+    // a full commit wipes the file state but the idempotent-writer txn
+    // ledger must ride through into this commit's checkpoint
+    val baseManifest = latestVersion(spark, dir)
+      .fold(Manifest(0L, Seq.empty))(readManifest(spark, dir, _))
     // idempotent-writer gate (see mergeChangeSet): a replayed refresh
     // of a materialized view must not stack a second application —
     // checked BEFORE any data is written, so the replay costs one log
     // replay, not a wasted commit dir
-    if (base > 0L && txn.nonEmpty) {
-      val ledger = readManifest(spark, dir, base).txns
-      if (txn.exists { case (app, ver) => ledger.get(app).exists(_ >= ver) })
-        return base
-    }
-    val commitDir = newCommitDir(root, base + 1)
-    val writer = df.write.mode("errorifexists")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(commitDir.toString)
-    val listed = listCommitFiles(fs, root, commitDir, partitionCol)
-    // always runs (even with no stats columns): the same SINGLE pass
-    // records each file's exact row count (what makes COUNT(*)
-    // metadata-only, [[metaCount]]), the stats columns' min/max + NDV
-    // registers, and the bloom when requested — one scan per commit,
-    // never two
-    val entries = gatherFileMeta(spark, root, listed, statsCols,
-      bloomCol.map(c => (c, bloomBits, 4)), ndvMirrorable,
-      fileSchema = Some(dataFileSchema(df.schema, partitionCol)))
-    // the REAL base manifest (when one exists), not an empty stand-in:
-    // a full commit wipes the file state but the idempotent-writer txn
-    // ledger must ride through into this commit's checkpoint
-    val baseManifest =
-      if (base == 0L) Manifest(0L, Seq.empty) else readManifest(spark, dir, base)
-    enforceConstraints(spark, root, baseManifest, entries, Some(df.schema.json))
+    if (baseManifest.applied(txn)) return baseManifest.version
+    val (_, entries) = writeCommitFiles(spark, root, baseManifest, df, partitionCol,
+      Some(FileMetaSpec(statsCols, bloomCol.map(c => (c, bloomBits, 4)), ndvMirrorable)))
     // the lane prop is (re)stated on every full replace — a full
     // commit DEFINES the file population, so its lane overrides any
     // earlier one and rewrites propagate it consistently
@@ -1647,14 +1672,6 @@ object TxTable {
       spark.sessionState.conf.numShufflePartitions).fold(agged)(agged.coalesce)
   }
 
-  /** Read entries as one DataFrame. Files are grouped by their commit
-    * directory so each group reads with its own `basePath` (restoring
-    * the partition column the `col=value` layout encodes); the union
-    * is bounded by the number of commits still contributing files.
-    * Groups whose dir has a log-carried schema read WITHOUT opening a
-    * single parquet footer (the declared schema covers data + the
-    * partition column, which Spark fills from the dir value at the
-    * declared type); unknown dirs fall back to inference. */
   /** Reserved physical-row-identity columns projected by
     * `withRowId` reads: the ROOT-RELATIVE file path (exactly the
     * manifest's `FileEntry.path`, e.g. `data/v3-ab12cd34/pbucket=6/
@@ -1670,12 +1687,28 @@ object TxTable {
   private[graft] val DvFileCol = "__graft_dv_file"
   private[graft] val DvPosCol = "__graft_dv_pos"
 
-  /** Write `doomed`'s ([[DvFileCol]], [[DvPosCol]]) row identities as a
-    * deletion-vector sidecar at `root/dvRel` — ONE row per tombstoned
-    * file, `(file: root-relative path, bits: packed bitmap, n: count)`
-    * — and return the per-file tombstone counts for the manifest's
-    * [[DvRef]]s. Bitmap sizing: dense container ∝ position span/8,
-    * sparse ∝ 8·count, whichever is smaller per file ([[DvBitmap]]);
+  /** The tombstones one merge-on-read commit adds: its sidecar dir
+    * (root-relative, under `dv/`) and the exact tombstone count of each
+    * file it hits. Empty when nothing matched; the sidecar is then
+    * already deleted. */
+  private final case class Tombstones(dir: String, counts: Map[String, Long]) {
+    def isEmpty: Boolean = counts.isEmpty
+
+    /** `files` with this commit's [[DvRef]] stacked on every entry it
+      * tombstones; the others unchanged. */
+    def stackOn(files: Seq[FileEntry]): Seq[FileEntry] =
+      files.map(f => counts.get(f.path).fold(f)(n => f.copy(dvs = f.dvs :+ DvRef(dir, n))))
+  }
+
+  /** Write `doomed`'s ([[DvFileCol]], [[DvPosCol]]) row identities as
+    * the deletion-vector sidecar of the commit on `base`
+    * (`dv/v<base+1>-<token>`) — ONE row per tombstoned file,
+    * `(file: root-relative path, bits: packed bitmap, n: count)` — and
+    * return the per-file tombstone counts for the manifest's
+    * [[DvRef]]s. A sidecar that tombstones nothing is deleted at once,
+    * so no caller publishes or leaves an empty one. Bitmap sizing:
+    * dense container ∝ position span/8, sparse ∝ 8·count, whichever
+    * is smaller per file ([[DvBitmap]]);
     * versus a row-per-tombstone sidecar this drops the path string
     * from every tombstone and turns the read side's per-row anti-join
     * probe into a static bitmap test. The position gather is the
@@ -1690,8 +1723,9 @@ object TxTable {
     * yields each visible row once; the changeset path vacates keys
     * via one semi-join). */
   private def writeDvSidecar(
-      spark: SparkSession, root: Path, dvRel: String,
-      doomed: DataFrame): Map[String, Long] = {
+      spark: SparkSession, root: Path, base: Manifest,
+      doomed: DataFrame): Tombstones = {
+    val dvRel = s"dv/v${base.version + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
     val dvPath = new Path(root, dvRel)
     doomed.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
       .groupBy("file")
@@ -1702,8 +1736,11 @@ object TxTable {
     // the bitmap bytes stay on disk). The schema is declared (we wrote
     // this sidecar two lines up) so the read-back skips the
     // schema-inference job; `bits` is simply never requested
-    spark.read.schema("file STRING, n BIGINT").parquet(dvPath.toString)
+    val counts = spark.read.schema("file STRING, n BIGINT").parquet(dvPath.toString)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    if (counts.isEmpty)
+      root.getFileSystem(spark.sessionState.newHadoopConf()).delete(dvPath, true)
+    Tombstones(dvRel, counts)
   }
 
   /** Root-relative path of the scanned file, as a Column. Derived
@@ -1718,8 +1755,15 @@ object TxTable {
   private def relPathCol(root: Path): org.apache.spark.sql.Column =
     RelPath(col("_metadata.file_path"), root.toUri.getPath + "/")
 
-  /** Raw per-commit-dir union (no DV application) — see [[readFiles]]
-    * for the schema-group rationale. */
+  /** Read entries as one DataFrame, with no DV application. Files are
+    * grouped by their commit directory so each group reads with its
+    * own `basePath` (restoring the partition column the `col=value`
+    * layout encodes); the union is bounded by the number of commits
+    * still contributing files. Groups whose dir has a log-carried
+    * schema read WITHOUT opening a single parquet footer (the declared
+    * schema covers data + the partition column, which Spark fills from
+    * the dir value at the declared type); unknown dirs fall back to
+    * inference. */
   private def rawRead(
       spark: SparkSession, root: Path, files: Seq[FileEntry],
       schemas: Map[String, String], withRowId: Boolean): DataFrame = {
@@ -1936,28 +1980,6 @@ object TxTable {
     sliceOrEmpty(spark, root, hit, m.files, m.schemas)
   }
 
-  /** MERGE a changeset (the [[Cdc.applyChangeSet]] contract: `keyCol`,
-    * `opCol` ∈ insert/update/delete, full payload columns) into the
-    * table as one atomic commit. Only the files of TOUCHED partitions
-    * are read and rewritten; untouched entries carry forward by
-    * reference (and never appear in the delta manifest at all).
-    * Readers at any published version are unaffected; a concurrent
-    * commit on the same base makes this one throw
-    * [[CommitConflictException]] with the table left at the winner's
-    * version. Returns the new version.
-    *
-    * Partition-immutability contract (shared with
-    * [[graft.streaming.MergeStream]]): `partitionCol` must be a pure
-    * function of `keyCol` (every lane derives it as `key % N`), so an
-    * update/delete row always lands in the partition its stored row
-    * lives in. A changeset row carrying a DIFFERENT partition value
-    * for an existing key would leave the old row alive in a
-    * carried-forward file (the touched set comes from the changeset's
-    * partition values) — that is a key-relocation, which in a
-    * partition-pruned merge is modeled as delete-in-old + insert-in-new.
-    * Partition values must also be path-literal (integral / simple
-    * strings) — enforced below, because Spark ESCAPES exotic values in
-    * directory names while the manifest carries them raw. */
   /** Evaluate `changes` ONCE for the whole merge, and return its
     * distinct `partitionCol` values alongside: both merge paths
     * consume the changeset several times (the touched-partition
@@ -2022,6 +2044,28 @@ object TxTable {
     }
   }
 
+  /** MERGE a changeset (the [[Cdc.applyChangeSet]] contract: `keyCol`,
+    * `opCol` ∈ insert/update/delete, full payload columns) into the
+    * table as one atomic commit. Only the files of TOUCHED partitions
+    * are read and rewritten; untouched entries carry forward by
+    * reference (and never appear in the delta manifest at all).
+    * Readers at any published version are unaffected; a concurrent
+    * commit on the same base makes this one throw
+    * [[CommitConflictException]] with the table left at the winner's
+    * version. Returns the new version.
+    *
+    * Partition-immutability contract (shared with
+    * [[graft.streaming.MergeStream]]): `partitionCol` must be a pure
+    * function of `keyCol` (every lane derives it as `key % N`), so an
+    * update/delete row always lands in the partition its stored row
+    * lives in. A changeset row carrying a DIFFERENT partition value
+    * for an existing key would leave the old row alive in a
+    * carried-forward file (the touched set comes from the changeset's
+    * partition values) — that is a key-relocation, which in a
+    * partition-pruned merge is modeled as delete-in-old + insert-in-new.
+    * Partition values must also be path-literal (integral / simple
+    * strings) — enforced below, because Spark ESCAPES exotic values in
+    * directory names while the manifest carries them raw. */
   def mergeChangeSet(
       spark: SparkSession, dir: String, changes: DataFrame,
       keyCol: String, opCol: String, partitionCol: String,
@@ -2029,23 +2073,19 @@ object TxTable {
       evolveSchema: Boolean = false,
       txn: Option[(String, Long)] = None,
       touchedHint: Option[Seq[Any]] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
+    val (store, root) = storeOf(spark, dir)
     // expectedBase = optimistic concurrency from a version the caller
     // read earlier: if someone else committed since, the publication
     // of expectedBase+1 conflicts and this merge throws instead of
     // silently dropping the competing commit's changes
-    val base = expectedBase.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"mergeChangeSet needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
+    val m = openTable(spark, dir, "mergeChangeSet", expectedBase)
     // idempotent-writer gate: an at-least-once producer (foreachBatch
     // replaying its last batch after a crash between table commit and
     // stream checkpoint) tags commits with a monotone (appId, version);
     // a changeset whose version the ledger already records is a no-op
     // at the current version instead of a DOUBLE APPLICATION (inserts
     // would duplicate — applyChangeSet treats them as new keys)
-    if (txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) })
-      return base
+    if (m.applied(txn)) return m.version
     // bounded driver collect: ≤ #partition values by definition —
     // rides the materializing job (or the caller's hint)
     withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touchedRaw) =>
@@ -2060,13 +2100,7 @@ object TxTable {
     // files; carried-forward files keep the old shape and read NULL in
     // the new columns through readFiles' allowMissingColumns union
     val merged = Cdc.applyChangeSet(slice, ch, keyCol, opCol, evolveSchema)
-    val commitDir = newCommitDir(root, base + 1)
-    merged.write.mode("errorifexists")
-      .partitionBy(partitionCol).parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, Some(partitionCol)),
-      merged.schema, Some(partitionCol))
-    enforceConstraints(spark, root, m, fresh, Some(merged.schema.json))
+    val (_, fresh) = writeCommitFiles(spark, root, m, merged, Some(partitionCol))
     commit(store, root, m, keep ++ fresh, Some(merged.schema.json),
       "merge", full = false, txn = txn)
     }
@@ -2106,8 +2140,7 @@ object TxTable {
       touchedHint: Option[Seq[Any]] = None): Long =
     stageMergeDv(spark, dir, changes, keyCol, opCol, partitionCol,
       evolveSchema, txn, touchedHint) match {
-      case None => latestVersion(spark, dir).getOrElse(
-        sys.error(s"mergeChangeSetDv needs an initialized table at $dir"))
+      case None => latestOrFail(spark, dir, "mergeChangeSetDv")
       case Some(staged) =>
         val (store, root) = storeOf(spark, dir)
         publishStaged(store, root, staged)
@@ -2130,11 +2163,8 @@ object TxTable {
       txn: Option[(String, Long)] = None,
       touchedHint: Option[Seq[Any]] = None): Option[StagedCommit] = {
     val (fs, root) = fsOf(spark, dir)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"mergeChangeSetDv needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) })
-      return None
+    val m = openTable(spark, dir, "mergeChangeSetDv")
+    if (m.applied(txn)) return None
     // bounded driver collect: ≤ #partition values by definition —
     // rides the materializing job (or the caller's hint)
     withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touchedRaw) =>
@@ -2155,35 +2185,18 @@ object TxTable {
     // tombstones are naturally distinct regardless of changeset dups
     val gone = ch.where(col(opCol).isin("update", "delete"))
       .select(col(keyCol))
-    val doomed = slice.join(gone, Seq(keyCol), "left_semi")
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dvRel = s"dv/v${base + 1}-$token"
-    val dvPath = new Path(root, dvRel)
-    val counts = writeDvSidecar(spark, root, dvRel, doomed)
+    val tombs = writeDvSidecar(spark, root, m, slice.join(gone, Seq(keyCol), "left_semi"))
     val tSchema = slice.schema
     val added = ch.where(col(opCol).isin("insert", "update"))
       .select(targetCols.map(c =>
         col(c).cast(tSchema(c).dataType).as(c)) ++ extras.map(col): _*)
-    val commitDir = newCommitDir(root, base + 1)
-    added.write.mode("errorifexists").partitionBy(partitionCol)
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, Some(partitionCol)),
-      added.schema, Some(partitionCol))
-    if (counts.isEmpty && fresh.isEmpty) {
+    val (commitDir, fresh) = writeCommitFiles(spark, root, m, added, Some(partitionCol))
+    if (tombs.isEmpty && fresh.isEmpty) {
       // no tombstones, nothing appended: the commit would be a no-op —
       // delete the debris and stage nothing
-      fs.delete(dvPath, true); fs.delete(commitDir, true); None
+      fs.delete(commitDir, true); None
     } else {
-      if (counts.isEmpty) fs.delete(dvPath, true)
-      enforceConstraints(spark, root, m, fresh, Some(added.schema.json))
-      val updated = m.files.map { f =>
-        counts.get(f.path) match {
-          case Some(n) => f.copy(dvs = f.dvs :+ DvRef(dvRel, n))
-          case None => f
-        }
-      }
-      Some(stageCommit(m, updated ++ fresh, newSchema = None,
+      Some(stageCommit(m, tombs.stackOn(m.files) ++ fresh, newSchema = None,
         op = "merge-cs-dv", full = false,
         extraSchemas = fresh.headOption
           .map(f => dirOf(f.path) -> added.schema.json).toMap,
@@ -2213,21 +2226,6 @@ object TxTable {
     }
     sys.error("unreachable")
   }
-
-  /** [[mergeChangeSet]] under [[withConflictRetry]] — kept as a named
-    * convenience because it is the multi-writer workhorse. Writers
-    * whose changesets touch the same KEYS still serialize correctly:
-    * last committed merge wins per key, exactly as sequential
-    * application would. */
-  def mergeChangeSetWithRetry(
-      spark: SparkSession, dir: String, changes: DataFrame,
-      keyCol: String, opCol: String, partitionCol: String,
-      maxRetries: Int = 5, evolveSchema: Boolean = false,
-      txn: Option[(String, Long)] = None): Long =
-    withConflictRetry(maxRetries) {
-      mergeChangeSet(spark, dir, changes, keyCol, opCol,
-        partitionCol, evolveSchema = evolveSchema, txn = txn)
-    }
 
   /** Conditional MERGE INTO (the SQL `MERGE INTO t USING s ON
     * t.key = s.key WHEN MATCHED [AND cond] THEN UPDATE/DELETE WHEN NOT
@@ -2270,13 +2268,9 @@ object TxTable {
       whenMatchedUpdateCond: Option[org.apache.spark.sql.Column] = None,
       whenNotMatchedInsert: Option[org.apache.spark.sql.Column] = None,
       txn: Option[(String, Long)] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"mergeInto needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) })
-      return base
+    val (store, root) = storeOf(spark, dir)
+    val m = openTable(spark, dir, "mergeInto")
+    if (m.applied(txn)) return m.version
     // bounded driver collect: ≤ #partition values by definition
     val touched = source.select(col(partitionCol)).distinct()
       .collect().map(r => String.valueOf(r.get(0))).toSet
@@ -2313,13 +2307,7 @@ object TxTable {
         .as(f.name)
     }
     val merged = joined.where(keepRow).select(outCols.toIndexedSeq: _*)
-    val commitDir = newCommitDir(root, base + 1)
-    merged.write.mode("errorifexists")
-      .partitionBy(partitionCol).parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, Some(partitionCol)),
-      merged.schema, Some(partitionCol))
-    enforceConstraints(spark, root, m, fresh, Some(merged.schema.json))
+    val (_, fresh) = writeCommitFiles(spark, root, m, merged, Some(partitionCol))
     commit(store, root, m, keep ++ fresh, Some(merged.schema.json),
       "merge", full = false, txn = txn)
   }
@@ -2340,11 +2328,8 @@ object TxTable {
     * sink fragmentation case (many tiny files per partition) is the
     * one the commit log itself creates. */
   def compact(spark: SparkSession, dir: String, partitionCol: String): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"compact needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
+    val (store, root) = storeOf(spark, dir)
+    val m = openTable(spark, dir, "compact")
     val byBucket = m.files.groupBy(_.bucket)
     // a partition needs work when fragmented OR carrying deletion
     // vectors: compaction is also the DV reconciler — the rewrite
@@ -2353,16 +2338,12 @@ object TxTable {
     val fragmented = byBucket.filter { case (_, fs0) =>
       fs0.size > 1 || fs0.exists(_.dvs.nonEmpty)
     }.keys.toSet
-    if (fragmented.isEmpty) return base
+    if (fragmented.isEmpty) return m.version
     val (doomed, keep) = m.files.partition(f => fragmented(f.bucket))
     val merged = readFiles(spark, root, doomed, m.schemas)
       .repartition(col(partitionCol))
-    val commitDir = newCommitDir(root, base + 1)
-    merged.write.mode("errorifexists")
-      .partitionBy(partitionCol).parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, Some(partitionCol)),
-      merged.schema, Some(partitionCol))
+    val (_, fresh) = writeCommitFiles(spark, root, m, merged, Some(partitionCol),
+      checked = false)
     commit(store, root, m, keep ++ fresh, Some(merged.schema.json),
       "compact", full = false)
   }
@@ -2383,26 +2364,18 @@ object TxTable {
   def purgeTombstoned(
       spark: SparkSession, dir: String,
       partitionCol: Option[String] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"purgeTombstoned needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
+    val (store, root) = storeOf(spark, dir)
+    val m = openTable(spark, dir, "purgeTombstoned")
     val (doomed, keep) = m.files.partition(_.dvs.nonEmpty)
-    if (doomed.isEmpty) return base // nothing tombstoned — no-op
+    if (doomed.isEmpty) return m.version // nothing tombstoned — no-op
     require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
       s"table at $dir is partitioned — pass partitionCol so the purged " +
         "files keep the bucket dirs partition-pruned merges rely on")
     // DV-aware read of ONLY the carrying files: tombstoned rows vanish
     // physically, surviving rows rewrite verbatim
     val merged = readFiles(spark, root, doomed, m.schemas)
-    val commitDir = newCommitDir(root, base + 1)
-    val writer = merged.write.mode("errorifexists")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, partitionCol),
-      merged.schema, partitionCol)
+    val (_, fresh) = writeCommitFiles(spark, root, m, merged, partitionCol,
+      checked = false)
     commit(store, root, m, keep ++ fresh, Some(merged.schema.json),
       "purge", full = false)
   }
@@ -2433,9 +2406,7 @@ object TxTable {
       maxFilesPerPartition: Int = 8, maxDvRatio: Double = 0.1): Option[Long] = {
     require(maxFilesPerPartition > 0 && maxDvRatio >= 0.0,
       "thresholds must be positive")
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"maintainIfNeeded needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
+    val m = openTable(spark, dir, "maintainIfNeeded")
     if (m.files.isEmpty) return None
     val fragmented = m.files.groupBy(_.bucket)
       .exists { case (_, fs0) => fs0.size > maxFilesPerPartition }
@@ -2484,12 +2455,9 @@ object TxTable {
       spark: SparkSession, dir: String, partitionCol: Option[String],
       clusterX: String, clusterY: String, targetFiles: Int): Long = {
     require(targetFiles > 0, "targetFiles must be positive")
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"compactClustered needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (m.files.isEmpty) return base // nothing to re-cluster
+    val (store, root) = storeOf(spark, dir)
+    val m = openTable(spark, dir, "compactClustered")
+    if (m.files.isEmpty) return m.version // nothing to re-cluster
     require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
       s"table at $dir is partitioned — pass partitionCol so the " +
         "re-layout keeps the bucket dirs partition-pruned merges rely on")
@@ -2498,13 +2466,8 @@ object TxTable {
     val ordered = readFiles(spark, root, m.files, m.schemas)
       .repartitionByRange(targetFiles, keys: _*)
       .sortWithinPartitions(keys: _*)
-    val commitDir = newCommitDir(root, base + 1)
-    val writer = ordered.write.mode("errorifexists")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, partitionCol),
-      ordered.schema, partitionCol)
+    val (_, fresh) = writeCommitFiles(spark, root, m, ordered, partitionCol,
+      checked = false)
     commit(store, root, m, fresh, Some(ordered.schema.json),
       "optimize-zorder", full = false)
   }
@@ -2627,12 +2590,9 @@ object TxTable {
       spark: SparkSession, dir: String, pred: org.apache.spark.sql.Column,
       partitionCol: Option[String], op: String)(
       transform: DataFrame => DataFrame): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"DML needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (m.files.isEmpty) return base // nothing to match on an emptied table
+    val (store, root) = storeOf(spark, dir)
+    val m = openTable(spark, dir, "DML")
+    if (m.files.isEmpty) return m.version // nothing to match on an emptied table
     require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
       s"table at $dir is partitioned — pass partitionCol so rewritten " +
         "files keep the layout (a bucket-less rewrite would be invisible " +
@@ -2645,20 +2605,13 @@ object TxTable {
       .where(pred)
       .select(col(DvFileCol)).distinct()
       .collect().map(_.getString(0)).toSet
-    if (touchedPaths.isEmpty) return base
+    if (touchedPaths.isEmpty) return m.version
     // root-relative match — bare NAMES collide across partition dirs
     // of one write job, which would rewrite every same-named sibling
     def isTouched(f: FileEntry): Boolean = touchedPaths(f.path)
     val (doomed, keep) = m.files.partition(isTouched)
     val rewritten = transform(readFiles(spark, root, doomed, m.schemas))
-    val commitDir = newCommitDir(root, base + 1)
-    val writer = rewritten.write.mode("errorifexists")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, partitionCol),
-      rewritten.schema, partitionCol)
-    enforceConstraints(spark, root, m, fresh, Some(rewritten.schema.json))
+    val (_, fresh) = writeCommitFiles(spark, root, m, rewritten, partitionCol)
     commit(store, root, m, keep ++ fresh,
       Some(rewritten.schema.json), op, full = false)
   }
@@ -2696,31 +2649,19 @@ object TxTable {
   def deleteWhereDv(
       spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"DML needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (m.files.isEmpty) return base // nothing to tombstone
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dvRel = s"dv/v${base + 1}-$token"
-    val dvPath = new Path(root, dvRel)
+    val (store, root) = storeOf(spark, dir)
+    val m = openTable(spark, dir, "DML")
+    if (m.files.isEmpty) return m.version // nothing to tombstone
     // ONE predicate scan over the currently VISIBLE rows (the DV-aware
     // read excludes prior tombstones, keeping stacked counts disjoint)
-    val counts = writeDvSidecar(spark, root, dvRel,
+    val tombs = writeDvSidecar(spark, root, m,
       readFiles(spark, root, m.files, m.schemas, withRowId = true)
         .where(coalesce(pred, lit(false))))
-    if (counts.isEmpty) { fs.delete(dvPath, true); return base }
-    val updated = m.files.map { f =>
-      counts.get(f.path) match {
-        case Some(n) => f.copy(dvs = f.dvs :+ DvRef(dvRel, n))
-        case None => f
-      }
-    }
+    if (tombs.isEmpty) return m.version
     // no constraint pass: a pure delete cannot introduce a violating
     // row, and no fresh data files exist to validate
-    commit(store, root, m, updated, newSchema = None, op = "delete-dv",
-      full = false)
+    commit(store, root, m, tombs.stackOn(m.files), newSchema = None,
+      op = "delete-dv", full = false)
   }
 
   /** UPDATE ... SET assignments WHERE pred, same economics as
@@ -2774,12 +2715,9 @@ object TxTable {
       pred: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       partitionCol: Option[String] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"DML needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (m.files.isEmpty) return base // nothing to match on an emptied table
+    val (store, root) = storeOf(spark, dir)
+    val m = openTable(spark, dir, "DML")
+    if (m.files.isEmpty) return m.version // nothing to match on an emptied table
     require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
       s"table at $dir is partitioned — pass partitionCol so the new " +
         "images keep the layout (bucket-less appends would be invisible " +
@@ -2791,11 +2729,8 @@ object TxTable {
         withRowId = true)
       .where(coalesce(pred, lit(false)))
       .localCheckpoint()
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dvRel = s"dv/v${base + 1}-$token"
-    val dvPath = new Path(root, dvRel)
-    val counts = writeDvSidecar(spark, root, dvRel, matched)
-    if (counts.isEmpty) { fs.delete(dvPath, true); return base }
+    val tombs = writeDvSidecar(spark, root, m, matched)
+    if (tombs.isEmpty) return m.version
     // new images: RHS staged against the OLD row (no when() gate —
     // every row here matched), reserved row-id columns dropped
     val staged = assignments.zipWithIndex.map { case ((c, e), i) =>
@@ -2807,25 +2742,12 @@ object TxTable {
     val images = staged.foldLeft(withOld) { case (d, (c, tmp, _)) =>
       d.withColumn(c, col(tmp))
     }.drop(staged.map(_._2): _*)
-    val commitDir = newCommitDir(root, base + 1)
-    val writer = images.write.mode("errorifexists")
-    partitionCol.fold(writer)(c => writer.partitionBy(c))
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, partitionCol),
-      images.schema, partitionCol)
-    enforceConstraints(spark, root, m, fresh, Some(images.schema.json))
-    val updated = m.files.map { f =>
-      counts.get(f.path) match {
-        case Some(n) => f.copy(dvs = f.dvs :+ DvRef(dvRel, n))
-        case None => f
-      }
-    }
+    val (_, fresh) = writeCommitFiles(spark, root, m, images, partitionCol)
     // newSchema stays None: the delta's adds include DV-ref-modified
     // entries from OLDER commit dirs, and a header-level schema would
     // be replayed onto ALL add dirs — the fresh dir's schema rides
     // the per-dir map instead
-    commit(store, root, m, updated ++ fresh, newSchema = None,
+    commit(store, root, m, tombs.stackOn(m.files) ++ fresh, newSchema = None,
       op = "update-dv", full = false,
       extraSchemas = Map(dirOf(fresh.head.path) -> images.schema.json))
   }
@@ -2862,11 +2784,8 @@ object TxTable {
       txn: Option[(String, Long)] = None): Long = {
     val (fs, root) = fsOf(spark, dir)
     val store = logStoreFactory(fs)
-    val base = latestVersion(spark, dir).getOrElse(
-      sys.error(s"mergeIntoDv needs an initialized table at $dir"))
-    val m = readManifest(spark, dir, base)
-    if (txn.exists { case (app, ver) => m.txns.get(app).exists(_ >= ver) })
-      return base
+    val m = openTable(spark, dir, "mergeIntoDv")
+    if (m.applied(txn)) return m.version
     // bounded driver collect: ≤ #partition values by definition
     val touched = source.select(col(partitionCol)).distinct()
       .collect().map(r => String.valueOf(r.get(0))).toSet
@@ -2903,10 +2822,7 @@ object TxTable {
       sys.error("MERGE cardinality violation: multiple source rows " +
         s"match the same target row on '$keyCol' with a delete/update " +
         "clause firing — deduplicate the source on the merge key")
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val dvRel = s"dv/v${base + 1}-$token"
-    val dvPath = new Path(root, dvRel)
-    val counts = writeDvSidecar(spark, root, dvRel, changed)
+    val tombs = writeDvSidecar(spark, root, m, changed)
     // new images for the update clause: every RHS sees the OLD t row
     val assign = whenMatchedUpdate.toMap
     val images = changed.where(!deleteCond && updateCond)
@@ -2927,55 +2843,18 @@ object TxTable {
          else lit(null)).cast(f.dataType).as(f.name)
       }.toIndexedSeq: _*)
     val freshRows = images.unionByName(inserts)
-    val commitDir = newCommitDir(root, base + 1)
-    freshRows.write.mode("errorifexists").partitionBy(partitionCol)
-      .parquet(commitDir.toString)
-    val fresh = propagateSkipping(spark, root, m,
-      listCommitFiles(fs, root, commitDir, Some(partitionCol)),
-      freshRows.schema, Some(partitionCol))
-    if (counts.isEmpty && fresh.isEmpty) {
-      fs.delete(dvPath, true); fs.delete(commitDir, true); return base
-    }
-    if (counts.isEmpty) fs.delete(dvPath, true)
-    enforceConstraints(spark, root, m, fresh, Some(freshRows.schema.json))
-    val updated = m.files.map { f =>
-      counts.get(f.path) match {
-        case Some(n) => f.copy(dvs = f.dvs :+ DvRef(dvRel, n))
-        case None => f
-      }
-    }
+    val (commitDir, fresh) = writeCommitFiles(spark, root, m, freshRows, Some(partitionCol))
+    if (tombs.isEmpty && fresh.isEmpty) { fs.delete(commitDir, true); return m.version }
     // newSchema stays None for the same reason as updateWhereDv: the
     // delta's adds include DV-ref-modified entries from OLDER commit
     // dirs; the fresh dir's schema rides the per-dir map
-    commit(store, root, m, updated ++ fresh, newSchema = None,
+    commit(store, root, m, tombs.stackOn(m.files) ++ fresh, newSchema = None,
       op = "merge-dv", full = false,
       extraSchemas = fresh.headOption
         .map(f => dirOf(f.path) -> freshRows.schema.json).toMap,
       txn = txn)
   }
 
-  /** Reclaim files referenced by NO retained manifest and, when
-    * `keepVersions` is set, retire manifests older than the newest
-    * `keepVersions` first (time travel shrinks accordingly). Before
-    * any manifest is dropped, the retention horizon gets a CHECKPOINT
-    * (if the cadence hasn't already written one) so the oldest
-    * retained version stays reconstructible without the dropped delta
-    * tail — the log-cleanup discipline incremental manifests require.
-    * Checkpoints older than the horizon are retired with their
-    * manifests. Returns the number of data files deleted.
-    *
-    * Retention guard: an IN-FLIGHT commit's data files are also
-    * "referenced by no manifest" until its publish — deleting them
-    * would corrupt the version it is about to publish. Files modified
-    * within `retentionMs` of now are therefore spared (the Delta
-    * VACUUM retention discipline; default 7 days). Pass 0 only when
-    * no writer can be active (tests, decommission). The wall-clock
-    * here is the vacuum RUNNER's — writers on skewed clocks are
-    * covered only up to the skew, so keep `retentionMs` comfortably
-    * above any plausible clock drift + commit duration (the same
-    * exposure Delta's VACUUM documents). Unreferenced files OLDER
-    * than the window truly can never become referenced — publication
-    * always targets freshly written dirs. */
   /** [[vacuum]] with WALL-CLOCK version retention (the SQL `VACUUM …
     * RETAIN n HOURS` / log-retention-duration face): keep every
     * version committed within the last `keepMs`, PLUS the newest
@@ -3001,6 +2880,28 @@ object TxTable {
     }
   }
 
+  /** Reclaim files referenced by NO retained manifest and, when
+    * `keepVersions` is set, retire manifests older than the newest
+    * `keepVersions` first (time travel shrinks accordingly). Before
+    * any manifest is dropped, the retention horizon gets a CHECKPOINT
+    * (if the cadence hasn't already written one) so the oldest
+    * retained version stays reconstructible without the dropped delta
+    * tail — the log-cleanup discipline incremental manifests require.
+    * Checkpoints older than the horizon are retired with their
+    * manifests. Returns the number of data files deleted.
+    *
+    * Retention guard: an IN-FLIGHT commit's data files are also
+    * "referenced by no manifest" until its publish — deleting them
+    * would corrupt the version it is about to publish. Files modified
+    * within `retentionMs` of now are therefore spared (the Delta
+    * VACUUM retention discipline; default 7 days). Pass 0 only when
+    * no writer can be active (tests, decommission). The wall-clock
+    * here is the vacuum RUNNER's — writers on skewed clocks are
+    * covered only up to the skew, so keep `retentionMs` comfortably
+    * above any plausible clock drift + commit duration (the same
+    * exposure Delta's VACUUM documents). Unreferenced files OLDER
+    * than the window truly can never become referenced — publication
+    * always targets freshly written dirs. */
   def vacuum(
       spark: SparkSession, dir: String,
       keepVersions: Option[Int] = None,

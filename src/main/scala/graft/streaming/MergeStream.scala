@@ -65,6 +65,19 @@ object MergeStream {
       new java.util.WeakHashMap[SparkSession,
         java.util.concurrent.ConcurrentHashMap[String, MaintenanceMetrics]]())
 
+  /** The default ledger app id of a stream over `changesDir`:
+    * `prefix:` plus the FileSystem-qualified URI of the directory. The
+    * raw string is NOT stable enough — "changes/" vs "./changes" vs an
+    * absolute spelling would mint a fresh ledger and silently defeat
+    * replay dedup — while the qualified URI collapses relative paths,
+    * trailing slashes and scheme defaults to one canonical form. */
+  private def canonicalAppId(
+      spark: SparkSession, prefix: String, changesDir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(changesDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    s"$prefix:${fs.makeQualified(p).toUri}"
+  }
+
   def maintenanceMetrics(
       spark: SparkSession, tableDir: String): MaintenanceMetrics =
     metricsCache.computeIfAbsent(spark, _ =>
@@ -281,16 +294,9 @@ object MergeStream {
     // must be stable across restarts of the SAME logical pipeline:
     // default is the source directory (one feed = one producer), which
     // also survives a rebuilt checkpoint re-numbering its batches over
-    // the same deterministic file order. The raw string is NOT stable
-    // enough — "changes/" vs "./changes" vs an absolute spelling would
-    // mint a fresh ledger and silently defeat replay dedup — so the
-    // default derives from the FileSystem-qualified URI of the
-    // directory, which collapses relative paths, trailing slashes and
-    // scheme defaults to one canonical form.
+    // the same deterministic file order ([[canonicalAppId]]).
     val appId = Option(txnAppId).getOrElse {
-      val p = new org.apache.hadoop.fs.Path(changesDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val canonical = s"merge-stream:${fs.makeQualified(p).toUri}"
+      val canonical = canonicalAppId(spark, "merge-stream", changesDir)
       // upgrade path: tables created before the canonical-URI default
       // hold their ledger under the RAW-string key. Adopting the new
       // key there would orphan that history — a rebuilt checkpoint
@@ -416,11 +422,8 @@ object MergeStream {
     }
     require(maxFilesPerTrigger >= 1,
       s"maxFilesPerTrigger must be >= 1: $maxFilesPerTrigger")
-    val appId = Option(txnAppId).getOrElse {
-      val p = new org.apache.hadoop.fs.Path(changesDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      s"pair-stream:${fs.makeQualified(p).toUri}"
-    }
+    val appId = Option(txnAppId)
+      .getOrElse(canonicalAppId(spark, "pair-stream", changesDir))
     val committed = new java.util.concurrent.atomic.AtomicLong(0L)
     val q = spark.readStream
       .schema(changesSchema)
@@ -456,8 +459,8 @@ object MergeStream {
           // re-add its insert images (duplicating them in the view's
           // input) — the identity is the only correct replay recompute
           val replayed = graft.ext.TxTable.latestVersion(spark, factDir)
-            .map(v => graft.ext.TxTable.readManifest(spark, factDir, v).txns)
-            .exists(_.get(appId).exists(_ >= batchId))
+            .exists(v => graft.ext.TxTable.readManifest(spark, factDir, v)
+              .applied(Some((appId, batchId))))
           val applied =
             if (replayed) cur
             else {

@@ -441,8 +441,9 @@ abstract class TxTableBehaviors extends SparkSpec {
       val ts = Seq(left, right).map { cs =>
         new Thread(() => {
           start.await()
-          try TxTable.mergeChangeSetWithRetry(
-            spark, dir, cs, "event_id", "op", "pbucket", maxRetries = 10)
+          try TxTable.withConflictRetry(maxRetries = 10) {
+            TxTable.mergeChangeSet(spark, dir, cs, "event_id", "op", "pbucket")
+          }
           catch { case t: Throwable => errs.add(t) }
         })
       }
@@ -1128,10 +1129,12 @@ abstract class TxTableBehaviors extends SparkSpec {
           new Thread(() => {
             start.await()
             try (1 to 3).foreach { i =>
-              TxTable.mergeChangeSetWithRetry(spark, dir,
-                Seq((1000L * t + i, "insert", t * 1.0, ((t + i) % 4).toLong))
-                  .toDF("event_id", "op", "value", "pbucket"),
-                "event_id", "op", "pbucket", maxRetries = 50)
+              TxTable.withConflictRetry(maxRetries = 50) {
+                TxTable.mergeChangeSet(spark, dir,
+                  Seq((1000L * t + i, "insert", t * 1.0, ((t + i) % 4).toLong))
+                    .toDF("event_id", "op", "value", "pbucket"),
+                  "event_id", "op", "pbucket")
+              }
             } catch { case e: Throwable => errs.add(e) }
           })
         }
@@ -1922,7 +1925,7 @@ abstract class TxTableBehaviors extends SparkSpec {
     // after heavy DV stacking the stats are stale-but-conservative —
     // a fully-tombstoned range still admits its files (wasted IO,
     // never a wrong answer). The decay→compact loop is the fix:
-    // compaction reconciles tombstones physically and propagateSkipping
+    // compaction reconciles tombstones physically and its metadata pass
     // recomputes stats from the SURVIVING rows, restoring tight pruning.
     inDir { dir =>
       import spark.implicits._
@@ -2492,6 +2495,120 @@ abstract class TxTableBehaviors extends SparkSpec {
       assert(rows(TxTable.read(spark, dir)) === rows(expect))
       assert(TxTable.metaCount(spark, dir) === 15L)
     }
+  }
+
+  /** Every mutation that writes data files, each on a table at
+    * `<tmp>/t`; the PairTxn side pairs it with a table at `<tmp>/u`
+    * and keeps its intent log under `tmp`. */
+  private def fileWritingMutations: Seq[(String, String => Any)] = {
+    import spark.implicits._
+    val source = Seq((5L, 55.0, 1L), (200L, 2.0, 0L)).toDF("event_id", "value", "pbucket")
+    val update = Seq("value" -> (col("s.value") + 0.0))
+    Seq(
+      "mergeChangeSet" -> (tmp =>
+        TxTable.mergeChangeSet(spark, s"$tmp/t", changes(), "event_id", "op", "pbucket")),
+      "mergeChangeSetDv" -> (tmp =>
+        TxTable.mergeChangeSetDv(spark, s"$tmp/t", changes(), "event_id", "op", "pbucket")),
+      "mergeInto" -> (tmp =>
+        TxTable.mergeInto(spark, s"$tmp/t", source, "event_id", "pbucket",
+          whenMatchedUpdate = update, whenNotMatchedInsert = Some(lit(true)))),
+      "mergeIntoDv" -> (tmp =>
+        TxTable.mergeIntoDv(spark, s"$tmp/t", source, "event_id", "pbucket",
+          whenMatchedUpdate = update, whenNotMatchedInsert = Some(lit(true)))),
+      "updateWhere" -> (tmp =>
+        TxTable.updateWhere(spark, s"$tmp/t", col("event_id") === 5L,
+          Seq("value" -> lit(55.0)), Some("pbucket"))),
+      "updateWhereDv" -> (tmp =>
+        TxTable.updateWhereDv(spark, s"$tmp/t", col("event_id") === 5L,
+          Seq("value" -> lit(55.0)), Some("pbucket"))),
+      "compact" -> { tmp =>
+        TxTable.deleteWhereDv(spark, s"$tmp/t", col("event_id") === 3L)
+        TxTable.compact(spark, s"$tmp/t", "pbucket")
+      },
+      "purgeTombstoned" -> { tmp =>
+        TxTable.deleteWhereDv(spark, s"$tmp/t", col("event_id") === 3L)
+        TxTable.purgeTombstoned(spark, s"$tmp/t", Some("pbucket"))
+      },
+      "compactClustered" -> (tmp =>
+        TxTable.compactClustered(spark, s"$tmp/t", Some("pbucket"), "event_id", "pbucket", 4)),
+      "PairTxn append" -> { tmp =>
+        TxTable.commitReplace(spark, s"$tmp/u", snap(4), Some("pbucket"))
+        PairTxn.commitPair(spark, tmp,
+          PairTxn.PairCommit(s"$tmp/t", snap(70).where(col("event_id") >= 64L),
+            partitionCol = Some("pbucket")),
+          PairTxn.PairCommit(s"$tmp/u", snap(4), replace = true))
+      })
+  }
+
+  test("every file-writing mutation records the base's stats, bloom, " +
+      "sketches and exact row counts on its fresh files") {
+    fileWritingMutations.foreach { case (name, mutate) =>
+      inDir { tmp =>
+        val t = s"$tmp/t"
+        TxTable.commitReplace(spark, t, snap(64).repartition(2), Some("pbucket"),
+          statsCols = Seq("event_id"), bloomCol = Some("event_id"), bloomBits = 1 << 12)
+        val based = TxTable.readManifest(spark, t, 1L).files.map(_.path).toSet
+        mutate(tmp)
+        val m = TxTable.readManifest(spark, t, TxTable.latestVersion(spark, t).get)
+        val fresh = m.files.filterNot(f => based(f.path))
+        assert(fresh.nonEmpty, s"$name wrote no data file")
+        fresh.foreach { f =>
+          assert(f.stats.contains("event_id"), s"$name: ${f.path} has no range stats")
+          assert(f.bloom.exists(_.col == "event_id"), s"$name: ${f.path} has no bloom")
+          assert(f.hll.contains("event_id"), s"$name: ${f.path} has no NDV sketch")
+          assert(f.rows >= 0L, s"$name: ${f.path} has no row count")
+        }
+        assert(TxTable.metaCount(spark, t) === TxTable.read(spark, t).count(),
+          s"$name: the log's row count disagrees with the data")
+      }
+    }
+  }
+
+  test("CHECK constraints reject a violating row on every validating " +
+      "write path; compaction runs no constraint pass") {
+    import spark.implicits._
+    val bad = Seq((50L, -5.0, 2L)).toDF("event_id", "value", "pbucket")
+    val writes: Seq[(String, String => Any)] = Seq(
+      "mergeInto" -> (tmp =>
+        TxTable.mergeInto(spark, s"$tmp/t", bad, "event_id", "pbucket",
+          whenNotMatchedInsert = Some(lit(true)))),
+      "mergeIntoDv" -> (tmp =>
+        TxTable.mergeIntoDv(spark, s"$tmp/t", bad, "event_id", "pbucket",
+          whenNotMatchedInsert = Some(lit(true)))),
+      "mergeChangeSetDv" -> (tmp =>
+        TxTable.mergeChangeSetDv(spark, s"$tmp/t", bad.withColumn("op", lit("insert")),
+          "event_id", "op", "pbucket")),
+      "commitReplace" -> (tmp =>
+        TxTable.commitReplace(spark, s"$tmp/t", snap(8).unionByName(bad), Some("pbucket"))),
+      "PairTxn append" -> { tmp =>
+        TxTable.commitReplace(spark, s"$tmp/u", snap(4), Some("pbucket"))
+        PairTxn.commitPair(spark, tmp,
+          PairTxn.PairCommit(s"$tmp/t", bad, partitionCol = Some("pbucket")),
+          PairTxn.PairCommit(s"$tmp/u", snap(4), replace = true))
+      })
+    writes.foreach { case (name, write) =>
+      inDir { tmp =>
+        val t = s"$tmp/t"
+        TxTable.commitReplace(spark, t, snap(8), Some("pbucket"))
+        TxTable.addCheckConstraint(spark, t, "nonneg", "value >= 0")
+        val e = intercept[TxTable.ConstraintViolationException](write(tmp))
+        assert(e.getMessage.contains("nonneg"), name)
+        assert(TxTable.latestVersion(spark, t) === Some(2L), s"$name published")
+        assert(rows(TxTable.read(spark, t)) === rows(snap(8)), s"$name changed rows")
+      }
+    }
+    // compaction rewrites rows some commit already validated: a
+    // constrained table compacts with exactly the jobs of a plain one
+    def compactJobs(constrained: Boolean): Int = inDir { tmp =>
+      val t = s"$tmp/t"
+      TxTable.commitReplace(spark, t, snap(16).repartition(2), Some("pbucket"))
+      if (constrained) TxTable.addCheckConstraint(spark, t, "nonneg", "value >= 0")
+      TxTable.deleteWhereDv(spark, t, col("event_id") === 3L)
+      val n = jobsStarted { TxTable.compact(spark, t, "pbucket") }
+      assert(rows(TxTable.read(spark, t)) === rows(snap(16).where(col("event_id") =!= 3L)))
+      n
+    }
+    assert(compactJobs(constrained = true) === compactJobs(constrained = false))
   }
 }
 

@@ -172,7 +172,9 @@ object PairTxn {
       spark: SparkSession, c: SideCommit,
       coordRoot: Path, id: String): StagedSide = {
     val (tblStore, root) = TxTable.storeOf(spark, c.dir)
-    val base = TxTable.latestVersion(spark, c.dir).getOrElse(0L)
+    val opened = TxTable.snapshot(spark, c.dir)
+    val baseManifest = opened.getOrElse(TxTable.Manifest(0L, Seq.empty))
+    val base = baseManifest.version
     // the sentinel lands BEFORE the first data byte (no window for
     // vacuum to mistake this txn's staged files for aged orphans);
     // tolerate an existing one (an OCC retry restages the same
@@ -183,9 +185,6 @@ object PairTxn {
       s"txn\n$coordRoot\n$id\n${System.currentTimeMillis()}")
     val staged = c match {
       case p: PairCommit =>
-        val baseManifest =
-          if (base == 0L) TxTable.Manifest(0L, Seq.empty)
-          else TxTable.readManifest(spark, p.dir, base)
         val (_, entries) = TxTable.writeCommitFiles(spark, root, baseManifest,
           p.df, p.partitionCol,
           if (p.replace) Some(TxTable.FileMetaSpec(p.statsCols)) else None)
@@ -197,14 +196,15 @@ object PairTxn {
           Some(p.df.schema.json), if (p.replace) "pairreplace" else "pairappend",
           full = p.replace, extraProps = extraProps)
       case mdv: MergeDvCommit =>
-        TxTable.stageMergeDv(spark, mdv.dir, mdv.changes, mdv.keyCol,
+        // an uninitialized fact is refused as mergeChangeSetDv refuses it
+        val m = opened.getOrElse(TxTable.uninitialized("mergeChangeSetDv", mdv.dir))
+        TxTable.stageMergeDv(spark, mdv.dir, m, mdv.changes, mdv.keyCol,
           mdv.opCol, mdv.partitionCol, txn = mdv.txn,
           touchedHint = mdv.touchedHint).getOrElse {
           // no-op changeset (nothing tombstoned/inserted, or an
           // already-recorded idempotent-writer replay): the group's
           // versions still move in step — stage an empty delta
           // carrying the base state forward
-          val m = TxTable.readManifest(spark, mdv.dir, base)
           TxTable.stageCommit(m, m.files, newSchema = None,
             op = "merge-cs-dv", full = false)
         }
@@ -449,13 +449,13 @@ object PairTxn {
               val (fs, root) = TxTable.fsOf(spark, side.dir)
               val (store, _) = TxTable.storeOf(spark, side.dir)
               val mp = TxTable.manifestPath(root, side.version)
-              val latest = TxTable.latestVersion(spark, side.dir)
+              lazy val current = TxTable.snapshot(spark, side.dir)
               val published =
                 try store.read(mp) == side.manifest
                 catch { case _: Exception =>
                   // unreadable slot: retired-after-publish unless the
                   // table provably never reached this version
-                  latest.exists(_ >= side.version)
+                  current.exists(_.version >= side.version)
                 }
               if (!published) {
                 // the staged dirs are exactly the adds of the never-
@@ -467,14 +467,9 @@ object PairTxn {
                 // staging) can never drag that dir into the sweep — and a
                 // dir the CURRENT manifest still references is untouchable
                 // whatever the slot evidence said.
-                val (currentLive, currentLiveDv): (Set[String], Set[String]) =
-                  latest match {
-                    case Some(lv) =>
-                      val fs0 = TxTable.readManifest(spark, side.dir, lv).files
-                      (fs0.map(_.path.split('/').take(2).mkString("/")).toSet,
-                        fs0.flatMap(_.dvs.map(_.dir)).toSet)
-                    case None => (Set.empty, Set.empty)
-                  }
+                val fs0 = current.fold(Seq.empty[TxTable.FileEntry])(_.files)
+                val currentLive = fs0.map(_.path.split('/').take(2).mkString("/")).toSet
+                val currentLiveDv = fs0.flatMap(_.dvs.map(_.dir)).toSet
                 val parsed = TxTable.ManifestJson.parse(side.manifest, s"intent $id")
                 parsed.adds.map(_.path.split('/').take(2).mkString("/"))
                   .distinct

@@ -513,18 +513,19 @@ object TxTable {
     listLog(store, root)._1.lastOption
   }
 
-  /** Reconstruct the live-file list at each requested version: ONE
-    * log listing, the nearest checkpoint at or below the smallest
-    * request, then a single forward delta replay — ≤ checkpointInterval
-    * + (max − min) log reads TOTAL, never O(V). A "full" manifest
-    * encountered mid-replay resets state, so correctness never depends
-    * on a checkpoint having been written. */
+  /** Reconstruct the live-file list at each requested version from
+    * `listing` (the log's [[listLog]]): the nearest checkpoint at or
+    * below the smallest request, then a single forward delta replay —
+    * ≤ checkpointInterval + (max − min) log reads TOTAL, never O(V). A
+    * "full" manifest encountered mid-replay resets state, so
+    * correctness never depends on a checkpoint having been written. */
   private def readSnapshots(
-      store: LogStore, root: Path, versions: Seq[Long]): Map[Long, Manifest] = {
+      store: LogStore, root: Path, listing: (Seq[Long], Seq[Long]),
+      versions: Seq[Long]): Map[Long, Manifest] = {
     require(versions.nonEmpty, "readSnapshots needs at least one version")
     val want = versions.distinct.sorted
     val wantSet = want.toSet
-    val (manifestVs, ckptVs) = listLog(store, root)
+    val (manifestVs, ckptVs) = listing
     require(manifestVs.nonEmpty || ckptVs.nonEmpty, s"no committed version at $root")
     val manifestSet = manifestVs.toSet
     val base = ckptVs.filter(_ <= want.head).lastOption
@@ -571,12 +572,29 @@ object TxTable {
     out.result()
   }
 
-  /** The live-file list (and dir→schema map) of `version` — checkpoint
-    * + delta-tail replay, see [[readSnapshots]]. */
-  def readManifest(spark: SparkSession, dir: String, version: Long): Manifest = {
+  /** The one snapshot resolver: the manifest at `version`, or at the
+    * latest published version when `version` is None, from ONE log
+    * listing. The latest version is read off the very listing the
+    * replay then walks ([[readSnapshots]]), so opening the latest
+    * snapshot never lists the log a second time the way
+    * [[latestVersion]] followed by [[readManifest]] would. None only
+    * when no version is asked for and the log holds none; an asked-for
+    * version that was vacuumed or never published is refused by the
+    * replay. Every read, metadata answer and mutation of this object
+    * opens its snapshot here ([[openSnapshot]], [[openTable]]), and so
+    * do [[PairTxn]] and [[graft.streaming.MergeStream]]. */
+  private[graft] def snapshot(
+      spark: SparkSession, dir: String, version: Option[Long] = None): Option[Manifest] = {
     val (store, root) = storeOf(spark, dir)
-    readSnapshots(store, root, Seq(version))(version)
+    val listing = listLog(store, root)
+    version.orElse(listing._1.lastOption)
+      .map(v => readSnapshots(store, root, listing, Seq(v))(v))
   }
+
+  /** The live-file list (and dir→schema map) of `version` — see
+    * [[snapshot]]. */
+  def readManifest(spark: SparkSession, dir: String, version: Long): Manifest =
+    snapshot(spark, dir, Some(version)).get
 
   /** [[readManifest]] for several versions sharing ONE listing and ONE
     * replay — what the change-feed consumer uses to resolve a batch of
@@ -584,21 +602,25 @@ object TxTable {
   private[graft] def readManifests(
       spark: SparkSession, dir: String, versions: Seq[Long]): Map[Long, Manifest] = {
     val (store, root) = storeOf(spark, dir)
-    readSnapshots(store, root, versions)
+    readSnapshots(store, root, listLog(store, root), versions)
   }
 
-  /** The latest version of an initialized table; `op` names the
-    * refused operation when there is none. */
-  private def latestOrFail(spark: SparkSession, dir: String, op: String): Long =
-    latestVersion(spark, dir).getOrElse(
-      sys.error(s"$op needs an initialized table at $dir"))
+  /** The snapshot a read or metadata answer works on: `versionAsOf`,
+    * or else the latest version ([[snapshot]]). */
+  private def openSnapshot(
+      spark: SparkSession, dir: String, versionAsOf: Option[Long]): Manifest =
+    snapshot(spark, dir, versionAsOf).getOrElse(sys.error(s"no committed version at $dir"))
 
   /** The manifest a mutation builds on: version `at` (a caller's
-    * optimistic base) or else the latest one. */
+    * optimistic base) or else the latest one ([[snapshot]]). */
   private def openTable(
       spark: SparkSession, dir: String, op: String,
       at: Option[Long] = None): Manifest =
-    readManifest(spark, dir, at.getOrElse(latestOrFail(spark, dir, op)))
+    snapshot(spark, dir, at).getOrElse(uninitialized(op, dir))
+
+  /** Refuse mutation `op` on a table with no published version. */
+  private[ext] def uninitialized(op: String, dir: String): Nothing =
+    sys.error(s"$op needs an initialized table at $dir")
 
   /** DESCRIBE HISTORY: one row per RETAINED version — (version, op,
     * base, n_files, n_added, n_carried). One read per delta manifest
@@ -749,9 +771,11 @@ object TxTable {
     * call, same stance as Delta's RESTORE). */
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long = {
     val (store, root) = storeOf(spark, dir)
-    val base = latestOrFail(spark, dir, "restore")
+    // both versions come off ONE listing and one replay
+    val listing = listLog(store, root)
+    val base = listing._1.lastOption.getOrElse(uninitialized("restore", dir))
     if (toVersion == base) return base
-    val ms = readManifests(spark, dir, Seq(toVersion, base))
+    val ms = readSnapshots(store, root, listing, Seq(toVersion, base))
     // carry only the dirs the restored version actually references —
     // the replay-accumulated map may hold since-retired dirs
     val liveDirs = ms(toVersion).files.map(f => dirOf(f.path)).toSet
@@ -762,11 +786,8 @@ object TxTable {
 
   /** Table properties at the latest version (accumulated along the
     * log; see [[Manifest.props]]). */
-  def tableProperties(spark: SparkSession, dir: String): Map[String, String] = {
-    val v = latestVersion(spark, dir).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    readManifest(spark, dir, v).props
-  }
+  def tableProperties(spark: SparkSession, dir: String): Map[String, String] =
+    openSnapshot(spark, dir, None).props
 
   /** Set a table property as a METADATA-ONLY commit: the delta
     * manifest carries no adds/removes, just the property — O(1) log
@@ -807,37 +828,6 @@ object TxTable {
     props.collect { case (k, v) if k.startsWith("constraint.") =>
       k.stripPrefix("constraint.") -> v }.toSeq.sortBy(_._1)
 
-  /** Validate a commit's FRESH files against the table's CHECK
-    * constraints — called after the data is written but BEFORE the
-    * manifest publishes, so a violation aborts the commit with the
-    * table untouched (the written dir is a vacuum-able orphan, the
-    * same crash shape the protocol already absorbs). ONE pass over
-    * the fresh files only, all constraints as conditional aggregates
-    * of a single scan: carried-forward files were validated by the
-    * commit that wrote them, and [[addCheckConstraint]]'s whole-table
-    * scan grounds that induction. Zero cost when the table has no
-    * constraints. A constraint on a column the evolved schema dropped
-    * fails analysis here — loud, by design. */
-  private def enforceConstraints(
-      spark: SparkSession, root: Path, m: Manifest,
-      fresh: Seq[FileEntry], schemaJson: Option[String]): Unit = {
-    val cs = constraintsOf(m.props)
-    if (cs.isEmpty || fresh.isEmpty) return
-    val schemas = schemaJson.fold(Map.empty[String, String])(s =>
-      fresh.map(f => dirOf(f.path)).distinct.map(_ -> s).toMap)
-    val checks = cs.map { case (n, e) =>
-      sum(when(!coalesce(expr(e), lit(false)), 1L).otherwise(0L)).as(n) }
-    val row = readFiles(spark, root, fresh, schemas)
-      .agg(checks.head, checks.tail: _*).collect().head
-    val violated = cs.zipWithIndex.collect {
-      case ((n, e), i) if !row.isNullAt(i) && row.getLong(i) > 0 =>
-        s"'$n' CHECK ($e): ${row.getLong(i)} rows"
-    }
-    if (violated.nonEmpty) throw new ConstraintViolationException(
-      s"commit rejected, constraint violations in fresh data — " +
-        violated.mkString("; "))
-  }
-
   /** Which per-file skipping metadata a commit's fresh files record
     * ([[gatherFileMeta]]): min/max, NDV sketch and NULL count for each
     * of `statsCols`, an optional (col, mBits, numHashes) Bloom filter,
@@ -876,19 +866,29 @@ object TxTable {
     * `partitionCol` is set), lists what the write produced, records
     * each file's metadata in ONE column-pruned pass over those files
     * only ([[gatherFileMeta]]: exact row count even with no stats
-    * columns, so every commit keeps COUNT(*) metadata-only), then
-    * validates them against the table's CHECK constraints
-    * ([[enforceConstraints]]). `meta` = None inherits the base's
-    * metadata spec ([[inheritedMeta]]); a replace passes its own.
-    * Returns the commit dir (a caller that finds nothing to publish
-    * deletes it) and the fresh entries; nothing is published.
+    * columns, so every commit keeps COUNT(*) metadata-only) and, in
+    * that same pass, validates them against the table's CHECK
+    * constraints. `meta` = None inherits the base's metadata spec
+    * ([[inheritedMeta]]); a replace passes its own. Returns the commit
+    * dir (a caller that finds nothing to publish deletes it) and the
+    * fresh entries; nothing is published.
+    *
+    * Only the fresh files are validated: carried-forward files were
+    * validated by the commit that wrote them, and
+    * [[addCheckConstraint]]'s whole-table scan grounds that induction.
+    * A violation throws [[ConstraintViolationException]] before
+    * anything publishes, so the table stays untouched (the written dir
+    * is a vacuum-able orphan, the crash shape the protocol already
+    * absorbs). A constraint on a column the evolved schema dropped
+    * fails analysis here — loud, by design.
     *
     * `checked = false` is for compaction alone (`compact`,
     * `purgeTombstoned`, `compactClustered`): it rewrites rows that
     * are already live, each validated by the commit that wrote it (or
     * by [[addCheckConstraint]]'s whole-table scan), and adds none, so
-    * a constraint pass would re-prove what the log already guarantees
-    * at the cost of a scan of every rewritten file. */
+    * validating would re-prove what the log already guarantees — and
+    * a [[restore]] past a constraint can make live rows that would
+    * fail it. */
   private[ext] def writeCommitFiles(
       spark: SparkSession, root: Path, base: Manifest, rows: DataFrame,
       partitionCol: Option[String], meta: Option[FileMetaSpec] = None,
@@ -899,16 +899,11 @@ object TxTable {
     partitionCol.fold(writer)(writer.partitionBy(_)).parquet(commitDir.toString)
     val listed = listCommitFiles(
       root.getFileSystem(spark.sessionState.newHadoopConf()), root, commitDir, partitionCol)
-    // the data files' schema as written: partitionBy lifts the
-    // partition column into the dir names, and a parquet read-back
-    // reports every field nullable
-    val fileSchema = org.apache.spark.sql.types.StructType(
-      rows.schema.filterNot(f => partitionCol.contains(f.name)).map(_.copy(nullable = true)))
     val fresh =
       if (listed.isEmpty) listed
-      else gatherFileMeta(spark, root, listed,
-        meta.getOrElse(inheritedMeta(base, rows.schema)), fileSchema)
-    if (checked) enforceConstraints(spark, root, base, fresh, Some(rows.schema.json))
+      else gatherFileMeta(spark, root, commitDir, listed,
+        meta.getOrElse(inheritedMeta(base, rows.schema)), rows.schema,
+        if (checked) constraintsOf(base.props) else Seq.empty)
     (commitDir, fresh)
   }
 
@@ -955,18 +950,24 @@ object TxTable {
     *     shuffle bytes equal manifest bytes, no explode blow-up, no
     *     position list, no UDF.
     *
+    * The same pass counts each file's rows that fail one of `checks`
+    * (name, CHECK expression; a NULL result fails) and throws
+    * [[ConstraintViolationException]] when any does.
+    *
     * Every aggregate is partial-mergeable with fixed-size state, so
     * the pass costs one map-side-combined exchange of #files ×
     * O(manifest-entry) bytes regardless of row count. A file whose
     * column is all-NULL records NO stats/bloom for it (the read side's
     * conservative must-read path) instead of NPE-ing the commit. The
-    * files' schema is passed in (the commit just wrote them), which
-    * skips the parquet schema-inference job — one Spark job and a
-    * footer read per commit. */
+    * files are read under `commitDir` as base path with the schema
+    * the commit wrote (`written`), so a CHECK on the partition column
+    * sees the values the `col=value` dir names carry, and no parquet
+    * schema-inference job runs — one Spark job and a footer read per
+    * commit. */
   private def gatherFileMeta(
-      spark: SparkSession, root: Path, entries: Seq[FileEntry],
-      meta: FileMetaSpec,
-      fileSchema: org.apache.spark.sql.types.StructType): Seq[FileEntry] = {
+      spark: SparkSession, root: Path, commitDir: Path, entries: Seq[FileEntry],
+      meta: FileMetaSpec, written: org.apache.spark.sql.types.StructType,
+      checks: Seq[(String, String)]): Seq[FileEntry] = {
     val FileMetaSpec(statsCols, bloom, ndvMirrorable) = meta
     bloom.foreach { case (_, mBits, _) =>
       // mirror Bloom.build's contract: a non-multiple-of-64 width would
@@ -987,13 +988,26 @@ object TxTable {
       count(col(c).cast("long")).as(s"_nn_$c")))
     val bloomAgg = bloom.map { case (c, mBits, k) =>
       BloomPack.agg(col(c).cast("string"), mBits, k).as("_bloom") }.toSeq
-    val aggs = count(lit(1)).as("_rc") +: (statAggs ++ bloomAgg)
+    val checkAggs = checks.map { case (n, e) =>
+      sum(when(!coalesce(expr(e), lit(false)), 1L).otherwise(0L)).as(s"_ck_$n") }
+    val aggs = count(lit(1)).as("_rc") +: (statAggs ++ bloomAgg ++ checkAggs)
     val bloomIdx = 2 + 4 * statsCols.size
-    val byFile = spark.read.schema(fileSchema).parquet(
-        entries.map(f => new Path(root, f.path).toString): _*)
+    val checkIdx = bloomIdx + bloomAgg.size
+    // a parquet read-back reports every field nullable
+    val perFile = spark.read.option("basePath", commitDir.toString)
+      .schema(org.apache.spark.sql.types.StructType(written.map(_.copy(nullable = true))))
+      .parquet(entries.map(f => new Path(root, f.path).toString): _*)
       .groupBy(input_file_name().as("_f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
+    val violated = checks.zipWithIndex.flatMap { case ((n, e), i) =>
+      val bad = perFile.map(_.getLong(checkIdx + i)).sum
+      Option.when(bad > 0)(s"'$n' CHECK ($e): $bad rows")
+    }
+    if (violated.nonEmpty) throw new ConstraintViolationException(
+      s"commit rejected, constraint violations in fresh data — " +
+        violated.mkString("; "))
+    val byFile = perFile
       .map { r =>
         val m = statsCols.zipWithIndex.flatMap { case (c, i) =>
           if (r.isNullAt(2 + 4 * i) || r.isNullAt(3 + 4 * i)) None
@@ -1052,9 +1066,7 @@ object TxTable {
   def metaNdv(
       spark: SparkSession, dir: String, column: String,
       versionAsOf: Option[Long] = None): Option[Double] = {
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    manifestNdv(readManifest(spark, dir, v)).collectFirst {
+    manifestNdv(openSnapshot(spark, dir, versionAsOf)).collectFirst {
       case (c, est) if c == column => est
     }
   }
@@ -1067,9 +1079,7 @@ object TxTable {
       spark: SparkSession, dir: String,
       versionAsOf: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
+    val m = openSnapshot(spark, dir, versionAsOf)
     Seq((m.version, m.files.size.toLong,
       m.files.flatMap(_.bucket).distinct.size.toLong,
       m.files.map(_.bytes).sum,
@@ -1098,9 +1108,7 @@ object TxTable {
   def metaCount(
       spark: SparkSession, dir: String,
       versionAsOf: Option[Long] = None): Long = {
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    metaCountOf(readManifest(spark, dir, v))
+    metaCountOf(openSnapshot(spark, dir, versionAsOf))
   }
 
   private def metaCountOf(m: Manifest): Long = {
@@ -1121,9 +1129,7 @@ object TxTable {
   def metaSummary(
       spark: SparkSession, dir: String, column: String,
       versionAsOf: Option[Long] = None): (Long, Option[(Long, Long)]) = {
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
+    val m = openSnapshot(spark, dir, versionAsOf)
     (metaCountOf(m), metaRangeOf(m, column))
   }
 
@@ -1136,9 +1142,7 @@ object TxTable {
   def metaRange(
       spark: SparkSession, dir: String, column: String,
       versionAsOf: Option[Long] = None): Option[(Long, Long)] = {
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    metaRangeOf(readManifest(spark, dir, v), column)
+    metaRangeOf(openSnapshot(spark, dir, versionAsOf), column)
   }
 
   private def metaRangeOf(
@@ -1175,9 +1179,7 @@ object TxTable {
   def metaNullCount(
       spark: SparkSession, dir: String, column: String,
       versionAsOf: Option[Long] = None): Long = {
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
+    val m = openSnapshot(spark, dir, versionAsOf)
     m.files.find(_.dvs.nonEmpty).foreach(f => sys.error(
       s"metaNullCount: ${f.path} carries deletion vectors — recorded " +
         "null counts predate the tombstones; compact first, or " +
@@ -1223,8 +1225,7 @@ object TxTable {
     // the REAL base manifest (when one exists), not an empty stand-in:
     // a full commit wipes the file state but the idempotent-writer txn
     // ledger must ride through into this commit's checkpoint
-    val baseManifest = latestVersion(spark, dir)
-      .fold(Manifest(0L, Seq.empty))(readManifest(spark, dir, _))
+    val baseManifest = snapshot(spark, dir).getOrElse(Manifest(0L, Seq.empty))
     // idempotent-writer gate (see mergeChangeSet): a replayed refresh
     // of a materialized view must not stack a second application —
     // checked BEFORE any data is written, so the replay costs one log
@@ -1252,17 +1253,13 @@ object TxTable {
       spark: SparkSession, dir: String, pointCol: String, values: Seq[String],
       versionAsOf: Option[Long] = None): DataFrame = {
     require(values.nonEmpty, "readPoint needs at least one value")
-    val (_, root) = fsOf(spark, dir)
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
     val probes = values.map(org.apache.spark.unsafe.types.UTF8String.fromString)
     // the skipping families COMPOSE: a file is read only if the bloom
     // AND the range stats (when the probes parse as longs) both admit
     // at least one probed value
     val longProbes = values.flatMap(v0 => scala.util.Try(v0.toLong).toOption)
     val allLong = longProbes.size == values.size
-    val hit = m.files.filter { f =>
+    readSlice(spark, dir, versionAsOf)(_.files.filter { f =>
       val bloomAdmits = f.bloom match {
         case Some(bl) if bl.col == pointCol =>
           probes.exists(p => Bloom.mightContain(p, bl.bits, bl.k))
@@ -1273,9 +1270,7 @@ object TxTable {
         case _ => true
       }
       bloomAdmits && statsAdmit
-    }
-    val base = sliceOrEmpty(spark, root, hit, m.files, m.schemas)
-    base.where(col(pointCol).cast("string").isin(values: _*))
+    }).where(col(pointCol).cast("string").isin(values: _*))
   }
 
   /** Manifest-stats file skipping over ONE long column — see
@@ -1297,20 +1292,14 @@ object TxTable {
       spark: SparkSession, dir: String, ranges: Seq[(String, Long, Long)],
       versionAsOf: Option[Long] = None): DataFrame = {
     require(ranges.nonEmpty, "readRanges needs at least one (col, lo, hi)")
-    val (_, root) = fsOf(spark, dir)
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
-    val hit = m.files.filter { f =>
+    readSlice(spark, dir, versionAsOf)(_.files.filter { f =>
       ranges.forall { case (c, lo, hi) =>
         f.stats.get(c) match {
           case Some((fLo, fHi)) => fLo <= hi && fHi >= lo
           case None => true // no stats for this column -> must read
         }
       }
-    }
-    val base = sliceOrEmpty(spark, root, hit, m.files, m.schemas)
-    base.where(ranges.map { case (c, lo, hi) =>
+    }).where(ranges.map { case (c, lo, hi) =>
       col(c).cast("long").between(lo, hi)
     }.reduce(_ && _))
   }
@@ -1336,21 +1325,15 @@ object TxTable {
   def readNullness(
       spark: SparkSession, dir: String, statsCol: String, wantNull: Boolean,
       versionAsOf: Option[Long] = None): DataFrame = {
-    val (_, root) = fsOf(spark, dir)
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
-    val hit = m.files.filter { f =>
+    val c = col(statsCol).cast("long")
+    readSlice(spark, dir, versionAsOf)(_.files.filter { f =>
       f.nulls.get(statsCol) match {
         case None => true // unrecorded -> must read
         case Some(nn) =>
           if (wantNull) nn > 0L
           else f.rows < 0L || nn < f.rows
       }
-    }
-    val base = sliceOrEmpty(spark, root, hit, m.files, m.schemas)
-    val c = col(statsCol).cast("long")
-    base.where(if (wantNull) c.isNull else c.isNotNull)
+    }).where(if (wantNull) c.isNull else c.isNotNull)
   }
 
   /** The file set that can contain a top-`k`-by-`statsCol` row,
@@ -1433,14 +1416,9 @@ object TxTable {
       tieBreak: String, versionAsOf: Option[Long] = None,
       desc: Boolean = true): DataFrame = {
     require(k > 0, s"top-k needs k > 0: $k")
-    val (_, root) = fsOf(spark, dir)
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
-    val hit = topKCandidates(m, statsCol, k, desc)
     val key = if (desc) col(statsCol).cast("long").desc_nulls_last
               else col(statsCol).cast("long").asc_nulls_last
-    sliceOrEmpty(spark, root, hit, m.files, m.schemas)
+    readSlice(spark, dir, versionAsOf)(topKCandidates(_, statsCol, k, desc))
       .orderBy(key, col(tieBreak))
       .limit(k)
   }
@@ -1542,10 +1520,8 @@ object TxTable {
       versionAsOf: Option[Long] = None,
       maxBroadcastKeys: Long = 1L << 20,
       maxBroadcastBytes: Long = 32L << 20): DataFrame = {
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
-    val snapshot = read(spark, dir, versionAsOf = Some(v))
+    val m = openSnapshot(spark, dir, versionAsOf)
+    val snapshot = frameOf(spark, dir, m)
     val keyOnly = joinType == "leftsemi" || joinType == "leftanti"
     // reserved name: left-side columns survive a semi/anti join, so the
     // probe key must not collide with any left column. Collision is
@@ -1658,10 +1634,8 @@ object TxTable {
       versionAsOf: Option[Long] = None,
       highNdvRatio: Double = 0.8): DataFrame = {
     require(aggs.nonEmpty, "aggOnKey needs at least one aggregate")
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
-    val snapshot = read(spark, dir, versionAsOf = Some(v))
+    val m = openSnapshot(spark, dir, versionAsOf)
+    val snapshot = frameOf(spark, dir, m)
     val shaped =
       if (electSkipPartial(m, key, highNdvRatio)) snapshot.repartition(col(key))
       else snapshot
@@ -1920,11 +1894,13 @@ object TxTable {
     * planned under the conf current when they run. */
   def read(
       spark: SparkSession, dir: String,
-      versionAsOf: Option[Long] = None): DataFrame = {
+      versionAsOf: Option[Long] = None): DataFrame =
+    frameOf(spark, dir, openSnapshot(spark, dir, versionAsOf))
+
+  /** The frame of snapshot `m` of the table at `dir`, kept per
+    * snapshot content — [[read]]'s memo, see there. */
+  private def frameOf(spark: SparkSession, dir: String, m: Manifest): DataFrame = {
     val (_, root) = fsOf(spark, dir)
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
     val key: FrameKey = (spark, root, m.files, m.schemas)
     Option(frames.synchronized(frames.get(key))).getOrElse {
       val built = sliceOrEmpty(spark, root, m.files, m.files, m.schemas)
@@ -1971,12 +1947,18 @@ object TxTable {
     * full table (schema from one representative file). */
   def readPruned(
       spark: SparkSession, dir: String, buckets: Set[String],
-      versionAsOf: Option[Long] = None): DataFrame = {
+      versionAsOf: Option[Long] = None): DataFrame =
+    readSlice(spark, dir, versionAsOf)(_.files.filter(_.bucket.exists(buckets)))
+
+  /** The pruned reads' one tail: open the snapshot ([[openSnapshot]]),
+    * keep the files `pick` admits and read them — a zero-row frame
+    * shaped like the table when it admits none ([[sliceOrEmpty]]). */
+  private def readSlice(
+      spark: SparkSession, dir: String, versionAsOf: Option[Long])(
+      pick: Manifest => Seq[FileEntry]): DataFrame = {
     val (_, root) = fsOf(spark, dir)
-    val v = versionAsOf.orElse(latestVersion(spark, dir)).getOrElse(
-      sys.error(s"no committed version at $dir"))
-    val m = readManifest(spark, dir, v)
-    val hit = m.files.filter(_.bucket.exists(buckets))
+    val m = openSnapshot(spark, dir, versionAsOf)
+    val hit = pick(m)
     sliceOrEmpty(spark, root, hit, m.files, m.schemas)
   }
 
@@ -2044,6 +2026,27 @@ object TxTable {
     }
   }
 
+  /** The distinct `partitionCol` values of a merge source — a
+    * bounded driver collect, ≤ #partition values by definition. */
+  private def sourcePartitions(source: DataFrame, partitionCol: String): Seq[Any] =
+    source.select(col(partitionCol)).distinct().collect().map(_.get(0)).toIndexedSeq
+
+  /** Every merge's preamble: the partition values a merge touches,
+    * rendered as the manifest records them and refused unless
+    * path-literal ([[requirePathSafe]]), split `m`'s files into the
+    * untouched ones (carried forward by reference) and the touched
+    * ones, and read the touched ones (a zero-row frame shaped like the
+    * table when none is live; `withRowId` for merge-on-read). Returns
+    * (untouched files, touched slice). */
+  private def touchedSlice(
+      spark: SparkSession, root: Path, m: Manifest, touchedValues: Seq[Any],
+      partitionCol: String, withRowId: Boolean = false): (Seq[FileEntry], DataFrame) = {
+    val touched = touchedValues.map(String.valueOf(_)).toSet
+    requirePathSafe(touched, partitionCol)
+    val (touchedFiles, keep) = m.files.partition(_.bucket.exists(touched))
+    (keep, sliceOrEmpty(spark, root, touchedFiles, m.files, m.schemas, withRowId))
+  }
+
   /** MERGE a changeset (the [[Cdc.applyChangeSet]] contract: `keyCol`,
     * `opCol` ∈ insert/update/delete, full payload columns) into the
     * table as one atomic commit. Only the files of TOUCHED partitions
@@ -2088,11 +2091,8 @@ object TxTable {
     if (m.applied(txn)) return m.version
     // bounded driver collect: ≤ #partition values by definition —
     // rides the materializing job (or the caller's hint)
-    withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touchedRaw) =>
-    val touched = touchedRaw.map(String.valueOf(_)).toSet
-    requirePathSafe(touched, partitionCol)
-    val (touchedFiles, keep) = m.files.partition(_.bucket.exists(touched))
-    val slice = sliceOrEmpty(spark, root, touchedFiles, m.files, m.schemas)
+    withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touched) =>
+    val (keep, slice) = touchedSlice(spark, root, m, touched, partitionCol)
     // no overwrite-from-own-input here, ever: the merge READS version
     // `base`'s files and WRITES a brand-new commit dir — the
     // localCheckpoint the dynamic-overwrite path needed is gone
@@ -2137,14 +2137,14 @@ object TxTable {
       keyCol: String, opCol: String, partitionCol: String,
       evolveSchema: Boolean = false,
       txn: Option[(String, Long)] = None,
-      touchedHint: Option[Seq[Any]] = None): Long =
-    stageMergeDv(spark, dir, changes, keyCol, opCol, partitionCol,
-      evolveSchema, txn, touchedHint) match {
-      case None => latestOrFail(spark, dir, "mergeChangeSetDv")
-      case Some(staged) =>
-        val (store, root) = storeOf(spark, dir)
-        publishStaged(store, root, staged)
+      touchedHint: Option[Seq[Any]] = None): Long = {
+    val m = openTable(spark, dir, "mergeChangeSetDv")
+    stageMergeDv(spark, dir, m, changes, keyCol, opCol, partitionCol,
+      evolveSchema, txn, touchedHint).fold(m.version) { staged =>
+      val (store, root) = storeOf(spark, dir)
+      publishStaged(store, root, staged)
     }
+  }
 
   /** [[mergeChangeSetDv]]'s WRITE PHASE factored out (r18): tombstone
     * sidecar and fresh data files land on disk exactly as the ordinary
@@ -2152,27 +2152,23 @@ object TxTable {
     * which is what lets [[PairTxn]] carry a DV-writing fact side
     * inside a multi-table intent (the rendered bytes ride the intent
     * record; roll-forward replays them verbatim, sidecars included).
-    * Returns None when the commit would have NO effect (an
-    * already-recorded idempotent-writer txn, or a changeset that
-    * tombstones nothing and inserts nothing) — any just-written
-    * sidecar/commit debris is already deleted on that path. */
+    * `m` is the base the caller opened ([[openTable]]). Returns None
+    * when the commit would have NO effect (an already-recorded
+    * idempotent-writer txn, or a changeset that tombstones nothing and
+    * inserts nothing) — any just-written sidecar/commit debris is
+    * already deleted on that path. */
   private[ext] def stageMergeDv(
-      spark: SparkSession, dir: String, changes: DataFrame,
+      spark: SparkSession, dir: String, m: Manifest, changes: DataFrame,
       keyCol: String, opCol: String, partitionCol: String,
       evolveSchema: Boolean = false,
       txn: Option[(String, Long)] = None,
       touchedHint: Option[Seq[Any]] = None): Option[StagedCommit] = {
     val (fs, root) = fsOf(spark, dir)
-    val m = openTable(spark, dir, "mergeChangeSetDv")
     if (m.applied(txn)) return None
     // bounded driver collect: ≤ #partition values by definition —
     // rides the materializing job (or the caller's hint)
-    withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touchedRaw) =>
-    val touched = touchedRaw.map(String.valueOf(_)).toSet
-    requirePathSafe(touched, partitionCol)
-    val touchedFiles = m.files.filter(_.bucket.exists(touched))
-    val slice = sliceOrEmpty(spark, root, touchedFiles, m.files, m.schemas,
-      withRowId = true)
+    withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touched) =>
+    val (_, slice) = touchedSlice(spark, root, m, touched, partitionCol, withRowId = true)
     val targetCols = slice.columns
       .filterNot(c => c == DvFileCol || c == DvPosCol).toSeq
     val extras = ch.columns.filterNot(c =>
@@ -2271,12 +2267,8 @@ object TxTable {
     val (store, root) = storeOf(spark, dir)
     val m = openTable(spark, dir, "mergeInto")
     if (m.applied(txn)) return m.version
-    // bounded driver collect: ≤ #partition values by definition
-    val touched = source.select(col(partitionCol)).distinct()
-      .collect().map(r => String.valueOf(r.get(0))).toSet
-    requirePathSafe(touched, partitionCol)
-    val (touchedFiles, keep) = m.files.partition(_.bucket.exists(touched))
-    val slice = sliceOrEmpty(spark, root, touchedFiles, m.files, m.schemas)
+    val (keep, slice) = touchedSlice(spark, root, m,
+      sourcePartitions(source, partitionCol), partitionCol)
     val targetSchema = slice.schema
     val joined = slice.select(struct(slice.columns.map(col): _*).as("t"))
       .join(source.select(struct(source.columns.map(col): _*).as("s")),
@@ -2348,6 +2340,15 @@ object TxTable {
       "compact", full = false)
   }
 
+  /** Refuse a bucket-less rewrite of a partitioned table: files
+    * written without `partitionCol` land outside the bucket dirs and
+    * would be invisible to partition-pruned merges. */
+  private def requireLayoutKept(
+      dir: String, m: Manifest, partitionCol: Option[String]): Unit =
+    require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
+      s"table at $dir is partitioned — pass partitionCol so the written " +
+        "files keep the bucket dirs partition-pruned merges rely on")
+
   /** REORG … APPLY (PURGE): physically materialize the deletion
     * vectors by rewriting ONLY the files that carry them — finer than
     * [[compact]] (partition-granular: a partition with one
@@ -2368,9 +2369,7 @@ object TxTable {
     val m = openTable(spark, dir, "purgeTombstoned")
     val (doomed, keep) = m.files.partition(_.dvs.nonEmpty)
     if (doomed.isEmpty) return m.version // nothing tombstoned — no-op
-    require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
-      s"table at $dir is partitioned — pass partitionCol so the purged " +
-        "files keep the bucket dirs partition-pruned merges rely on")
+    requireLayoutKept(dir, m, partitionCol)
     // DV-aware read of ONLY the carrying files: tombstoned rows vanish
     // physically, surviving rows rewrite verbatim
     val merged = readFiles(spark, root, doomed, m.schemas)
@@ -2458,9 +2457,7 @@ object TxTable {
     val (store, root) = storeOf(spark, dir)
     val m = openTable(spark, dir, "compactClustered")
     if (m.files.isEmpty) return m.version // nothing to re-cluster
-    require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
-      s"table at $dir is partitioned — pass partitionCol so the " +
-        "re-layout keeps the bucket dirs partition-pruned merges rely on")
+    requireLayoutKept(dir, m, partitionCol)
     val zc = Layout.zValue(col(clusterX), col(clusterY))
     val keys = partitionCol.map(col).toSeq :+ zc
     val ordered = readFiles(spark, root, m.files, m.schemas)
@@ -2593,10 +2590,7 @@ object TxTable {
     val (store, root) = storeOf(spark, dir)
     val m = openTable(spark, dir, "DML")
     if (m.files.isEmpty) return m.version // nothing to match on an emptied table
-    require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
-      s"table at $dir is partitioned — pass partitionCol so rewritten " +
-        "files keep the layout (a bucket-less rewrite would be invisible " +
-        "to partition-pruned merges)")
+    requireLayoutKept(dir, m, partitionCol)
     // row-identity projection instead of input_file_name(): the latter
     // is scan-scoped and goes ambiguous once a DV anti-join sits
     // between the scan and the collect
@@ -2678,19 +2672,29 @@ object TxTable {
       spark: SparkSession, dir: String, pred: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       partitionCol: Option[String] = None): Long =
-    rewriteTouched(spark, dir, pred, partitionCol, "update") { df =>
-      val staged = assignments.zipWithIndex.map { case ((c, e), i) =>
-        (c, s"__graft_set_$i", e)
-      }
-      val withOldValues = staged.foldLeft(
-        df.withColumn("__graft_pred", coalesce(pred, lit(false)))) {
-        case (d, (_, tmp, e)) => d.withColumn(tmp, e)
-      }
-      val applied = staged.foldLeft(withOldValues) { case (d, (c, tmp, _)) =>
-        d.withColumn(c, when(col("__graft_pred"), col(tmp)).otherwise(col(c)))
-      }
-      applied.drop("__graft_pred" +: staged.map(_._2): _*)
+    rewriteTouched(spark, dir, pred, partitionCol, "update")(
+      assignOld(_, pred, assignments))
+
+  /** UPDATE's row image: `assignments` applied to the rows of `df`
+    * where `gate` holds. `gate` and every right-hand side are
+    * evaluated against the OLD row — staged into temp columns before
+    * any target column mutates, so a later assignment never sees an
+    * earlier one's write. A NULL `gate` keeps the row as it was. */
+  private def assignOld(
+      df: DataFrame, gate: org.apache.spark.sql.Column,
+      assignments: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
+    val staged = assignments.zipWithIndex.map { case ((c, e), i) =>
+      (c, s"__graft_set_$i", e)
     }
+    val withOldValues = staged.foldLeft(
+      df.withColumn("__graft_pred", coalesce(gate, lit(false)))) {
+      case (d, (_, tmp, e)) => d.withColumn(tmp, e)
+    }
+    val applied = staged.foldLeft(withOldValues) { case (d, (c, tmp, _)) =>
+      d.withColumn(c, when(col("__graft_pred"), col(tmp)).otherwise(col(c)))
+    }
+    applied.drop("__graft_pred" +: staged.map(_._2): _*)
+  }
 
   /** UPDATE ... SET as MERGE-ON-READ, completing the DV DML family:
     * the matched rows' OLD images are tombstoned in a deletion-vector
@@ -2718,10 +2722,7 @@ object TxTable {
     val (store, root) = storeOf(spark, dir)
     val m = openTable(spark, dir, "DML")
     if (m.files.isEmpty) return m.version // nothing to match on an emptied table
-    require(m.files.forall(_.bucket.isEmpty) || partitionCol.isDefined,
-      s"table at $dir is partitioned — pass partitionCol so the new " +
-        "images keep the layout (bucket-less appends would be invisible " +
-        "to partition-pruned merges)")
+    requireLayoutKept(dir, m, partitionCol)
     // ONE predicate scan over the visible rows, materialized because
     // it feeds BOTH the sidecar and the image write (O(matches) —
     // the frame a MoR update exists to keep small)
@@ -2731,17 +2732,9 @@ object TxTable {
       .localCheckpoint()
     val tombs = writeDvSidecar(spark, root, m, matched)
     if (tombs.isEmpty) return m.version
-    // new images: RHS staged against the OLD row (no when() gate —
-    // every row here matched), reserved row-id columns dropped
-    val staged = assignments.zipWithIndex.map { case ((c, e), i) =>
-      (c, s"__graft_set_$i", e)
-    }
-    val withOld = staged.foldLeft(matched.drop(DvFileCol, DvPosCol)) {
-      case (d, (_, tmp, e)) => d.withColumn(tmp, e)
-    }
-    val images = staged.foldLeft(withOld) { case (d, (c, tmp, _)) =>
-      d.withColumn(c, col(tmp))
-    }.drop(staged.map(_._2): _*)
+    // new images: RHS staged against the OLD row (every row here
+    // matched), reserved row-id columns dropped
+    val images = assignOld(matched.drop(DvFileCol, DvPosCol), lit(true), assignments)
     val (_, fresh) = writeCommitFiles(spark, root, m, images, partitionCol)
     // newSchema stays None: the delta's adds include DV-ref-modified
     // entries from OLDER commit dirs, and a header-level schema would
@@ -2786,15 +2779,10 @@ object TxTable {
     val store = logStoreFactory(fs)
     val m = openTable(spark, dir, "mergeIntoDv")
     if (m.applied(txn)) return m.version
-    // bounded driver collect: ≤ #partition values by definition
-    val touched = source.select(col(partitionCol)).distinct()
-      .collect().map(r => String.valueOf(r.get(0))).toSet
-    requirePathSafe(touched, partitionCol)
-    val touchedFiles = m.files.filter(_.bucket.exists(touched))
     // DV-aware slice of ONLY the partitions the source names — the
     // join is pruned to the data that can possibly match
-    val slice = sliceOrEmpty(spark, root, touchedFiles, m.files, m.schemas,
-      withRowId = true)
+    val (_, slice) = touchedSlice(spark, root, m,
+      sourcePartitions(source, partitionCol), partitionCol, withRowId = true)
     val tFields = slice.schema.fields
       .filterNot(f => f.name == DvFileCol || f.name == DvPosCol)
     val tagged = slice.select(
@@ -2928,7 +2916,8 @@ object TxTable {
     // live = state(horizon) ∪ every add in the retained delta tail: a
     // path referenced by ANY retained version is either already live
     // at the horizon or was added after it. ONE replay total.
-    val horizonState = readSnapshots(store, root, Seq(horizon))(horizon)
+    val horizonState =
+      readSnapshots(store, root, (manifestVs, ckptVs), Seq(horizon))(horizon)
     if (dropped.nonEmpty && !ckptVs.contains(horizon)) {
       // the horizon must stay reconstructible once its delta ancestry
       // is gone — identical-bytes rule makes a racing writer harmless

@@ -91,6 +91,43 @@ object MergeStream {
           spark.sparkContext.longAccumulator(
             s"graft.maintenance.skipped:$tableDir")))
 
+  /** The one change-feed driver: check the column contract, drain
+    * `changesDir` as an AvailableNow stream of `maxFilesPerTrigger`
+    * files per micro-batch, and run `body(changes, touched, batchId)`
+    * on every micro-batch — empty ones included — with the batch
+    * evaluated once ([[graft.ext.TxTable.withMaterializedChanges]]:
+    * `touched` holds its distinct `partitionCol` values, empty for an
+    * empty batch; the collect that finds them is the materializing
+    * job). Returns when the feed is drained. */
+  private def drainChanges(
+      spark: SparkSession, changesDir: String,
+      changesSchema: org.apache.spark.sql.types.StructType, checkpoint: String,
+      keyCol: String, opCol: String, partitionCol: String,
+      maxFilesPerTrigger: Int)(
+      body: (DataFrame, Seq[Any], Long) => Unit): Unit = {
+    require(maxFilesPerTrigger >= 1,
+      s"maxFilesPerTrigger must be >= 1: $maxFilesPerTrigger")
+    Seq(keyCol, opCol, partitionCol).foreach { c =>
+      require(changesSchema.fieldNames.contains(c),
+        s"changesSchema must carry '$c': ${changesSchema.fieldNames.mkString(", ")}")
+    }
+    spark.readStream
+      .schema(changesSchema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+      .parquet(changesDir)
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (rawChanges: DataFrame, batchId: Long) =>
+        graft.ext.TxTable.withMaterializedChanges(rawChanges, partitionCol) {
+          (changes, touched) => body(changes, touched, batchId)
+        }
+      }
+      .start()
+      .awaitTermination()
+  }
+
   /** Drain `changesDir` (parquet change files, one micro-batch per
     * file) into the snapshot at `snapshotDir` (parquet partitioned by
     * `partitionCol`). Returns the number of micro-batches applied.
@@ -110,78 +147,55 @@ object MergeStream {
       keyCol: String = "event_id",
       opCol: String = "op",
       partitionCol: String = "pbucket"): Long = {
-    Seq(keyCol, opCol, partitionCol).foreach { c =>
-      require(changesSchema.fieldNames.contains(c),
-        s"changesSchema must carry '$c': ${changesSchema.fieldNames.mkString(", ")}")
-    }
     val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     try {
-      val stream = spark.readStream
-        .schema(changesSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(changesDir)
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (rawChanges: DataFrame, _: Long) =>
-          // one evaluation per batch: the touched-partition collect and
-          // the merge below both consume the changeset — materialize it
-          // once (TxTable releases nothing here: the blocks are ours,
-          // freed when the wrapper exits). The touched collect IS the
-          // materializing job — one Spark job covers materialization,
-          // the emptiness gate and the partition values (r20).
-          // Values must be path-literal (see TxTable.requirePathSafe):
-          // the emptied-partition delete below matches the RAW value
-          // against the directory name, while Spark escapes exotic
-          // values when writing it — a silent mismatch would resurrect
-          // the stale-directory divergence this path exists to prevent.
-          graft.ext.TxTable.withMaterializedChanges(
-              rawChanges, partitionCol) { (changes, touched) =>
-          graft.ext.TxTable.requirePathSafe(
-            touched.map(String.valueOf(_)), partitionCol)
-          if (touched.nonEmpty) {
-            val slice = spark.read.parquet(snapshotDir)
-              .where(col(partitionCol).isin(touched.toIndexedSeq: _*))
-            // localCheckpoint: the merged plan lazily READS the very
-            // partitions the write below overwrites — Spark rejects
-            // overwrite-from-own-input; materializing the (touched-
-            // partition-sized) merge breaks the file dependency
-            val merged = graft.ext.Cdc.applyChangeSet(
-              slice, changes, keyCol, opCol).localCheckpoint()
-            // dynamic overwrite: ONLY the touched partition directories
-            // are replaced; untouched partitions are never read or
-            // written
-            merged.write.mode("overwrite")
-              .partitionBy(partitionCol).parquet(snapshotDir)
-            // dynamic overwrite replaces only partitions the write
-            // EMITS — a batch that deletes a partition's last row
-            // writes nothing for it, and the stale directory would
-            // survive (diverging from the batch apply). Drop touched
-            // partitions the merge left empty explicitly; the distinct
-            // is bounded by #touched. Deletion goes through the SAME
-            // Hadoop FS abstraction as the snapshot read/write — a
-            // java.nio local-path delete would silently no-op on
-            // hdfs://-s3a://-style snapshot URIs, resurrecting exactly
-            // the stale-directory divergence this block prevents.
-            val present = merged.select(col(partitionCol)).distinct()
-              .collect().map(_.get(0)).toSet
-            val hconf = spark.sessionState.newHadoopConf()
-            touched.filterNot(present).foreach { b =>
-              val dir = new org.apache.hadoop.fs.Path(
-                snapshotDir, s"$partitionCol=$b")
-              val fs = dir.getFileSystem(hconf)
-              if (fs.exists(dir)) fs.delete(dir, true)
-            }
-            batches.incrementAndGet()
+      drainChanges(spark, changesDir, changesSchema, checkpoint,
+          keyCol, opCol, partitionCol, maxFilesPerTrigger = 1) { (changes, touched, _) =>
+        // Values must be path-literal (see TxTable.requirePathSafe):
+        // the emptied-partition delete below matches the RAW value
+        // against the directory name, while Spark escapes exotic
+        // values when writing it — a silent mismatch would resurrect
+        // the stale-directory divergence this path exists to prevent.
+        graft.ext.TxTable.requirePathSafe(
+          touched.map(String.valueOf(_)), partitionCol)
+        if (touched.nonEmpty) {
+          val slice = spark.read.parquet(snapshotDir)
+            .where(col(partitionCol).isin(touched.toIndexedSeq: _*))
+          // localCheckpoint: the merged plan lazily READS the very
+          // partitions the write below overwrites — Spark rejects
+          // overwrite-from-own-input; materializing the (touched-
+          // partition-sized) merge breaks the file dependency
+          val merged = graft.ext.Cdc.applyChangeSet(
+            slice, changes, keyCol, opCol).localCheckpoint()
+          // dynamic overwrite: ONLY the touched partition directories
+          // are replaced; untouched partitions are never read or
+          // written
+          merged.write.mode("overwrite")
+            .partitionBy(partitionCol).parquet(snapshotDir)
+          // dynamic overwrite replaces only partitions the write
+          // EMITS — a batch that deletes a partition's last row
+          // writes nothing for it, and the stale directory would
+          // survive (diverging from the batch apply). Drop touched
+          // partitions the merge left empty explicitly; the distinct
+          // is bounded by #touched. Deletion goes through the SAME
+          // Hadoop FS abstraction as the snapshot read/write — a
+          // java.nio local-path delete would silently no-op on
+          // hdfs://-s3a://-style snapshot URIs, resurrecting exactly
+          // the stale-directory divergence this block prevents.
+          val present = merged.select(col(partitionCol)).distinct()
+            .collect().map(_.get(0)).toSet
+          val hconf = spark.sessionState.newHadoopConf()
+          touched.filterNot(present).foreach { b =>
+            val dir = new org.apache.hadoop.fs.Path(
+              snapshotDir, s"$partitionCol=$b")
+            val fs = dir.getFileSystem(hconf)
+            if (fs.exists(dir)) fs.delete(dir, true)
           }
-          }
-          ()
+          batches.incrementAndGet()
         }
-        .start()
-      q.awaitTermination()
+      }
       batches.get()
     } finally {
       prior match {
@@ -279,12 +293,6 @@ object MergeStream {
       moR: Boolean = false,
       maintainEvery: Int = 0,
       maxFilesPerTrigger: Int = 1): Long = {
-    require(maxFilesPerTrigger >= 1,
-      s"maxFilesPerTrigger must be >= 1: $maxFilesPerTrigger")
-    Seq(keyCol, opCol, partitionCol).foreach { c =>
-      require(changesSchema.fieldNames.contains(c),
-        s"changesSchema must carry '$c': ${changesSchema.fieldNames.mkString(", ")}")
-    }
     // foreachBatch is AT-LEAST-ONCE: a crash between the table commit
     // and the stream's checkpoint commit replays the batch on restart
     // (and a deleted/fresh checkpoint replays ALL batches). Each merge
@@ -305,52 +313,33 @@ object MergeStream {
       // ledger history under the legacy key and NONE under the
       // canonical one, keep writing the legacy key.
       val legacy = s"merge-stream:$changesDir"
-      val ledger =
-        graft.ext.TxTable.latestVersion(spark, tableDir)
-          .map(v => graft.ext.TxTable.readManifest(spark, tableDir, v).txns)
-          .getOrElse(Map.empty[String, Long])
+      val ledger = graft.ext.TxTable.snapshot(spark, tableDir)
+        .fold(Map.empty[String, Long])(_.txns)
       if (legacy != canonical &&
           ledger.contains(legacy) && !ledger.contains(canonical)) legacy
       else canonical
     }
     val committed = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = spark.readStream
-      .schema(changesSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(changesDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (rawChanges: DataFrame, batchId: Long) =>
-        // one evaluation per batch, ONE probe job per batch (r20): the
-        // touched-partition collect doubles as the checkpoint
-        // materialization AND the emptiness gate (empty batch = empty
-        // touched set), and rides down to the merge as a hint so it is
-        // never collected twice — the former per-batch triple
-        // (checkpoint count + isEmpty + touched collect) is one job.
-        // The merge's remaining consumptions (vacating-key join, image
-        // projection) read the same materialized blocks.
-        graft.ext.TxTable.withMaterializedChanges(
-            rawChanges, partitionCol) { (changes, touched) =>
-        if (touched.nonEmpty) {
-          val before = graft.ext.TxTable.latestVersion(spark, tableDir)
-          val after =
-            if (moR) graft.ext.TxTable.mergeChangeSetDv(
-              spark, tableDir, changes, keyCol, opCol, partitionCol,
-              txn = Some((appId, batchId)), touchedHint = Some(touched))
-            else graft.ext.TxTable.mergeChangeSet(
-              spark, tableDir, changes, keyCol, opCol, partitionCol,
-              txn = Some((appId, batchId)), touchedHint = Some(touched))
-          if (!before.contains(after)) committed.incrementAndGet()
-        }
-        if (maintainEvery > 0 && batchId % maintainEvery == maintainEvery - 1)
-          runMaintenance(spark, tableDir, partitionCol)
-        }
-        ()
+    drainChanges(spark, changesDir, changesSchema, checkpoint,
+        keyCol, opCol, partitionCol, maxFilesPerTrigger) { (changes, touched, batchId) =>
+      // the touched values ride down to the merge as a hint so they
+      // are never collected twice; the merge's remaining consumptions
+      // (vacating-key join, image projection) read the same
+      // materialized blocks
+      if (touched.nonEmpty) {
+        val before = graft.ext.TxTable.latestVersion(spark, tableDir)
+        val after =
+          if (moR) graft.ext.TxTable.mergeChangeSetDv(
+            spark, tableDir, changes, keyCol, opCol, partitionCol,
+            txn = Some((appId, batchId)), touchedHint = Some(touched))
+          else graft.ext.TxTable.mergeChangeSet(
+            spark, tableDir, changes, keyCol, opCol, partitionCol,
+            txn = Some((appId, batchId)), touchedHint = Some(touched))
+        if (!before.contains(after)) committed.incrementAndGet()
       }
-      .start()
-    q.awaitTermination()
+      if (maintainEvery > 0 && batchId % maintainEvery == maintainEvery - 1)
+        runMaintenance(spark, tableDir, partitionCol)
+    }
     committed.get()
   }
 
@@ -416,84 +405,61 @@ object MergeStream {
       partitionCol: String = "pbucket",
       txnAppId: String = null,
       maxFilesPerTrigger: Int = 1): Long = {
-    Seq(keyCol, opCol, partitionCol).foreach { c =>
-      require(changesSchema.fieldNames.contains(c),
-        s"changesSchema must carry '$c': ${changesSchema.fieldNames.mkString(", ")}")
-    }
-    require(maxFilesPerTrigger >= 1,
-      s"maxFilesPerTrigger must be >= 1: $maxFilesPerTrigger")
     val appId = Option(txnAppId)
       .getOrElse(canonicalAppId(spark, "pair-stream", changesDir))
     val committed = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = spark.readStream
-      .schema(changesSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(changesDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (rawChanges: DataFrame, batchId: Long) =>
-        // one evaluation per batch: WITHOUT this the changeset is
-        // re-planned and re-scanned by the emptiness probe, the
-        // insert-contract semi-join, the view recompute's anti-join
-        // keys + images, and the MoR staging's three consumptions —
-        // six-plus executions of the same batch frame. The staged
-        // merge detects the existing checkpoint and passes through.
-        // The touched-partition collect doubles as materialization and
-        // emptiness gate, and rides down to the staged merge (r20).
-        graft.ext.TxTable.withMaterializedChanges(
-            rawChanges, partitionCol) { (changes, touched) =>
-        if (touched.nonEmpty) {
-          // roll forward any crashed predecessor BEFORE reading the
-          // fact: TxTable.read pins its version eagerly (it resolves
-          // the latest version when called, and the frame it returns,
-          // kept or fresh, reads exactly that version's live files),
-          // and a view derived from a pre-recovery snapshot would
-          // silently miss the recovered batch (commitAll recovers too,
-          // but only after this read would have happened)
-          graft.ext.PairTxn.recoverPairs(spark, coordDir)
-          val cur = graft.ext.TxTable.read(spark, factDir)
-          // the LEDGER decides the recompute shape: a batch already
-          // recorded is applied IN `cur`, so anti-join/union would
-          // re-add its insert images (duplicating them in the view's
-          // input) — the identity is the only correct replay recompute
-          val replayed = graft.ext.TxTable.latestVersion(spark, factDir)
-            .exists(v => graft.ext.TxTable.readManifest(spark, factDir, v)
-              .applied(Some((appId, batchId))))
-          val applied =
-            if (replayed) cur
-            else {
-              // insert contract (see the scaladoc): enforced BEFORE
-              // anything stages, so a violating batch leaves no debris
-              val insertKeys = changes.where(col(opCol) === "insert")
-                .select(col(keyCol)).distinct()
-              require(cur.join(insertKeys, Seq(keyCol), "left_semi").isEmpty,
-                s"pairAvailable batch $batchId: an op='insert' key already " +
-                  s"exists in the fact at $factDir — the MoR merge would " +
-                  "duplicate the row while the view recompute replaced it, " +
-                  "breaking view == viewOf(fact); re-tag the change as " +
-                  "op='update' for upsert semantics")
-              val images = changes
-                .where(col(opCol).isin("insert", "update"))
-                .select(cur.columns.map(col).toSeq: _*)
-              cur.join(changes.select(col(keyCol)).distinct(),
-                  Seq(keyCol), "left_anti")
-                .unionByName(images)
-            }
-          graft.ext.PairTxn.commitAll(spark, coordDir, Seq(
-            graft.ext.PairTxn.MergeDvCommit(factDir, changes, keyCol,
-              opCol, partitionCol, txn = Some((appId, batchId)),
-              touchedHint = Some(touched)),
-            graft.ext.PairTxn.PairCommit(viewDir, viewOf(applied),
-              replace = true)))
-          committed.incrementAndGet()
-        }
-        }
-        ()
+    drainChanges(spark, changesDir, changesSchema, checkpoint,
+        keyCol, opCol, partitionCol, maxFilesPerTrigger) { (changes, touched, batchId) =>
+      // the one evaluation serves the insert-contract semi-join, the
+      // view recompute's anti-join keys + images and the MoR
+      // staging's three consumptions (the staged merge detects the
+      // existing checkpoint and passes through); the touched values
+      // ride down to the staged merge
+      if (touched.nonEmpty) {
+        // roll forward any crashed predecessor BEFORE reading the
+        // fact: TxTable.read pins its version eagerly (it resolves
+        // the latest version when called, and the frame it returns,
+        // kept or fresh, reads exactly that version's live files),
+        // and a view derived from a pre-recovery snapshot would
+        // silently miss the recovered batch (commitAll recovers too,
+        // but only after this read would have happened)
+        graft.ext.PairTxn.recoverPairs(spark, coordDir)
+        val cur = graft.ext.TxTable.read(spark, factDir)
+        // the LEDGER decides the recompute shape: a batch already
+        // recorded is applied IN `cur`, so anti-join/union would
+        // re-add its insert images (duplicating them in the view's
+        // input) — the identity is the only correct replay recompute
+        val replayed = graft.ext.TxTable.snapshot(spark, factDir)
+          .exists(_.applied(Some((appId, batchId))))
+        val applied =
+          if (replayed) cur
+          else {
+            // insert contract (see the scaladoc): enforced BEFORE
+            // anything stages, so a violating batch leaves no debris
+            val insertKeys = changes.where(col(opCol) === "insert")
+              .select(col(keyCol)).distinct()
+            require(cur.join(insertKeys, Seq(keyCol), "left_semi").isEmpty,
+              s"pairAvailable batch $batchId: an op='insert' key already " +
+                s"exists in the fact at $factDir — the MoR merge would " +
+                "duplicate the row while the view recompute replaced it, " +
+                "breaking view == viewOf(fact); re-tag the change as " +
+                "op='update' for upsert semantics")
+            val images = changes
+              .where(col(opCol).isin("insert", "update"))
+              .select(cur.columns.map(col).toSeq: _*)
+            cur.join(changes.select(col(keyCol)).distinct(),
+                Seq(keyCol), "left_anti")
+              .unionByName(images)
+          }
+        graft.ext.PairTxn.commitAll(spark, coordDir, Seq(
+          graft.ext.PairTxn.MergeDvCommit(factDir, changes, keyCol,
+            opCol, partitionCol, txn = Some((appId, batchId)),
+            touchedHint = Some(touched)),
+          graft.ext.PairTxn.PairCommit(viewDir, viewOf(applied),
+            replace = true)))
+        committed.incrementAndGet()
       }
-      .start()
-    q.awaitTermination()
+    }
     committed.get()
   }
 }

@@ -2610,6 +2610,66 @@ abstract class TxTableBehaviors extends SparkSpec {
     }
     assert(compactJobs(constrained = true) === compactJobs(constrained = false))
   }
+
+  test("a CHECK on the partition column rejects a violating mergeChangeSet") {
+    inDir { dir =>
+      import spark.implicits._
+      TxTable.commitReplace(spark, dir, snap(8), Some("pbucket"))
+      TxTable.addCheckConstraint(spark, dir, "bucketed", "pbucket >= 0")
+      // the partition value lives only in the `pbucket=-1` dir name
+      val bad = Seq((60L, "insert", 1.0, -1L)).toDF("event_id", "op", "value", "pbucket")
+      val e = intercept[TxTable.ConstraintViolationException](
+        TxTable.mergeChangeSet(spark, dir, bad, "event_id", "op", "pbucket"))
+      assert(e.getMessage.contains("'bucketed' CHECK (pbucket >= 0): 1 rows"), e.getMessage)
+      assert(TxTable.latestVersion(spark, dir) === Some(2L))
+      assert(rows(TxTable.read(spark, dir)) === rows(snap(8)))
+      val ok = Seq((61L, "insert", 1.0, 1L)).toDF("event_id", "op", "value", "pbucket")
+      assert(TxTable.mergeChangeSet(spark, dir, ok, "event_id", "op", "pbucket") === 3L)
+    }
+  }
+
+  test("a constrained table's merges start as many jobs as a plain table's") {
+    import spark.implicits._
+    // the CHECK sums ride the commit's metadata pass: no scan of its own
+    def mergeJobs(constrained: Boolean): (Int, Int) = inDir { tmp =>
+      val t = s"$tmp/t"
+      TxTable.commitReplace(spark, t, snap(16), Some("pbucket"))
+      if (constrained) TxTable.addCheckConstraint(spark, t, "nonneg", "value >= 0")
+      val viaChangeSet = jobsStarted {
+        TxTable.mergeChangeSet(spark, t, changes().withColumn("value", abs(col("value"))),
+          "event_id", "op", "pbucket")
+      }
+      val viaMergeInto = jobsStarted {
+        TxTable.mergeInto(spark, t,
+          Seq((5L, 2.0, 1L)).toDF("event_id", "value", "pbucket"), "event_id", "pbucket",
+          whenMatchedUpdate = Seq("value" -> col("s.value")))
+      }
+      assert(TxTable.latestVersion(spark, t) === Some(if (constrained) 4L else 3L))
+      (viaChangeSet, viaMergeInto)
+    }
+    assert(mergeJobs(constrained = true) === mergeJobs(constrained = false))
+  }
+
+  test("opening a snapshot lists the log once") {
+    inDir { dir =>
+      TxTable.commitReplace(spark, dir, snap(8), Some("pbucket"))
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      // wraps whichever store this suite binds
+      def listings(f: => Any): Int = {
+        val counting = new CountingLogStore(TxTable.logStoreFactory(fs))
+        TxTable.withLogStore(_ => counting)(f)
+        counting.listed.get()
+      }
+      assert(listings(TxTable.read(spark, dir)) === 1, "latest read")
+      assert(listings(TxTable.metaCount(spark, dir)) === 1, "metaCount")
+      assert(listings(TxTable.detail(spark, dir)) === 1, "detail")
+      // a mutation opens its base with the same single listing
+      assert(listings(TxTable.deleteWhereDv(spark, dir, col("event_id") === 3L)) === 1,
+        "deleteWhereDv")
+      assert(TxTable.metaCount(spark, dir) === 7L)
+    }
+  }
 }
 
 /** The default HDFS-rename/local-hard-link store. */

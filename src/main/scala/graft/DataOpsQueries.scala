@@ -249,39 +249,26 @@ object DataOpsQueries {
         .orderBy("label")
     },
 
-    // Streaming MERGE: the change feed drained file-by-file into a
-    // partitioned snapshot, each micro-batch rewriting ONLY its
-    // touched pbucket partitions (graft.streaming.MergeStream +
-    // dynamic partition overwrite). Final state must equal the
-    // one-shot relational apply — which is the oracle.
+    // Streaming MERGE, catch-up shape: the change feed's three
+    // bucket-split files drained into a TxTable at maxFilesPerTrigger
+    // = 3, so the whole feed lands as ONE copy-on-write commit that
+    // rewrites only the touched pbucket files (q147 drains the same
+    // feed one file per commit, q179 at merge-on-read, q197 as a
+    // fact+view pair). Final state must equal the one-shot relational
+    // apply — which is the oracle.
     Q("q138_stream_merge", DataOpsOracles.streamMerge) { (s, dir) =>
-      import org.apache.spark.sql.types._
       inTempDir("graft_merge") { tmp =>
         val ev = graft.analysis.EventsFact.events(s, dir)
-        ev.where(col("event_id") % 2 === 0)
-          .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket"))
-          .repartition(8, col("pbucket"))
-          .write.partitionBy("pbucket").parquet(s"$tmp/snapshot")
-        // 3 change files split BY BUCKET, so each micro-batch touches
-        // only its own partition subset and the pruning is real
-        ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-          .repartition(3, col("pbucket"))
+        val table = s"$tmp/table"
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
+        ChangeFeedFixture.changesA(ev).repartition(3, col("pbucket"))
           .write.parquet(s"$tmp/changes")
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("op", StringType),
-          StructField("value", DoubleType), StructField("pbucket", LongType)))
-        graft.streaming.MergeStream.mergeAvailable(
-          s, s"$tmp/snapshot", s"$tmp/changes", schema, s"$tmp/ckpt")
-        localized(s.read.parquet(s"$tmp/snapshot")
-          .groupBy((col("event_id") % 7).as("k"))
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
-          .orderBy("k"))
+        val commits = graft.streaming.MergeStream.mergeAvailableVersioned(s, table,
+          s"$tmp/changes", ChangeFeedFixture.changeSchema, s"$tmp/ckpt",
+          maxFilesPerTrigger = 3)
+        require(commits == 1,
+          s"3 change files at maxFilesPerTrigger=3 must drain in 1 commit: $commits")
+        localized(ChangeFeedFixture.bySeven(graft.ext.TxTable.read(s, table)).orderBy("k"))
       }
     },
   )

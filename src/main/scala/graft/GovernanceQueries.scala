@@ -35,9 +35,7 @@ object GovernanceQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_mi") { tmp =>
         val table = s"$tmp/table"
-        val base = ev.where(col("event_id") % 2 === 0)
-          .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.commitReplace(s, table, base, Some("pbucket"))
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
         val source = ev.where(col("event_id") % 3 === 0)
           .select(col("event_id"), (col("value") + 500).as("value"),
             col("value").as("nv"), (col("event_id") % 8).as("pbucket"))
@@ -69,19 +67,12 @@ object GovernanceQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_ck") { tmp =>
         val table = s"$tmp/table"
-        val base = ev.where(col("event_id") % 2 === 0 && col("value").isNotNull)
-          .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.commitReplace(s, table, base, Some("pbucket"))
+        graft.ext.TxTable.commitReplace(s, table,
+          ChangeFeedFixture.seed(ev).where(col("value").isNotNull), Some("pbucket"))
         graft.ext.TxTable.addCheckConstraint(s, table, "value_present",
           "value IS NOT NULL")
-        val changes = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            when(col("event_id") % 9 === 0, lit(null).cast("double"))
-              .otherwise(col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
+        val changes = ChangeFeedFixture.changesA(ev).withColumn("value",
+          when(col("event_id") % 9 === 0, lit(null).cast("double")).otherwise(col("value")))
         // the dirty changeset (NULL values on %9 rows) must be refused
         // with the table left exactly at the constraint commit
         val rejected =
@@ -113,26 +104,12 @@ object GovernanceQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_meta") { tmp =>
         val table = s"$tmp/table"
-        val base = ev.where(col("event_id") % 2 === 0)
-          .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.commitReplace(s, table, base, Some("pbucket"),
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"),
           statsCols = Seq("event_id"))
-        val changesA = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesA, "event_id", "op", "pbucket")
-        val changesB = ev.where(col("event_id") % 5 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0 && col("event_id") % 3 =!= 0, "insert")
-              .when(col("event_id") % 20 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 900).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesB, "event_id", "op", "pbucket")
+        graft.ext.TxTable.mergeChangeSet(s, table, ChangeFeedFixture.changesA(ev),
+          "event_id", "op", "pbucket")
+        graft.ext.TxTable.mergeChangeSet(s, table, ChangeFeedFixture.changesB(ev),
+          "event_id", "op", "pbucket")
         // the structural proof: no data file survives, only the log
         graft.Fs.deleteTree(java.nio.file.Paths.get(s"$table/data"))
         import s.implicits._
@@ -248,11 +225,7 @@ object GovernanceQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_mdv") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s, table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"),
-              (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
         graft.ext.TxTable.deleteWhereDv(s, table, col("value") < 100)
         val source = ev.where(col("event_id") % 3 === 0)
           .select(col("event_id"), (col("value") + 500).as("value"),
@@ -263,10 +236,8 @@ object GovernanceQueries {
             (coalesce(col("t.value"), lit(0.0)) + coalesce(col("s.nv"), lit(0.0)))),
           whenMatchedUpdateCond = Some(col("s.nv") > lit(0.0)),
           whenNotMatchedInsert = Some(col("s.value") > lit(100.0)))
-        def agg(df: DataFrame): DataFrame = localized(df
-          .groupBy((col("event_id") % 7).as("k"))
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
-          .orderBy("k"))
+        def agg(df: DataFrame): DataFrame =
+          localized(ChangeFeedFixture.bySeven(df).orderBy("k"))
         val viaDv = agg(graft.ext.TxTable.read(s, table)).cache()
         require(graft.ext.TxTable.metaCount(s, table) ==
           viaDv.agg(sum("n")).collect().head.getLong(0),
@@ -323,32 +294,16 @@ object GovernanceQueries {
     // and compact-reconciliation are required on top, proving the MoR
     // stack is maintenance-clean after a whole stream of DV commits.
     Q("q179_tx_stream_merge_mor", DataOpsOracles.streamMerge) { (s, dir) =>
-      import org.apache.spark.sql.types._
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_txsm") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s, table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-          .repartition(3, col("pbucket"))
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
+        ChangeFeedFixture.changesA(ev).repartition(3, col("pbucket"))
           .write.parquet(s"$tmp/changes")
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("op", StringType),
-          StructField("value", DoubleType), StructField("pbucket", LongType)))
-        graft.streaming.MergeStream.mergeAvailableVersioned(
-          s, table, s"$tmp/changes", schema, s"$tmp/ckpt", moR = true)
-        def agg(df: DataFrame): DataFrame = localized(df
-          .groupBy((col("event_id") % 7).as("k"))
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
-          .orderBy("k"))
+        graft.streaming.MergeStream.mergeAvailableVersioned(s, table, s"$tmp/changes",
+          ChangeFeedFixture.changeSchema, s"$tmp/ckpt", moR = true)
+        def agg(df: DataFrame): DataFrame =
+          localized(ChangeFeedFixture.bySeven(df).orderBy("k"))
         val viaDv = agg(graft.ext.TxTable.read(s, table)).cache()
         require(graft.ext.TxTable.metaCount(s, table) ==
           viaDv.agg(sum("n")).collect().head.getLong(0),
@@ -377,11 +332,7 @@ object GovernanceQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_tvf") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s, table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"),
-              (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
         graft.ext.TxTable.deleteWhereDv(s, table, col("value") < 100)
         localized(s.sql(
           s"""SELECT CAST(o.event_id % 6 AS BIGINT) AS k,
@@ -413,11 +364,7 @@ object GovernanceQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_tt") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s, table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"),
-              (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
         // distinct commit milliseconds: versionAtTimestamp resolves
         // ties to the LATER commit, so the travel target below must
         // sit strictly between the two commit instants
@@ -462,21 +409,10 @@ object GovernanceQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_emor") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s, table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"),
-              (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
         val v1Files = graft.ext.TxTable.readManifest(s, table, 1L)
           .files.map(_.path).toSet
-        val changes = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"),
-            (col("event_id") % 5).as("note"))
+        val changes = ChangeFeedFixture.changesA(ev).withColumn("note", col("event_id") % 5)
         graft.ext.TxTable.mergeChangeSetDv(s, table, changes,
           "event_id", "op", "pbucket", evolveSchema = true)
         val v2 = graft.ext.TxTable.readManifest(s, table, 2L)
@@ -505,11 +441,7 @@ object GovernanceQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_purge") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s, table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"),
-              (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
         graft.ext.TxTable.deleteWhereDv(s, table, col("value") < 100)
         val v = graft.ext.TxTable.purgeTombstoned(s, table, Some("pbucket"))
         val m = graft.ext.TxTable.readManifest(s, table, v)
@@ -612,8 +544,7 @@ object GovernanceQueries {
         def summarize(df: DataFrame): DataFrame =
           df.groupBy((col("event_id") % 6).as("k"))
             .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
-        val seed = ev.where(col("event_id") % 2 === 0)
-          .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket"))
+        val seed = ChangeFeedFixture.seed(ev)
         PairTxn.commitPair(s, tmp,
           PairTxn.PairCommit(fact, seed, replace = true, Some("pbucket")),
           PairTxn.PairCommit(summary, summarize(seed), replace = true))
@@ -983,19 +914,15 @@ object GovernanceQueries {
     // (the strongest replay: every batch re-fires) and requires the
     // view bit-identical while versions keep moving in step.
     // DELIBERATELY q138/q179's oracle: same final state, third
-    // economics (partition rewrite → one-table MoR → fact+view txn).
+    // economics (one-table copy-on-write → one-table MoR → fact+view
+    // txn).
     Q("q197_tx_stream_pair", DataOpsOracles.streamMerge) { (s, dir) =>
-      import org.apache.spark.sql.types._
       import graft.ext.{PairTxn, TxTable}
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_txsp") { tmp =>
         val fact = s"$tmp/fact"; val view = s"$tmp/view"
-        def viewOf(df: DataFrame): DataFrame = df
-          .groupBy((col("event_id") % 7).as("k"))
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
-        val seed = ev.where(col("event_id") % 2 === 0)
-          .select(col("event_id"), col("value"),
-            (col("event_id") % 8).as("pbucket"))
+        val viewOf: DataFrame => DataFrame = ChangeFeedFixture.bySeven
+        val seed = ChangeFeedFixture.seed(ev)
         PairTxn.commitAll(s, tmp, Seq(
           PairTxn.PairCommit(fact, seed, replace = true,
             partitionCol = Some("pbucket")),
@@ -1010,21 +937,13 @@ object GovernanceQueries {
         // measured 1.5x the lane cost — partition locality of the feed
         // is part of the economics, exactly as a real CDC feed shards
         // by key).
-        val ch = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
+        val ch = ChangeFeedFixture.changesA(ev)
         Seq(Seq(0L), Seq(1L), Seq(2L), Seq(3L), Seq(4L, 5L), Seq(6L, 7L))
           .foreach { bs =>
             ch.where(col("pbucket").isin(bs: _*)).coalesce(1)
               .write.mode("append").parquet(s"$tmp/changes")
           }
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("op", StringType),
-          StructField("value", DoubleType), StructField("pbucket", LongType)))
+        val schema = ChangeFeedFixture.changeSchema
         val intents = graft.streaming.MergeStream.pairAvailable(
           s, tmp, fact, view, s"$tmp/changes", schema, s"$tmp/ckpt", viewOf,
           maxFilesPerTrigger = 3)

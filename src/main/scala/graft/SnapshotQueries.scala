@@ -33,25 +33,7 @@ object SnapshotQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_tx") { tmp =>
         val table = s"$tmp/table"
-        val base = ev.where(col("event_id") % 2 === 0)
-          .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.commitReplace(s, table, base, Some("pbucket"))
-        val changesA = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesA, "event_id", "op", "pbucket")
-        val changesB = ev.where(col("event_id") % 5 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0 && col("event_id") % 3 =!= 0, "insert")
-              .when(col("event_id") % 20 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 900).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesB, "event_id", "op", "pbucket")
+        ChangeFeedFixture.commitChain(s, table, ev)
         // every read below TIME-TRAVELS from the final (v3) log state
         val perVersion = (1 to 3).map { v =>
           graft.ext.TxTable.read(s, table, versionAsOf = Some(v.toLong))
@@ -66,40 +48,21 @@ object SnapshotQueries {
     },
 
     // Streaming MERGE onto the commit log: the q138 change feed
-    // drained micro-batch by micro-batch, each non-empty batch one
+    // drained one file per micro-batch, each non-empty batch one
     // ATOMIC TxTable version (readers racing the stream see only
     // committed versions; emptied partitions vanish structurally).
     // Final state must equal the one-shot relational apply — the same
-    // oracle as q138, which is the point: same answer, isolation
-    // upgraded from "rewrites live dirs" to "atomic manifest swap".
+    // oracle as q138, which drains the same three files in one commit.
     Q("q147_stream_merge_versioned", DataOpsOracles.streamMerge) { (s, dir) =>
-      import org.apache.spark.sql.types._
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_txs") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s,
-          table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-          .repartition(3, col("pbucket"))
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
+        ChangeFeedFixture.changesA(ev).repartition(3, col("pbucket"))
           .write.parquet(s"$tmp/changes")
-        val schema = StructType(Seq(
-          StructField("event_id", LongType), StructField("op", StringType),
-          StructField("value", DoubleType), StructField("pbucket", LongType)))
         graft.streaming.MergeStream.mergeAvailableVersioned(
-          s, table, s"$tmp/changes", schema, s"$tmp/ckpt")
-        localized(graft.ext.TxTable.read(s, table)
-          .groupBy((col("event_id") % 7).as("k"))
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
-          .orderBy("k"))
+          s, table, s"$tmp/changes", ChangeFeedFixture.changeSchema, s"$tmp/ckpt")
+        localized(ChangeFeedFixture.bySeven(graft.ext.TxTable.read(s, table)).orderBy("k"))
       }
     },
 
@@ -115,9 +78,7 @@ object SnapshotQueries {
         val table = s"$tmp/table"
         graft.ext.TxTable.commitReplace(s,
           table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket"))
-            .repartition(12),
+          ChangeFeedFixture.seed(ev).repartition(12),
           Some("pbucket"))
         graft.ext.TxTable.compact(s, table, "pbucket")
         localized(graft.ext.TxTable.read(s, table)
@@ -138,27 +99,7 @@ object SnapshotQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_txf") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s,
-          table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        val changesA = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesA, "event_id", "op", "pbucket")
-        val changesB = ev.where(col("event_id") % 5 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0 && col("event_id") % 3 =!= 0, "insert")
-              .when(col("event_id") % 20 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 900).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesB, "event_id", "op", "pbucket")
+        ChangeFeedFixture.commitChain(s, table, ev)
         // aggregate BEFORE localizing: the raw changeset is
         // corpus-proportional (~|events|·8/15 keys), and localized()'s
         // fail-loud bound is for output-sized frames — the per-(op,
@@ -181,19 +122,8 @@ object SnapshotQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_txe") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s,
-          table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        val changes = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"),
-            lit("feed").as("src"))
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
+        val changes = ChangeFeedFixture.changesA(ev).withColumn("src", lit("feed"))
         graft.ext.TxTable.mergeChangeSet(s, table, changes,
           "event_id", "op", "pbucket", evolveSchema = true)
         localized(graft.ext.TxTable.read(s, table)
@@ -273,27 +203,7 @@ object SnapshotQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_txcs") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s,
-          table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        val changesA = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesA, "event_id", "op", "pbucket")
-        val changesB = ev.where(col("event_id") % 5 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0 && col("event_id") % 3 =!= 0, "insert")
-              .when(col("event_id") % 20 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 900).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesB, "event_id", "op", "pbucket")
+        ChangeFeedFixture.commitChain(s, table, ev)
         val acc = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
         graft.streaming.ChangeFeedStream.followAvailable(
           s, table, "event_id", s"$tmp/ckpt") { (v, changes) =>
@@ -323,27 +233,7 @@ object SnapshotQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_txiv") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s,
-          table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        val changesA = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesA, "event_id", "op", "pbucket")
-        val changesB = ev.where(col("event_id") % 5 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0 && col("event_id") % 3 =!= 0, "insert")
-              .when(col("event_id") % 20 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 900).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesB, "event_id", "op", "pbucket")
+        ChangeFeedFixture.commitChain(s, table, ev)
         def q(c: org.apache.spark.sql.Column) =
           coalesce(floor(c * lit(1000000.0)).cast("long"), lit(0L))
         // the maintained view starts as version 1's aggregate...
@@ -383,27 +273,7 @@ object SnapshotQueries {
       inTempDir("graft_txsv") { tmp =>
         val table = s"$tmp/table"
         val viewDir = s"$tmp/view"
-        graft.ext.TxTable.commitReplace(s,
-          table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        val changesA = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesA, "event_id", "op", "pbucket")
-        val changesB = ev.where(col("event_id") % 5 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0 && col("event_id") % 3 =!= 0, "insert")
-              .when(col("event_id") % 20 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 900).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesB, "event_id", "op", "pbucket")
+        ChangeFeedFixture.commitChain(s, table, ev)
         def q(c: org.apache.spark.sql.Column) =
           coalesce(floor(c * lit(1000000.0)).cast("long"), lit(0L))
         // view version 1 = the baseline rollup of source version 1
@@ -524,11 +394,8 @@ object SnapshotQueries {
         graft.ext.TxTable.commitReplace(s, table,
           graft.ext.Layout.zOrderBy(df, col("x"), col("y"), 16),
           partitionCol = None, statsCols = Seq("x", "y"))
-        localized(graft.ext.TxTable.readRanges(s, table,
-            Seq(("x", 32L, 63L), ("y", 96L, 127L)))
-          .groupBy((col("event_id") % 7).as("k"))
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
-          .orderBy("k"))
+        localized(ChangeFeedFixture.bySeven(graft.ext.TxTable.readRanges(s, table,
+            Seq(("x", 32L, 63L), ("y", 96L, 127L)))).orderBy("k"))
       }
     },
 
@@ -544,18 +411,9 @@ object SnapshotQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_txim") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s, table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        val changesA = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesA, "event_id", "op", "pbucket")
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
+        graft.ext.TxTable.mergeChangeSet(s, table, ChangeFeedFixture.changesA(ev),
+          "event_id", "op", "pbucket")
         // v3: a broad DELETE — in every bucket it has a ~1/3 chance of
         // taking the current max with it, which is the lane under test
         graft.ext.TxTable.deleteWhere(s, table,
@@ -580,27 +438,7 @@ object SnapshotQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_txfs") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s,
-          table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        val changesA = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesA, "event_id", "op", "pbucket")
-        val changesB = ev.where(col("event_id") % 5 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0 && col("event_id") % 3 =!= 0, "insert")
-              .when(col("event_id") % 20 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 900).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesB, "event_id", "op", "pbucket")
+        ChangeFeedFixture.commitChain(s, table, ev)
         graft.streaming.ChangeFeedStream.followAvailableFrames(
           s, table, "event_id", s"$tmp/ckpt") { frame =>
           frame.write.mode("append").parquet(s"$tmp/sink")
@@ -628,18 +466,9 @@ object SnapshotQueries {
       inTempDir("graft_txsi") { tmp =>
         val table = s"$tmp/table"
         val viewDir = s"$tmp/view"
-        graft.ext.TxTable.commitReplace(s, table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        val changesA = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesA, "event_id", "op", "pbucket")
+        graft.ext.TxTable.commitReplace(s, table, ChangeFeedFixture.seed(ev), Some("pbucket"))
+        graft.ext.TxTable.mergeChangeSet(s, table, ChangeFeedFixture.changesA(ev),
+          "event_id", "op", "pbucket")
         graft.ext.TxTable.deleteWhere(s, table,
           col("event_id") % 6 === 0, Some("pbucket"))
         // view version 1 = the baseline rollup of source version 1
@@ -676,26 +505,7 @@ object SnapshotQueries {
       val ev = graft.analysis.EventsFact.events(s, dir)
       inTempDir("graft_txre") { tmp =>
         val table = s"$tmp/table"
-        graft.ext.TxTable.commitReplace(s, table,
-          ev.where(col("event_id") % 2 === 0)
-            .select(col("event_id"), col("value"), (col("event_id") % 8).as("pbucket")),
-          Some("pbucket"))
-        val changesA = ev.where(col("event_id") % 3 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0, "insert")
-              .when(col("event_id") % 12 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 500).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesA, "event_id", "op", "pbucket")
-        val changesB = ev.where(col("event_id") % 5 === 0)
-          .select(col("event_id"),
-            when(col("event_id") % 2 =!= 0 && col("event_id") % 3 =!= 0, "insert")
-              .when(col("event_id") % 20 === 0, "delete")
-              .otherwise("update").as("op"),
-            (col("value") + 900).as("value"),
-            (col("event_id") % 8).as("pbucket"))
-        graft.ext.TxTable.mergeChangeSet(s, table, changesB, "event_id", "op", "pbucket")
+        ChangeFeedFixture.commitChain(s, table, ev)
         graft.ext.TxTable.restore(s, table, 1L)
         val perVersion = Seq(3, 4).map { v =>
           graft.ext.TxTable.read(s, table, versionAsOf = Some(v.toLong))

@@ -54,8 +54,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * partitions (cost ∝ touched data, the q138 property) and carries
   * every untouched file entry forward by reference. A partition whose
   * rows are all deleted simply contributes NO files to the new
-  * manifest — the stale-directory divergence dynamic overwrite had to
-  * patch around (MergeStream r9) cannot exist here structurally.
+  * manifest, so no stale partition directory can outlive its rows.
   * Checkpoints are pure read optimization: correctness never depends
   * on them (a "full" manifest encountered mid-replay resets state), so
   * a crash between manifest publish and checkpoint write costs a few
@@ -607,7 +606,7 @@ object TxTable {
 
   /** The snapshot a read or metadata answer works on: `versionAsOf`,
     * or else the latest version ([[snapshot]]). */
-  private def openSnapshot(
+  private[graft] def openSnapshot(
       spark: SparkSession, dir: String, versionAsOf: Option[Long]): Manifest =
     snapshot(spark, dir, versionAsOf).getOrElse(sys.error(s"no committed version at $dir"))
 
@@ -1899,7 +1898,7 @@ object TxTable {
 
   /** The frame of snapshot `m` of the table at `dir`, kept per
     * snapshot content — [[read]]'s memo, see there. */
-  private def frameOf(spark: SparkSession, dir: String, m: Manifest): DataFrame = {
+  private[graft] def frameOf(spark: SparkSession, dir: String, m: Manifest): DataFrame = {
     val (_, root) = fsOf(spark, dir)
     val key: FrameKey = (spark, root, m.files, m.schemas)
     Option(frames.synchronized(frames.get(key))).getOrElse {
@@ -2067,44 +2066,17 @@ object TxTable {
     * partition values) — that is a key-relocation, which in a
     * partition-pruned merge is modeled as delete-in-old + insert-in-new.
     * Partition values must also be path-literal (integral / simple
-    * strings) — enforced below, because Spark ESCAPES exotic values in
-    * directory names while the manifest carries them raw. */
+    * strings) — enforced by the merge, because Spark ESCAPES exotic
+    * values in directory names while the manifest carries them raw. */
   def mergeChangeSet(
       spark: SparkSession, dir: String, changes: DataFrame,
       keyCol: String, opCol: String, partitionCol: String,
       expectedBase: Option[Long] = None,
       evolveSchema: Boolean = false,
       txn: Option[(String, Long)] = None,
-      touchedHint: Option[Seq[Any]] = None): Long = {
-    val (store, root) = storeOf(spark, dir)
-    // expectedBase = optimistic concurrency from a version the caller
-    // read earlier: if someone else committed since, the publication
-    // of expectedBase+1 conflicts and this merge throws instead of
-    // silently dropping the competing commit's changes
-    val m = openTable(spark, dir, "mergeChangeSet", expectedBase)
-    // idempotent-writer gate: an at-least-once producer (foreachBatch
-    // replaying its last batch after a crash between table commit and
-    // stream checkpoint) tags commits with a monotone (appId, version);
-    // a changeset whose version the ledger already records is a no-op
-    // at the current version instead of a DOUBLE APPLICATION (inserts
-    // would duplicate — applyChangeSet treats them as new keys)
-    if (m.applied(txn)) return m.version
-    // bounded driver collect: ≤ #partition values by definition —
-    // rides the materializing job (or the caller's hint)
-    withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touched) =>
-    val (keep, slice) = touchedSlice(spark, root, m, touched, partitionCol)
-    // no overwrite-from-own-input here, ever: the merge READS version
-    // `base`'s files and WRITES a brand-new commit dir — the
-    // localCheckpoint the dynamic-overwrite path needed is gone
-    // schema evolution here touches only the REWRITTEN partitions'
-    // files; carried-forward files keep the old shape and read NULL in
-    // the new columns through readFiles' allowMissingColumns union
-    val merged = Cdc.applyChangeSet(slice, ch, keyCol, opCol, evolveSchema)
-    val (_, fresh) = writeCommitFiles(spark, root, m, merged, Some(partitionCol))
-    commit(store, root, m, keep ++ fresh, Some(merged.schema.json),
-      "merge", full = false, txn = txn)
-    }
-  }
+      touchedHint: Option[Seq[Any]] = None): Long =
+    mergeChanges(spark, dir, changes, keyCol, opCol, partitionCol, moR = false,
+      expectedBase, evolveSchema, txn, touchedHint)._2
 
   /** [[mergeChangeSet]] at MERGE-ON-READ economics — identical content
     * semantics ([[Cdc.applyChangeSet]]: update/delete keys vacate the
@@ -2137,13 +2109,55 @@ object TxTable {
       keyCol: String, opCol: String, partitionCol: String,
       evolveSchema: Boolean = false,
       txn: Option[(String, Long)] = None,
-      touchedHint: Option[Seq[Any]] = None): Long = {
-    val m = openTable(spark, dir, "mergeChangeSetDv")
-    stageMergeDv(spark, dir, m, changes, keyCol, opCol, partitionCol,
-      evolveSchema, txn, touchedHint).fold(m.version) { staged =>
-      val (store, root) = storeOf(spark, dir)
-      publishStaged(store, root, staged)
-    }
+      touchedHint: Option[Seq[Any]] = None): Long =
+    mergeChanges(spark, dir, changes, keyCol, opCol, partitionCol, moR = true,
+      evolveSchema = evolveSchema, txn = txn, touchedHint = touchedHint)._2
+
+  /** The changeset merges' one face: [[mergeChangeSetDv]] when `moR`,
+    * else [[mergeChangeSet]]. Returns the version of the base the merge
+    * opened with the version it leaves the table at; they differ
+    * exactly when the merge published, so a caller that counts commits
+    * ([[graft.streaming.MergeStream]]) needs no second log listing. */
+  private[graft] def mergeChanges(
+      spark: SparkSession, dir: String, changes: DataFrame,
+      keyCol: String, opCol: String, partitionCol: String, moR: Boolean,
+      expectedBase: Option[Long] = None,
+      evolveSchema: Boolean = false,
+      txn: Option[(String, Long)] = None,
+      touchedHint: Option[Seq[Any]] = None): (Long, Long) = {
+    val (store, root) = storeOf(spark, dir)
+    // expectedBase = optimistic concurrency from a version the caller
+    // read earlier: if someone else committed since, the publication
+    // of expectedBase+1 conflicts and this merge throws instead of
+    // silently dropping the competing commit's changes
+    val m = openTable(spark, dir,
+      if (moR) "mergeChangeSetDv" else "mergeChangeSet", expectedBase)
+    val after =
+      if (moR) stageMergeDv(spark, dir, m, changes, keyCol, opCol, partitionCol,
+        evolveSchema, txn, touchedHint).fold(m.version)(publishStaged(store, root, _))
+      // idempotent-writer gate: an at-least-once producer (foreachBatch
+      // replaying its last batch after a crash between table commit and
+      // stream checkpoint) tags commits with a monotone (appId,
+      // version); a changeset whose version the ledger already records
+      // is a no-op at the current version instead of a DOUBLE
+      // APPLICATION (inserts would duplicate — applyChangeSet treats
+      // them as new keys)
+      else if (m.applied(txn)) m.version
+      // bounded driver collect: ≤ #partition values by definition —
+      // rides the materializing job (or the caller's hint)
+      else withMaterializedChanges(changes, partitionCol, touchedHint) { (ch, touched) =>
+        val (keep, slice) = touchedSlice(spark, root, m, touched, partitionCol)
+        // the merge READS version `base`'s files and WRITES a brand-new
+        // commit dir, so it never overwrites its own input. Schema
+        // evolution touches only the REWRITTEN partitions' files;
+        // carried-forward files keep the old shape and read NULL in
+        // the new columns through readFiles' allowMissingColumns union
+        val merged = Cdc.applyChangeSet(slice, ch, keyCol, opCol, evolveSchema)
+        val (_, fresh) = writeCommitFiles(spark, root, m, merged, Some(partitionCol))
+        commit(store, root, m, keep ++ fresh, Some(merged.schema.json),
+          "merge", full = false, txn = txn)
+      }
+    (m.version, after)
   }
 
   /** [[mergeChangeSetDv]]'s WRITE PHASE factored out (r18): tombstone

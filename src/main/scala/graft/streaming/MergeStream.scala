@@ -4,37 +4,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Streaming MERGE sink: a change feed (insert/update/delete rows)
-  * drained micro-batch by micro-batch into a PARTITIONED parquet
-  * snapshot, rewriting ONLY the partitions a batch touches — the
-  * incremental-upsert shape that replaces "recompute the snapshot
-  * nightly" with "apply the day's changes", and the streaming face of
-  * [[graft.ext.Cdc.applyChangeSet]].
+/** Streaming MERGE into a [[graft.ext.TxTable]]: a change feed
+  * (insert/update/delete rows) drained micro-batch by micro-batch, each
+  * non-empty batch ONE atomic version — the incremental-upsert shape
+  * that replaces "recompute the snapshot nightly" with "apply the day's
+  * changes", and the streaming face of [[graft.ext.Cdc.applyChangeSet]].
+  * [[mergeAvailableVersioned]] commits to one table (copy-on-write or
+  * merge-on-read); [[pairAvailable]] moves a fact and its derived view
+  * in one multi-table intent.
   *
-  * Per batch: the affected partition values are the distinct change
-  * buckets (a bounded driver collect — ≤ #partitions by definition),
-  * the snapshot is read WITH a partition filter (only those
-  * directories are listed/scanned), the merge runs on that slice, and
-  * `partitionOverwriteMode=dynamic` writes back just the touched
-  * directories. Cost per batch ∝ touched partitions, not snapshot
-  * size — the property that makes a 100 TB snapshot maintainable.
+  * Per batch the touched partition values are the distinct change
+  * buckets (a bounded driver collect), and the merge reads and rewrites
+  * only those partitions' files; every other file carries forward by
+  * reference. Cost per batch ∝ touched partitions, not table size.
   *
   * Correctness contract: at most one change per key across the whole
   * feed (CDC-compacted upstream), so batch boundaries and file order
   * cannot change the final state; the result equals the one-shot
   * batch [[graft.ext.Cdc.applyChangeSet]] — which is exactly what the
-  * q138 oracle replays relationally.
+  * stream-merge oracle replays relationally.
   *
-  * Crash-replay caveat ([[mergeAvailable]] only): foreachBatch is
-  * at-least-once, and this legacy dynamic-overwrite variant has no
-  * transaction ledger — a crash between a batch's directory rewrite
-  * and the stream checkpoint commit re-applies that batch on restart
-  * (duplicating its inserts). [[mergeAvailableVersioned]] is the
-  * crash-safe sibling: every batch is one TxTable commit tagged with
-  * (appId, batchId) in the idempotent-writer ledger, so ANY replay —
-  * including a fully rebuilt stream checkpoint — is a no-op. New
-  * pipelines should use the versioned variant; this one remains as
-  * the plain-directory recipe for sinks that cannot carry a log.
+  * Exactly-once: foreachBatch is at-least-once, so every batch carries
+  * an (appId, batchId) tag in the table's idempotent-writer ledger
+  * (Delta's transaction identifiers) and ANY replay — including a fully
+  * rebuilt stream checkpoint — is a no-op.
   */
 object MergeStream {
 
@@ -128,83 +121,6 @@ object MergeStream {
       .awaitTermination()
   }
 
-  /** Drain `changesDir` (parquet change files, one micro-batch per
-    * file) into the snapshot at `snapshotDir` (parquet partitioned by
-    * `partitionCol`). Returns the number of micro-batches applied.
-    *
-    * Column contract: `changesSchema` must carry `keyCol` (the merge
-    * key), `opCol` ∈ {insert, update, delete} and `partitionCol` (the
-    * snapshot's partition column) — all three default to the q138
-    * lane's names but are parameters precisely so a caller whose
-    * schema happens to contain, say, an unrelated "op" column merges
-    * on the columns it MEANS. */
-  def mergeAvailable(
-      spark: SparkSession,
-      snapshotDir: String,
-      changesDir: String,
-      changesSchema: org.apache.spark.sql.types.StructType,
-      checkpoint: String,
-      keyCol: String = "event_id",
-      opCol: String = "op",
-      partitionCol: String = "pbucket"): Long = {
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-    try {
-      drainChanges(spark, changesDir, changesSchema, checkpoint,
-          keyCol, opCol, partitionCol, maxFilesPerTrigger = 1) { (changes, touched, _) =>
-        // Values must be path-literal (see TxTable.requirePathSafe):
-        // the emptied-partition delete below matches the RAW value
-        // against the directory name, while Spark escapes exotic
-        // values when writing it — a silent mismatch would resurrect
-        // the stale-directory divergence this path exists to prevent.
-        graft.ext.TxTable.requirePathSafe(
-          touched.map(String.valueOf(_)), partitionCol)
-        if (touched.nonEmpty) {
-          val slice = spark.read.parquet(snapshotDir)
-            .where(col(partitionCol).isin(touched.toIndexedSeq: _*))
-          // localCheckpoint: the merged plan lazily READS the very
-          // partitions the write below overwrites — Spark rejects
-          // overwrite-from-own-input; materializing the (touched-
-          // partition-sized) merge breaks the file dependency
-          val merged = graft.ext.Cdc.applyChangeSet(
-            slice, changes, keyCol, opCol).localCheckpoint()
-          // dynamic overwrite: ONLY the touched partition directories
-          // are replaced; untouched partitions are never read or
-          // written
-          merged.write.mode("overwrite")
-            .partitionBy(partitionCol).parquet(snapshotDir)
-          // dynamic overwrite replaces only partitions the write
-          // EMITS — a batch that deletes a partition's last row
-          // writes nothing for it, and the stale directory would
-          // survive (diverging from the batch apply). Drop touched
-          // partitions the merge left empty explicitly; the distinct
-          // is bounded by #touched. Deletion goes through the SAME
-          // Hadoop FS abstraction as the snapshot read/write — a
-          // java.nio local-path delete would silently no-op on
-          // hdfs://-s3a://-style snapshot URIs, resurrecting exactly
-          // the stale-directory divergence this block prevents.
-          val present = merged.select(col(partitionCol)).distinct()
-            .collect().map(_.get(0)).toSet
-          val hconf = spark.sessionState.newHadoopConf()
-          touched.filterNot(present).foreach { b =>
-            val dir = new org.apache.hadoop.fs.Path(
-              snapshotDir, s"$partitionCol=$b")
-            val fs = dir.getFileSystem(hconf)
-            if (fs.exists(dir)) fs.delete(dir, true)
-          }
-          batches.incrementAndGet()
-        }
-      }
-      batches.get()
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
-
   /** One BEST-EFFORT maintenance attempt ([[graft.ext.TxTable
     * .maintainIfNeeded]] under the OCC retry loop). Maintenance is
     * optional by definition — the batch's own merge has already
@@ -234,19 +150,21 @@ object MergeStream {
     }
   }
 
-  /** [[mergeAvailable]]'s SNAPSHOT-ISOLATED sibling: drain the change
-    * feed into a [[graft.ext.TxTable]] (manifest commit log), one
-    * atomic version per non-empty micro-batch. Same touched-partition
-    * economics — [[graft.ext.TxTable.mergeChangeSet]] rewrites only
-    * the files of partitions the batch touches and carries every
-    * other file forward by reference — but readers racing the stream
-    * see only complete committed versions (and can time-travel to any
-    * previous batch boundary), concurrent writers conflict loudly
-    * instead of corrupting the directory, and the emptied-partition
-    * reconciliation [[mergeAvailable]] needs is structural here (an
-    * emptied partition simply has no files in the new manifest).
+  /** Drain the change feed into the [[graft.ext.TxTable]] at
+    * `tableDir`, one atomic version per non-empty micro-batch.
+    * [[graft.ext.TxTable.mergeChangeSet]] rewrites only the files of
+    * partitions the batch touches and carries every other file forward
+    * by reference; readers racing the stream see only complete
+    * committed versions (and can time-travel to any previous batch
+    * boundary), concurrent writers conflict loudly, and a partition the
+    * feed empties simply has no files in the new manifest.
     * `tableDir` must hold an initialized TxTable (version ≥ 1).
     * Returns the number of versions committed.
+    *
+    * Column contract: `changesSchema` must carry `keyCol` (the merge
+    * key), `opCol` ∈ {insert, update, delete} and `partitionCol` (the
+    * table's partition column); the defaults are the registry lanes'
+    * names.
     *
     * `moR = true` switches each batch to merge-on-read
     * ([[graft.ext.TxTable.mergeChangeSetDv]]): identical content and
@@ -305,19 +223,20 @@ object MergeStream {
     // the same deterministic file order ([[canonicalAppId]]).
     val appId = Option(txnAppId).getOrElse {
       val canonical = canonicalAppId(spark, "merge-stream", changesDir)
-      // upgrade path: tables created before the canonical-URI default
-      // hold their ledger under the RAW-string key. Adopting the new
-      // key there would orphan that history — a rebuilt checkpoint
-      // replaying old batches would no longer be deduped until the
-      // new key accumulates its own. So if the table already carries
-      // ledger history under the legacy key and NONE under the
-      // canonical one, keep writing the legacy key.
+      // tables written before the canonical-URI default hold their
+      // ledger under the RAW-string key. Adopting the canonical key
+      // there would orphan that history (a rebuilt checkpoint replaying
+      // old batches would re-apply them), so such a table is refused
+      // until the caller names the key it continues.
       val legacy = s"merge-stream:$changesDir"
       val ledger = graft.ext.TxTable.snapshot(spark, tableDir)
         .fold(Map.empty[String, Long])(_.txns)
       if (legacy != canonical &&
-          ledger.contains(legacy) && !ledger.contains(canonical)) legacy
-      else canonical
+          ledger.contains(legacy) && !ledger.contains(canonical))
+        throw new IllegalStateException(
+          s"the table at $tableDir holds its merge-stream ledger under the " +
+            s"legacy key '$legacy'; pass txnAppId = \"$legacy\" to continue that ledger")
+      canonical
     }
     val committed = new java.util.concurrent.atomic.AtomicLong(0L)
     drainChanges(spark, changesDir, changesSchema, checkpoint,
@@ -325,17 +244,13 @@ object MergeStream {
       // the touched values ride down to the merge as a hint so they
       // are never collected twice; the merge's remaining consumptions
       // (vacating-key join, image projection) read the same
-      // materialized blocks
+      // materialized blocks. The merge reports the base it opened, so
+      // "did this batch publish" costs no log listing of its own.
       if (touched.nonEmpty) {
-        val before = graft.ext.TxTable.latestVersion(spark, tableDir)
-        val after =
-          if (moR) graft.ext.TxTable.mergeChangeSetDv(
-            spark, tableDir, changes, keyCol, opCol, partitionCol,
-            txn = Some((appId, batchId)), touchedHint = Some(touched))
-          else graft.ext.TxTable.mergeChangeSet(
-            spark, tableDir, changes, keyCol, opCol, partitionCol,
-            txn = Some((appId, batchId)), touchedHint = Some(touched))
-        if (!before.contains(after)) committed.incrementAndGet()
+        val (base, after) = graft.ext.TxTable.mergeChanges(
+          spark, tableDir, changes, keyCol, opCol, partitionCol, moR,
+          txn = Some((appId, batchId)), touchedHint = Some(touched))
+        if (after != base) committed.incrementAndGet()
       }
       if (maintainEvery > 0 && batchId % maintainEvery == maintainEvery - 1)
         runMaintenance(spark, tableDir, partitionCol)
@@ -416,23 +331,22 @@ object MergeStream {
       // existing checkpoint and passes through); the touched values
       // ride down to the staged merge
       if (touched.nonEmpty) {
-        // roll forward any crashed predecessor BEFORE reading the
-        // fact: TxTable.read pins its version eagerly (it resolves
-        // the latest version when called, and the frame it returns,
-        // kept or fresh, reads exactly that version's live files),
-        // and a view derived from a pre-recovery snapshot would
-        // silently miss the recovered batch (commitAll recovers too,
-        // but only after this read would have happened)
+        // roll forward any crashed predecessor BEFORE opening the
+        // fact: the snapshot pins its version when opened (the frame,
+        // kept or fresh, reads exactly that version's live files), and
+        // a view derived from a pre-recovery snapshot would silently
+        // miss the recovered batch (commitAll recovers too, but only
+        // after this read would have happened)
         graft.ext.PairTxn.recoverPairs(spark, coordDir)
-        val cur = graft.ext.TxTable.read(spark, factDir)
+        // ONE snapshot serves the frame (read's memo) and the ledger
+        val m = graft.ext.TxTable.openSnapshot(spark, factDir, None)
+        val cur = graft.ext.TxTable.frameOf(spark, factDir, m)
         // the LEDGER decides the recompute shape: a batch already
         // recorded is applied IN `cur`, so anti-join/union would
         // re-add its insert images (duplicating them in the view's
         // input) — the identity is the only correct replay recompute
-        val replayed = graft.ext.TxTable.snapshot(spark, factDir)
-          .exists(_.applied(Some((appId, batchId))))
         val applied =
-          if (replayed) cur
+          if (m.applied(Some((appId, batchId)))) cur
           else {
             // insert contract (see the scaladoc): enforced BEFORE
             // anything stages, so a violating batch leaves no debris

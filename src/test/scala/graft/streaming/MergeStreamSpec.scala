@@ -13,59 +13,32 @@ class MergeStreamSpec extends SparkSpec {
   private def inTempDir[T](f: String => T): T =
     graft.QueryUtil.inTempDir("graft_merge_spec")(f)
 
-  test("streamed merge equals the one-shot batch apply; only touched " +
-      "partitions are rewritten; batch count = change files") {
-    import spark.implicits._
-    inTempDir { tmp =>
-      val snapshot = (0L until 40L).map(i => (i, i * 1.0, i % 4))
-        .toDF("event_id", "value", "pbucket")
-      snapshot.repartition(4, col("pbucket"))
-        .write.partitionBy("pbucket").parquet(s"$tmp/snapshot")
-      // changes touch ONLY pbuckets 0 and 1; two files -> two batches
-      val changes = Seq(
-        (0L, "delete", 0.0, 0L), (4L, "update", 999.0, 0L),
-        (41L, "insert", 41.0, 1L), (9L, "update", 888.0, 1L))
-        .toDF("event_id", "op", "value", "pbucket")
-      // two physical files (one per bucket) => two micro-batches; a
-      // hash repartition can land both bucket values in one partition
-      changes.where(col("pbucket") === 0).coalesce(1)
-        .write.mode("append").parquet(s"$tmp/changes")
-      changes.where(col("pbucket") === 1).coalesce(1)
-        .write.mode("append").parquet(s"$tmp/changes")
-      val untouchedBefore =
-        new java.io.File(s"$tmp/snapshot/pbucket=3").listFiles()
-          .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted.toSeq
-      val batches = MergeStream.mergeAvailable(
-        spark, s"$tmp/snapshot", s"$tmp/changes", changesSchema, s"$tmp/ckpt")
-      assert(batches == 2, s"expected 2 micro-batches, got $batches")
-      val untouchedAfter =
-        new java.io.File(s"$tmp/snapshot/pbucket=3").listFiles()
-          .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted.toSeq
-      assert(untouchedAfter == untouchedBefore,
-        "dynamic overwrite must not rewrite untouched partitions")
-      val expected = graft.ext.Cdc.applyChangeSet(snapshot, changes, "event_id", "op")
-        .orderBy("event_id").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val got = spark.read.parquet(s"$tmp/snapshot")
-        .orderBy("event_id").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(got == expected)
-    }
+  /** Log listings `body` makes, counted on whichever store is bound. */
+  private def listings(dir: String)(body: => Any): Int = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val counting = new graft.ext.CountingLogStore(graft.ext.TxTable.logStoreFactory(fs))
+    graft.ext.TxTable.withLogStore(_ => counting)(body)
+    counting.listed.get()
   }
 
-  test("a batch that deletes a partition's last row removes the " +
-      "partition directory (dynamic overwrite writes nothing for it)") {
+  test("versioned merge: a batch that deletes a partition's last row " +
+      "leaves no file in that bucket") {
     import spark.implicits._
     inTempDir { tmp =>
-      val snapshot = Seq((1L, 1.0, 0L), (2L, 2.0, 1L)).toDF("event_id", "value", "pbucket")
-      snapshot.repartition(2, col("pbucket"))
-        .write.partitionBy("pbucket").parquet(s"$tmp/snapshot")
+      val table = s"$tmp/table"
+      graft.ext.TxTable.commitReplace(spark, table,
+        Seq((1L, 1.0, 0L), (2L, 2.0, 1L)).toDF("event_id", "value", "pbucket"),
+        Some("pbucket"))
       Seq((2L, "delete", 0.0, 1L)).toDF("event_id", "op", "value", "pbucket")
         .coalesce(1).write.parquet(s"$tmp/changes")
-      MergeStream.mergeAvailable(
-        spark, s"$tmp/snapshot", s"$tmp/changes", changesSchema, s"$tmp/ckpt")
-      assert(!new java.io.File(s"$tmp/snapshot/pbucket=1").exists(),
-        "the emptied partition directory must be dropped")
-      val rows = spark.read.parquet(s"$tmp/snapshot")
+      assert(MergeStream.mergeAvailableVersioned(
+        spark, table, s"$tmp/changes", changesSchema, s"$tmp/ckpt") === 1L)
+      val m = graft.ext.TxTable.readManifest(spark, table, 2L)
+      assert(!m.files.exists(_.bucket.contains("1")),
+        s"the emptied bucket must hold no file: ${m.files.map(_.path)}")
+      assert(graft.ext.TxTable.readPruned(spark, table, Set("1")).count() === 0L)
+      val rows = graft.ext.TxTable.read(spark, table)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(rows == Seq((1L, 1.0)), "only the untouched partition survives")
     }
@@ -268,8 +241,8 @@ class MergeStreamSpec extends SparkSpec {
     }
   }
 
-  test("pre-upgrade tables keep deduping under the legacy raw-string " +
-      "appId (canonical-URI default must not orphan their ledger)") {
+  test("a table whose ledger sits under the legacy raw-string appId is " +
+      "refused by default and continues under an explicit txnAppId") {
     import spark.implicits._
     inTempDir { tmp =>
       val table = s"$tmp/table"
@@ -298,12 +271,22 @@ class MergeStreamSpec extends SparkSpec {
       val expected = graft.ext.TxTable.read(spark, table)
         .orderBy("event_id").collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      // the UPGRADED engine with a fresh checkpoint replays both
-      // batches; the appId fallback must find the legacy ledger and
-      // no-op every one — without it, the canonical key starts empty
-      // and the inserts double-apply
+      // the default (canonical) appId would start an empty ledger and
+      // double-apply the inserts on replay: the stream refuses before
+      // anything commits, naming the key to continue
+      val e = intercept[IllegalStateException] {
+        MergeStream.mergeAvailableVersioned(
+          spark, table, changesDir, changesSchema, s"$tmp/ckpt_default")
+      }
+      assert(e.getMessage.contains(s"'$legacyApp'") && e.getMessage.contains("txnAppId"),
+        e.getMessage)
+      assert(graft.ext.TxTable.latestVersion(spark, table) === vBefore,
+        "a refused stream commits nothing")
+      // passing the legacy key continues that ledger: a fresh
+      // checkpoint replays both batches and the ledger no-ops each one
       val replayed = MergeStream.mergeAvailableVersioned(
-        spark, table, changesDir, changesSchema, s"$tmp/ckpt_rebuilt")
+        spark, table, changesDir, changesSchema, s"$tmp/ckpt_rebuilt",
+        txnAppId = legacyApp)
       assert(replayed === 0L,
         s"replayed batches must dedup via the legacy ledger: $replayed")
       assert(graft.ext.TxTable.latestVersion(spark, table) === vBefore)
@@ -444,15 +427,78 @@ class MergeStreamSpec extends SparkSpec {
   test("an empty change feed leaves the snapshot untouched (0 batches)") {
     import spark.implicits._
     inTempDir { tmp =>
-      Seq((1L, 1.0, 0L)).toDF("event_id", "value", "pbucket")
-        .write.partitionBy("pbucket").parquet(s"$tmp/snapshot")
+      val table = s"$tmp/table"
+      graft.ext.TxTable.commitReplace(spark, table,
+        Seq((1L, 1.0, 0L)).toDF("event_id", "value", "pbucket"), Some("pbucket"))
       Seq.empty[(Long, String, Double, Long)]
         .toDF("event_id", "op", "value", "pbucket")
         .write.parquet(s"$tmp/changes")
-      val batches = MergeStream.mergeAvailable(
-        spark, s"$tmp/snapshot", s"$tmp/changes", changesSchema, s"$tmp/ckpt")
-      assert(batches == 0)
-      assert(spark.read.parquet(s"$tmp/snapshot").count() == 1)
+      val committed = MergeStream.mergeAvailableVersioned(
+        spark, table, s"$tmp/changes", changesSchema, s"$tmp/ckpt")
+      assert(committed == 0)
+      assert(graft.ext.TxTable.latestVersion(spark, table) === Some(1L))
+      assert(graft.ext.TxTable.read(spark, table).count() == 1)
+    }
+  }
+
+  /** Log listings of a 2-batch versioned drain at `moR`. */
+  private def versionedDrainListings(moR: Boolean): Int = {
+    import spark.implicits._
+    inTempDir { tmp =>
+      val table = s"$tmp/table"
+      graft.ext.TxTable.commitReplace(spark, table,
+        (0L until 20L).map(i => (i, i * 1.0, i % 4)).toDF("event_id", "value", "pbucket"),
+        Some("pbucket"))
+      val changes = Seq((0L, "delete", 0.0, 0L), (41L, "insert", 41.0, 1L))
+        .toDF("event_id", "op", "value", "pbucket")
+      (0 to 1).foreach { b =>
+        changes.where(col("pbucket") === b).coalesce(1)
+          .write.mode("append").parquet(s"$tmp/changes")
+      }
+      listings(table) {
+        assert(MergeStream.mergeAvailableVersioned(spark, table, s"$tmp/changes",
+          changesSchema, s"$tmp/ckpt", moR = moR) === 2L)
+      }
+    }
+  }
+
+  // one listing resolves the default app id's ledger, one per batch
+  // opens the merge's base (which also tells whether the batch published)
+  test("a copy-on-write versioned drain lists the log once per batch") {
+    assert(versionedDrainListings(moR = false) === 3)
+  }
+
+  test("a merge-on-read versioned drain lists the log once per batch") {
+    assert(versionedDrainListings(moR = true) === 3)
+  }
+
+  test("a pair drain opens the fact once per intent") {
+    import spark.implicits._
+    inTempDir { tmp =>
+      val fact = s"$tmp/fact"; val view = s"$tmp/view"
+      def viewOf(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy((col("event_id") % 2).as("k")).agg(count(lit(1)).as("n"))
+      val seed = (0L until 20L).map(i => (i, i * 1.0, i % 4))
+        .toDF("event_id", "value", "pbucket")
+      graft.ext.PairTxn.commitAll(spark, tmp, Seq(
+        graft.ext.PairTxn.PairCommit(fact, seed, replace = true,
+          partitionCol = Some("pbucket")),
+        graft.ext.PairTxn.PairCommit(view, viewOf(seed), replace = true)))
+      val changes = Seq((0L, "delete", 0.0, 0L), (41L, "insert", 41.0, 1L))
+        .toDF("event_id", "op", "value", "pbucket")
+      (0 to 1).foreach { b =>
+        changes.where(col("pbucket") === b).coalesce(1)
+          .write.mode("append").parquet(s"$tmp/changes")
+      }
+      val n = listings(fact) {
+        assert(MergeStream.pairAvailable(spark, tmp, fact, view, s"$tmp/changes",
+          changesSchema, s"$tmp/ckpt", viewOf) === 2L)
+      }
+      // per intent: the stream's roll-forward lists the coordinator and
+      // opens the fact once for the view recompute; commitAll lists the
+      // coordinator again and opens both sides to stage them
+      assert(n === 10, s"listings: $n")
+      assert(graft.ext.TxTable.read(spark, fact).count() === 20L)
     }
   }
 }

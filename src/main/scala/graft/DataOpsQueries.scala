@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import QueryUtil.{dsum, inTempDir, localized, t}
 
 /** Round-9 second batch: CDC merge-apply, grid-bucketed spatial join,
   * k-anonymity/l-diversity reporting, exact prefix-filtered set-
@@ -14,17 +15,6 @@ import org.apache.spark.sql.functions._
   * float surface (MAD) reuses the q48-proven bitwise interpolation.
   */
 object DataOpsQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(c.cast("decimal(18,6)")).cast("double")
-
-  private def localized(df: DataFrame): DataFrame = QueryUtil.localized(df)
-
-  private def inTempDir[T](prefix: String)(f: String => T): T =
-    QueryUtil.inTempDir(prefix)(f)
 
   val all: Seq[Q] = Seq(
 

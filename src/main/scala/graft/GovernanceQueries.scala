@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import QueryUtil.{dsum, inTempDir, localized}
 
 /** Round-11 continuation batch: table-governance faces of the commit
   * log — the predicate-driven MERGE INTO surface (q172), commit-time
@@ -11,14 +12,6 @@ import org.apache.spark.sql.functions._
   * contract the log promises a reader.
   */
 object GovernanceQueries {
-
-  private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(c.cast("decimal(18,6)")).cast("double")
-
-  private def localized(df: DataFrame): DataFrame = QueryUtil.localized(df)
-
-  private def inTempDir[T](prefix: String)(f: String => T): T =
-    QueryUtil.inTempDir(prefix)(f)
 
   val all: Seq[Q] = Seq(
 
@@ -1171,39 +1164,15 @@ object GovernanceOracles {
     * the engine answers these from the manifest with the data files
     * deleted. */
   val metaAggregates: String =
-    """WITH s1 AS (SELECT event_id, value FROM events WHERE event_id % 2 = 0),
-      |ca AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 THEN 'insert'
-      |      WHEN event_id % 12 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 500 AS value
-      |  FROM events WHERE event_id % 3 = 0),
-      |s2 AS (
-      |  SELECT s1.event_id, s1.value FROM s1
-      |  LEFT JOIN ca ON s1.event_id = ca.event_id AND ca.op IN ('update', 'delete')
-      |  WHERE ca.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM ca WHERE op IN ('insert', 'update')),
-      |cb AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 AND event_id % 3 <> 0 THEN 'insert'
-      |      WHEN event_id % 20 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 900 AS value
-      |  FROM events WHERE event_id % 5 = 0),
-      |s3 AS (
-      |  SELECT s2.event_id, s2.value FROM s2
-      |  LEFT JOIN cb ON s2.event_id = cb.event_id AND cb.op IN ('update', 'delete')
-      |  WHERE cb.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM cb WHERE op IN ('insert', 'update'))
-      |SELECT version, n, id_min, id_max FROM (
+    ChangeFeedFixture.withCtes(ChangeFeedFixture.replayAB,
+      """SELECT version, n, id_min, id_max FROM (
       |  SELECT 1 AS version, count(*) AS n, min(event_id) AS id_min,
       |    max(event_id) AS id_max FROM s1
       |  UNION ALL
       |  SELECT 2, count(*), min(event_id), max(event_id) FROM s2
       |  UNION ALL
       |  SELECT 3, count(*), min(event_id), max(event_id) FROM s3)
-      |ORDER BY version""".stripMargin
+      |ORDER BY version""".stripMargin)
 
   /** q175: the two DV deletes replayed relationally — NULL predicate
     * evaluations KEEP the row on both sides (coalesce(pred, false)),

@@ -1,21 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import QueryUtil.{dsum, inTempDir, localized, t}
 
 /** Round-9 fourth batch: streaming LEFT OUTER join semantics,
   * small-file compaction fidelity, and two classic star-join revenue
   * analyses (the TPC-H Q3/Q10 shapes) over the synthetic star schema.
   */
 object MaintenanceQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def localized(df: DataFrame): DataFrame = QueryUtil.localized(df)
-
-  private def inTempDir[T](prefix: String)(f: String => T): T =
-    QueryUtil.inTempDir(prefix)(f)
 
   val all: Seq[Q] = Seq(
 
@@ -274,7 +266,7 @@ object MaintenanceQueries {
           col("user_id").cast("string")), 256).as("pid"),
           col("value"))
         .groupBy("pid")
-        .agg(count(lit(1)).as("n"), dsum2(col("value")).as("value_sum"))
+        .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
         .orderBy("pid").limit(40)
     },
 
@@ -310,7 +302,7 @@ object MaintenanceQueries {
           expr("variant_get(vr, '$.user_id', 'long')").as("uid"),
           expr("variant_get(vr, '$.value', 'double')").as("v"))
         .groupBy((col("uid") % 10).as("k"))
-        .agg(count(lit(1)).as("n"), dsum2(col("v")).as("value_sum"))
+        .agg(count(lit(1)).as("n"), dsum(col("v")).as("value_sum"))
         .orderBy("k")
     },
 
@@ -333,9 +325,6 @@ object MaintenanceQueries {
       finally s.catalog.dropTempView(name)
     },
   )
-
-  private def dsum2(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(c.cast("decimal(18,6)")).cast("double")
 }
 
 object MaintenanceOracles {

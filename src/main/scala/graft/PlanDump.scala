@@ -1,11 +1,16 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Optimization-round instrumentation (guide §1): run named queries from
-  * the bench pool, write each one's `.explain("formatted")` to
+/** Optimization-round instrumentation: run named queries from the
+  * bench pool, write each one's `.explain("formatted")` to
   * plans/<tag>/<name>.txt, and print a per-JOB wall-time breakdown so a
   * multi-action lane (tx setup + DML + requires + final read) shows
-  * WHERE its seconds go — the final frame's plan alone can't. Usage:
+  * WHERE its seconds go — the final frame's plan alone can't. The
+  * driver-side gap between jobs has no breakdown here: profile it with
+  * the JDK's Flight Recorder (start the JVM with `JDK_JAVA_OPTIONS=
+  * "-XX:StartFlightRecording=settings=profile,filename=<dir>/"`, read
+  * `jfr print --json --stack-depth 512 --events jdk.ExecutionSample`)
+  * and bucket each sample by its innermost `QueryExecution` frame. Usage:
   *   sbt "runMain graft.PlanDump <tag> q133_mad q108_pagerank"
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default
   * the core count). Each query runs once cold-ish (after the shared lineitem warm
@@ -56,53 +61,12 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(outDir.resolve(s"$name.txt"), plan)
       df.queryExecution.toRdd.count()
-      // pass 2: timed, with per-job attribution AND a driver-thread
-      // stack sampler: the "gap" (wall time - job time) is driver-side
-      // single-thread work (planning, file listing, manifest I/O,
-      // commit protocol) — sample the lane's thread every 5 ms and
-      // bucket by the most specific interesting frame so the gap gets
-      // a name instead of a shrug.
+      // pass 2: timed, with per-job attribution; the gap (wall time −
+      // job time) is driver-side work, profiled with Flight Recorder
       jobs.clear(); order.clear()
-      val laneThread = Thread.currentThread()
-      val hist = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-      val stacks = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-      @volatile var sampling = true
-      val sampler = new Thread(() => {
-        while (sampling) {
-          val st = laneThread.getStackTrace
-          val bucket =
-            if (st.isEmpty) "?"
-            else {
-              val s = st.map(f => f.getClassName + "." + f.getMethodName)
-              def has(p: String) = s.exists(_.contains(p))
-              if (s.head.startsWith("java.lang.Object") && has("awaitResult")) "wait-on-job"
-              else if (s.head.startsWith("java.lang.Thread") && s.head.endsWith("sleep")) "sleep"
-              else if (has("StreamingQuery") && (has("awaitTermination") || has("processAllAvailable"))) "wait-on-stream"
-              else if (has("catalyst.optimizer") || has("RuleExecutor")) "catalyst-opt/analysis"
-              else if (has("QueryPlanner") || has("SparkStrategies") || has("adaptive.")) "physical-planning"
-              else if (has("ParquetFooterReader") || has("ParquetFileReader")) "parquet-footer"
-              else if (has("InMemoryFileIndex") || has("listLeafFiles") || has("HadoopFSUtils")) "file-listing"
-              else if (has("RawLocalFileSystem") || has("ChecksumFileSystem") || has("FileUtil")) "hadoop-fs-io"
-              else if (has("graft.ext.")) "graft-ext-driver"
-              else if (has("classreader") || has("ClassLoader.loadClass") || has("janino") || has("CodeGenerator")) "codegen/classload"
-              else if (has("collectFromPlan") || has("executeCollect")) "collect-decode"
-              else if (has("Dataset") || has("QueryExecution") || has("sql.execution")) "other-sql-driver"
-              else s.head
-            }
-          hist.merge(bucket, 1, (a: Integer, b: Integer) => Integer.valueOf(a + b))
-          if (bucket == "physical-planning" || bucket == "catalyst-opt/analysis") {
-            val key = st.take(28).map(f =>
-              f.getClassName + "." + f.getMethodName).mkString(" <- ")
-            stacks.merge(key, 1, (a: Integer, b: Integer) => Integer.valueOf(a + b))
-          }
-          Thread.sleep(5)
-        }
-      })
-      sampler.setDaemon(true); sampler.start()
       val t0 = System.nanoTime()
       fn(spark, sfDir).queryExecution.toRdd.count()
       val sec = (System.nanoTime() - t0) / 1e9
-      sampling = false; sampler.join(200)
       spark.streams.active.foreach(_.stop())
       Thread.sleep(200) // let listener events drain
       println(f"[plandump] $name%-32s total $sec%6.2f s, ${order.size()} jobs")
@@ -114,16 +78,6 @@ object PlanDump {
       }
       val accounted = recs.map(_.ms).sum / 1000.0
       println(f"[plandump]   jobs account for $accounted%6.2f s of $sec%6.2f s (gap = driver/planning/fs)")
-      val total = scala.jdk.CollectionConverters.CollectionHasAsScala(
-        hist.values()).asScala.map(_.intValue).sum.max(1)
-      scala.jdk.CollectionConverters.MapHasAsScala(hist).asScala.toSeq
-        .sortBy(-_._2.intValue).take(12).foreach { case (b, n) =>
-          println(f"[plandump]   lane-thread ${100.0 * n.intValue / total}%5.1f%% ($n samples) $b")
-        }
-      scala.jdk.CollectionConverters.MapHasAsScala(stacks).asScala.toSeq
-        .sortBy(-_._2.intValue).take(4).foreach { case (k, n) =>
-          println(s"[plandump]   STACK x$n: ${k.take(1600)}")
-        }
     }
     spark.stop()
   }

@@ -37,6 +37,4 @@ final case class Q(
 object Q {
   def apply(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, Some(oracle))
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
 }

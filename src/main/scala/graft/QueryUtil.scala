@@ -1,10 +1,18 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.sum
 
-/** Shared helpers for the query batches (single implementation — the
-  * per-batch privates delegate here). */
+/** Shared helpers for the query batches, imported by the lane files. */
 object QueryUtil {
+
+  /** The star-schema table `name` under the scale-factor dir `dir`. */
+  def t(s: SparkSession, dir: String, name: String): DataFrame =
+    s.read.parquet(s"$dir/$name.parquet")
+
+  /** Exact, order-independent sum of a double expression: accumulated
+    * as decimal(18,6) whatever the partitioning, emitted as double. */
+  def dsum(c: Column): Column = sum(c.cast("decimal(18,6)")).cast("double")
 
   /** Collect a BOUNDED result and rebuild it as a local frame, so
     * round-trip temp dirs can be deleted instead of pinned under a

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import QueryUtil.{t}
 
 /** Relational breadth over the driver's star schema (SURVEY §2.4/§2.5
   * scoping: the engine must carry full join/agg/set-op/window
@@ -11,9 +12,6 @@ import org.apache.spark.sql.functions._
   * their keys, sums accumulate as DECIMAL for cross-engine exactness.
   */
 object RelationalQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** Exact, order-independent sum of a double expression: accumulate as
     * decimal (deterministic regardless of partitioning), emit double. */

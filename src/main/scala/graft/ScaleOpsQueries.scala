@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import QueryUtil.{inTempDir, localized, t}
 
 /** Round-9 breadth batch: storage-format parity (ORC, JSON lines),
   * sketch-based profiling (equi-width histogram quantiles, HyperLogLog
@@ -18,16 +19,8 @@ import org.apache.spark.sql.functions._
   */
 object ScaleOpsQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sum(c.cast("decimal(18,4)")).cast("double")
-
-  private def localized(df: DataFrame): DataFrame = QueryUtil.localized(df)
-
-  private def inTempDir[T](prefix: String)(f: String => T): T =
-    QueryUtil.inTempDir(prefix)(f)
 
   val histFractions: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.9, 0.99)
   val histBins = 256

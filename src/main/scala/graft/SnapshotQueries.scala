@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import QueryUtil.{dsum, inTempDir, localized}
 
 /** Round-10 batch: snapshot-isolated table commits (graft.ext.TxTable
   * — manifest commit log, atomic version swap, time travel) in both
@@ -12,14 +13,6 @@ import org.apache.spark.sql.functions._
   * promises a reader at any version sees.
   */
 object SnapshotQueries {
-
-  private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sum(c.cast("decimal(18,6)")).cast("double")
-
-  private def localized(df: DataFrame): DataFrame = QueryUtil.localized(df)
-
-  private def inTempDir[T](prefix: String)(f: String => T): T =
-    QueryUtil.inTempDir(prefix)(f)
 
   val all: Seq[Q] = Seq(
 
@@ -35,15 +28,7 @@ object SnapshotQueries {
         val table = s"$tmp/table"
         ChangeFeedFixture.commitChain(s, table, ev)
         // every read below TIME-TRAVELS from the final (v3) log state
-        val perVersion = (1 to 3).map { v =>
-          graft.ext.TxTable.read(s, table, versionAsOf = Some(v.toLong))
-            .groupBy((col("event_id") % 10).as("bucket"))
-            .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
-            .withColumn("version", lit(v))
-        }
-        localized(perVersion.reduce(_ unionByName _)
-          .select("version", "bucket", "n", "value_sum")
-          .orderBy("version", "bucket"))
+        localized(ChangeFeedFixture.perVersion(s, table, 1 to 3))
       }
     },
 
@@ -361,15 +346,7 @@ object SnapshotQueries {
             graft.ext.TxTable.deleteWhere(s, table,
               col("event_id") % 96 === (4L * i), Some("pbucket"))
           }
-          val perVersion = Seq(4, 7).map { v =>
-            graft.ext.TxTable.read(s, table, versionAsOf = Some(v.toLong))
-              .groupBy((col("event_id") % 10).as("bucket"))
-              .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
-              .withColumn("version", lit(v))
-          }
-          localized(perVersion.reduce(_ unionByName _)
-            .select("version", "bucket", "n", "value_sum")
-            .orderBy("version", "bucket"))
+          localized(ChangeFeedFixture.perVersion(s, table, Seq(4, 7)))
         } finally graft.ext.TxTable.checkpointInterval = prevInterval
       }
     },
@@ -507,15 +484,7 @@ object SnapshotQueries {
         val table = s"$tmp/table"
         ChangeFeedFixture.commitChain(s, table, ev)
         graft.ext.TxTable.restore(s, table, 1L)
-        val perVersion = Seq(3, 4).map { v =>
-          graft.ext.TxTable.read(s, table, versionAsOf = Some(v.toLong))
-            .groupBy((col("event_id") % 10).as("bucket"))
-            .agg(count(lit(1)).as("n"), dsum(col("value")).as("value_sum"))
-            .withColumn("version", lit(v))
-        }
-        localized(perVersion.reduce(_ unionByName _)
-          .select("version", "bucket", "n", "value_sum")
-          .orderBy("version", "bucket"))
+        localized(ChangeFeedFixture.perVersion(s, table, Seq(3, 4)))
       }
     },
 
@@ -544,51 +513,13 @@ object SnapshotQueries {
 }
 
 object SnapshotOracles {
+  import ChangeFeedFixture.{perVersionSql, replayA, replayAB, withCtes}
 
   /** The q129/q138 merge recipe applied twice, aggregated per version
     * — DuckDB replays the chain; the engine reads each version from
     * the commit log AFTER all commits. */
   val txTimeTravel: String =
-    """WITH s1 AS (SELECT event_id, value FROM events WHERE event_id % 2 = 0),
-      |ca AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 THEN 'insert'
-      |      WHEN event_id % 12 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 500 AS value
-      |  FROM events WHERE event_id % 3 = 0),
-      |s2 AS (
-      |  SELECT s1.event_id, s1.value FROM s1
-      |  LEFT JOIN ca ON s1.event_id = ca.event_id AND ca.op IN ('update', 'delete')
-      |  WHERE ca.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM ca WHERE op IN ('insert', 'update')),
-      |cb AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 AND event_id % 3 <> 0 THEN 'insert'
-      |      WHEN event_id % 20 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 900 AS value
-      |  FROM events WHERE event_id % 5 = 0),
-      |s3 AS (
-      |  SELECT s2.event_id, s2.value FROM s2
-      |  LEFT JOIN cb ON s2.event_id = cb.event_id AND cb.op IN ('update', 'delete')
-      |  WHERE cb.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM cb WHERE op IN ('insert', 'update')),
-      |a1 AS (SELECT 1 AS version, CAST(event_id % 10 AS BIGINT) AS bucket,
-      |    count(*) AS n,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |  FROM s1 GROUP BY 2),
-      |a2 AS (SELECT 2 AS version, CAST(event_id % 10 AS BIGINT) AS bucket,
-      |    count(*) AS n,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |  FROM s2 GROUP BY 2),
-      |a3 AS (SELECT 3 AS version, CAST(event_id % 10 AS BIGINT) AS bucket,
-      |    count(*) AS n,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |  FROM s3 GROUP BY 2)
-      |SELECT version, bucket, n, value_sum FROM (
-      |  SELECT * FROM a1 UNION ALL SELECT * FROM a2 UNION ALL SELECT * FROM a3)
-      |ORDER BY version, bucket""".stripMargin
+    withCtes(replayAB, perVersionSql(1 -> "s1", 2 -> "s2", 3 -> "s3"))
 
   /** Compaction is content-invisible — the oracle is the plain slice. */
   val txCompact: String =
@@ -615,67 +546,19 @@ object SnapshotOracles {
     * values quantize to 0 on both paths (coalesce in the engine, the
     * CASE here), so null-valued rows count toward n but not the sum. */
   val txIncrementalView: String =
-    """WITH s1 AS (SELECT event_id, value FROM events WHERE event_id % 2 = 0),
-      |ca AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 THEN 'insert'
-      |      WHEN event_id % 12 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 500 AS value
-      |  FROM events WHERE event_id % 3 = 0),
-      |s2 AS (
-      |  SELECT s1.event_id, s1.value FROM s1
-      |  LEFT JOIN ca ON s1.event_id = ca.event_id AND ca.op IN ('update', 'delete')
-      |  WHERE ca.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM ca WHERE op IN ('insert', 'update')),
-      |cb AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 AND event_id % 3 <> 0 THEN 'insert'
-      |      WHEN event_id % 20 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 900 AS value
-      |  FROM events WHERE event_id % 5 = 0),
-      |s3 AS (
-      |  SELECT s2.event_id, s2.value FROM s2
-      |  LEFT JOIN cb ON s2.event_id = cb.event_id AND cb.op IN ('update', 'delete')
-      |  WHERE cb.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM cb WHERE op IN ('insert', 'update'))
-      |SELECT CAST(event_id % 7 AS BIGINT) AS k, count(*) AS n,
+    withCtes(replayAB,
+      """SELECT CAST(event_id % 7 AS BIGINT) AS k, count(*) AS n,
       |  CAST(sum(coalesce(CAST(floor(value * 1000000.0) AS BIGINT), 0))
       |    AS BIGINT) AS value_q
-      |FROM s3 GROUP BY 1 ORDER BY k""".stripMargin
+      |FROM s3 GROUP BY 1 ORDER BY k""".stripMargin)
 
   /** Per-version net diffs of the q146 chain: diff(s1,s2) tagged
     * version 2 plus diff(s2,s3) tagged version 3 (delete rows carry
     * the BEFORE image, insert/update the AFTER — changesBetween's
     * contract), aggregated per (op, bucket). */
   val txChangeStream: String =
-    """WITH s1 AS (SELECT event_id, value FROM events WHERE event_id % 2 = 0),
-      |ca AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 THEN 'insert'
-      |      WHEN event_id % 12 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 500 AS value
-      |  FROM events WHERE event_id % 3 = 0),
-      |s2 AS (
-      |  SELECT s1.event_id, s1.value FROM s1
-      |  LEFT JOIN ca ON s1.event_id = ca.event_id AND ca.op IN ('update', 'delete')
-      |  WHERE ca.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM ca WHERE op IN ('insert', 'update')),
-      |cb AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 AND event_id % 3 <> 0 THEN 'insert'
-      |      WHEN event_id % 20 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 900 AS value
-      |  FROM events WHERE event_id % 5 = 0),
-      |s3 AS (
-      |  SELECT s2.event_id, s2.value FROM s2
-      |  LEFT JOIN cb ON s2.event_id = cb.event_id AND cb.op IN ('update', 'delete')
-      |  WHERE cb.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM cb WHERE op IN ('insert', 'update')),
-      |d2 AS (SELECT coalesce(s1.event_id, s2.event_id) AS event_id,
+    withCtes(replayAB,
+      """d2 AS (SELECT coalesce(s1.event_id, s2.event_id) AS event_id,
       |    CASE WHEN s1.event_id IS NULL THEN 'insert'
       |      WHEN s2.event_id IS NULL THEN 'delete'
       |      ELSE 'update' END AS op,
@@ -695,7 +578,7 @@ object SnapshotOracles {
       |  UNION ALL SELECT 3 AS version, * FROM d3)
       |SELECT version, op, CAST(event_id % 7 AS BIGINT) AS k, count(*) AS n,
       |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |FROM u GROUP BY 1, 2, 3 ORDER BY version, op, k""".stripMargin
+      |FROM u GROUP BY 1, 2, 3 ORDER BY version, op, k""".stripMargin)
 
   /** File skipping is a pure scan optimization — the oracle is the
     * plain range predicate. */
@@ -729,32 +612,8 @@ object SnapshotOracles {
     * key, delete where only s1, update where the payload differs
     * (value carries the AFTER image except for deletes). */
   val txChangeFeed: String =
-    """WITH s1 AS (SELECT event_id, value FROM events WHERE event_id % 2 = 0),
-      |ca AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 THEN 'insert'
-      |      WHEN event_id % 12 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 500 AS value
-      |  FROM events WHERE event_id % 3 = 0),
-      |s2 AS (
-      |  SELECT s1.event_id, s1.value FROM s1
-      |  LEFT JOIN ca ON s1.event_id = ca.event_id AND ca.op IN ('update', 'delete')
-      |  WHERE ca.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM ca WHERE op IN ('insert', 'update')),
-      |cb AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 AND event_id % 3 <> 0 THEN 'insert'
-      |      WHEN event_id % 20 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 900 AS value
-      |  FROM events WHERE event_id % 5 = 0),
-      |s3 AS (
-      |  SELECT s2.event_id, s2.value FROM s2
-      |  LEFT JOIN cb ON s2.event_id = cb.event_id AND cb.op IN ('update', 'delete')
-      |  WHERE cb.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM cb WHERE op IN ('insert', 'update')),
-      |d AS (SELECT coalesce(s1.event_id, s3.event_id) AS event_id,
+    withCtes(replayAB,
+      """d AS (SELECT coalesce(s1.event_id, s3.event_id) AS event_id,
       |    CASE WHEN s1.event_id IS NULL THEN 'insert'
       |      WHEN s3.event_id IS NULL THEN 'delete'
       |      ELSE 'update' END AS op,
@@ -764,25 +623,16 @@ object SnapshotOracles {
       |    OR s1.value <> s3.value)
       |SELECT op, CAST(event_id % 7 AS BIGINT) AS k, count(*) AS n,
       |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |FROM d GROUP BY 1, 2 ORDER BY op, k""".stripMargin
+      |FROM d GROUP BY 1, 2 ORDER BY op, k""".stripMargin)
 
   /** The 7-version delete chain replayed relationally: delete i
     * removes residue 4i (mod 96) — all multiples of 4 in [4, 12] by
     * v4, in [4, 24] by v7; the base slice (event_id % 4 = 0) only
     * ever holds multiples-of-4 residues, so BETWEEN is exact. */
   val txCheckpointedLog: String =
-    """WITH base AS (SELECT event_id, value FROM events WHERE event_id % 4 = 0),
-      |a4 AS (SELECT 4 AS version, CAST(event_id % 10 AS BIGINT) AS bucket,
-      |    count(*) AS n,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |  FROM base WHERE NOT (event_id % 96 BETWEEN 4 AND 12) GROUP BY 2),
-      |a7 AS (SELECT 7 AS version, CAST(event_id % 10 AS BIGINT) AS bucket,
-      |    count(*) AS n,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |  FROM base WHERE NOT (event_id % 96 BETWEEN 4 AND 24) GROUP BY 2)
-      |SELECT version, bucket, n, value_sum FROM (
-      |  SELECT * FROM a4 UNION ALL SELECT * FROM a7)
-      |ORDER BY version, bucket""".stripMargin
+    withCtes("base AS (SELECT event_id, value FROM events WHERE event_id % 4 = 0)",
+      perVersionSql(4 -> "base WHERE NOT (event_id % 96 BETWEEN 4 AND 12)",
+        7 -> "base WHERE NOT (event_id % 96 BETWEEN 4 AND 24)"))
 
   /** File skipping is a pure scan optimization — the oracle is the
     * plain 2-D box predicate (a NULL user_id fails the BETWEEN in
@@ -801,66 +651,19 @@ object SnapshotOracles {
     * can express. NULL values quantize to 0 in the sum but stay NULL
     * under max (both engines skip them). */
   val txIvmMinmax: String =
-    """WITH s1 AS (SELECT event_id, value FROM events WHERE event_id % 2 = 0),
-      |ca AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 THEN 'insert'
-      |      WHEN event_id % 12 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 500 AS value
-      |  FROM events WHERE event_id % 3 = 0),
-      |s2 AS (
-      |  SELECT s1.event_id, s1.value FROM s1
-      |  LEFT JOIN ca ON s1.event_id = ca.event_id AND ca.op IN ('update', 'delete')
-      |  WHERE ca.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM ca WHERE op IN ('insert', 'update')),
-      |s3 AS (SELECT * FROM s2 WHERE NOT (event_id % 6 = 0))
+    withCtes(replayA,
+      """s3 AS (SELECT * FROM s2 WHERE NOT (event_id % 6 = 0))
       |SELECT CAST(event_id % 8 AS BIGINT) AS k, count(*) AS n,
       |  CAST(sum(coalesce(CAST(floor(value * 1000000.0) AS BIGINT), 0))
       |    AS BIGINT) AS value_q,
       |  CAST(min(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS min_q,
       |  CAST(max(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS max_q
-      |FROM s3 GROUP BY 1 ORDER BY k""".stripMargin
+      |FROM s3 GROUP BY 1 ORDER BY k""".stripMargin)
 
   /** v3 is the fully-merged chain (s3), v4 the restore back to the
     * base slice (s1) — content-identity under rollback-by-reference. */
   val txRestore: String =
-    """WITH s1 AS (SELECT event_id, value FROM events WHERE event_id % 2 = 0),
-      |ca AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 THEN 'insert'
-      |      WHEN event_id % 12 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 500 AS value
-      |  FROM events WHERE event_id % 3 = 0),
-      |s2 AS (
-      |  SELECT s1.event_id, s1.value FROM s1
-      |  LEFT JOIN ca ON s1.event_id = ca.event_id AND ca.op IN ('update', 'delete')
-      |  WHERE ca.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM ca WHERE op IN ('insert', 'update')),
-      |cb AS (SELECT event_id,
-      |    CASE WHEN event_id % 2 <> 0 AND event_id % 3 <> 0 THEN 'insert'
-      |      WHEN event_id % 20 = 0 THEN 'delete'
-      |      ELSE 'update' END AS op,
-      |    value + 900 AS value
-      |  FROM events WHERE event_id % 5 = 0),
-      |s3 AS (
-      |  SELECT s2.event_id, s2.value FROM s2
-      |  LEFT JOIN cb ON s2.event_id = cb.event_id AND cb.op IN ('update', 'delete')
-      |  WHERE cb.event_id IS NULL
-      |  UNION ALL
-      |  SELECT event_id, value FROM cb WHERE op IN ('insert', 'update')),
-      |a3 AS (SELECT 3 AS version, CAST(event_id % 10 AS BIGINT) AS bucket,
-      |    count(*) AS n,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |  FROM s3 GROUP BY 2),
-      |a4 AS (SELECT 4 AS version, CAST(event_id % 10 AS BIGINT) AS bucket,
-      |    count(*) AS n,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-      |  FROM s1 GROUP BY 2)
-      |SELECT version, bucket, n, value_sum FROM (
-      |  SELECT * FROM a3 UNION ALL SELECT * FROM a4)
-      |ORDER BY version, bucket""".stripMargin
+    withCtes(replayAB, perVersionSql(3 -> "s3", 4 -> "s1"))
 
   /** Bloom pruning is a pure scan optimization — the oracle is the
     * plain IN filter over the raw columns. */

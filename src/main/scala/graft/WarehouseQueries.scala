@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import QueryUtil.{inTempDir, localized, t}
 
 /** Round-9 warehouse/analytics batch: runtime partition pruning, SCD2
   * change capture, co-occurrence mining, degree-oriented triangle
@@ -16,14 +17,6 @@ import org.apache.spark.sql.functions._
   * transcendental and always rides behind a floor-quantization).
   */
 object WarehouseQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def localized(df: DataFrame): DataFrame = QueryUtil.localized(df)
-
-  private def inTempDir[T](prefix: String)(f: String => T): T =
-    QueryUtil.inTempDir(prefix)(f)
 
   /** BM25 query terms (high-df tokens of the synthetic corpus) and the
     * standard parameters. */

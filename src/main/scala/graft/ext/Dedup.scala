@@ -132,39 +132,6 @@ object Dedup {
   // here, caller-less, and a future caller mixing the two derivations
   // would have gotten zero matches with no error)
 
-  /** MinHash signatures via explode + grouped min — the scale path.
-    *
-    * The per-row HOF form ([[minhashSignature]]) is fine for a handful
-    * of hashes, but Spark's interpreted lambda evaluation re-evaluates
-    * the child expression per element, so inlining it `numHashes` times
-    * (as any downstream projection will, e.g. band keys) re-tokenizes
-    * the document numHashes × numShingles times. Exploding shingles to
-    * rows instead keeps every hash inside whole-stage codegen (one
-    * codegen'd md5 per (i, shingle)) and the `groupBy(id).agg(min…)`
-    * is partial-aggregated map-side, so the shuffle carries only one
-    * 16-element partial signature per (partition, id) — this is the
-    * plan that survives 100 TB. Values are bit-identical to
-    * [[minhashSignature]] (same keyed digest, same lexicographic min).
-    *
-    * Returns (id, h0 … h{numHashes-1}); docs with < k tokens have no
-    * shingles and drop out (they cannot minhash — route them through
-    * [[exactDuplicates]] instead).
-    */
-  def minhashSignatureAgg(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      k: Int = 3,
-      numHashes: Int = 16): DataFrame = {
-    val spread = withTokenArray(fanOut(docs), textCol)
-    val exploded = spread.select(col(idCol).as("id"),
-      explode(shinglesOfTokens(col("_toks"), k)).as("shingle"))
-    val mins = (0 until numHashes).map { i =>
-      min(md5(concat(lit(s"$i|"), col("shingle")).cast("binary"))).as(s"h$i")
-    }
-    exploded.groupBy("id").agg(mins.head, mins.tail: _*)
-  }
-
   /** Modulus for the affine minhash lanes: 2^31 − 1 (Mersenne). Keeps
     * every product a_i · (base mod P) < 2^62 — no overflow under ANSI. */
   val MinhashP: Long = 2147483647L
@@ -188,11 +155,15 @@ object Dedup {
   /** Production signature: ONE md5 per shingle (a 60-bit base drawn
     * from its hex prefix), then `numHashes` affine lanes
     * h_i = (a_i · base + b_i) mod 2^31−1 — the classic universal-hash
-    * minhash family. 16× less hashing than [[minhashSignatureAgg]]'s
-    * keyed-digest-per-lane form at identical LSH behavior, and still
-    * bit-reproducible in any engine that can parse hex (the q30 oracle
-    * mirrors it in DuckDB). Same explode + map-side-combined grouped
-    * min plan shape. Returns (id, h0 … h{n−1}) as longs. */
+    * minhash family. 16× less hashing than a keyed digest per lane at
+    * identical LSH behavior, and still bit-reproducible in any engine
+    * that can parse hex (the q30 oracle mirrors it in DuckDB).
+    * Shingles explode to rows rather than a per-row HOF
+    * ([[minhashSignature]]), so every hash stays inside whole-stage
+    * codegen and the grouped min combines map-side: the shuffle
+    * carries one partial signature per (partition, id). Docs with
+    * fewer than k tokens have no shingles and drop out. Returns (id,
+    * h0 … h{n−1}) as longs. */
   def minhashSignatureAggFast(
       docs: DataFrame,
       idCol: String = "doc_id",

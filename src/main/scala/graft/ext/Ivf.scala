@@ -236,14 +236,6 @@ object Ivf {
     exactPlan(cellsFor(emb, key, centroids), queryVecId, topK, centroids, radii,
       nProbe0, eps)._1
 
-  /** The cells [[topKExact]] reads for this query — the pruning
-    * diagnostic (and the spec's assertion surface): on clustered data
-    * this is far fewer than all k cells. */
-  def probeCells(emb: DataFrame, queryVecId: Long, topK: Int,
-                 centroids: Array[Array[Double]], radii: Array[Double],
-                 nProbe0: Int = 3, eps: Double = 1e-6): Seq[Int] =
-    exactPlan(withCells(emb, centroids), queryVecId, topK, centroids, radii, nProbe0, eps)._2
-
   /** [[topKExact]] AND its probed-cell diagnostic from ONE probe pass.
     * The single-value entry points each run the driver-side query-unit
     * lookup + provisional top-k jobs at call time — a caller wanting
@@ -253,14 +245,6 @@ object Ivf {
                       centroids: Array[Array[Double]], radii: Array[Double],
                       nProbe0: Int = 3, eps: Double = 1e-6): (DataFrame, Seq[Int]) =
     exactPlan(withCells(emb, centroids), queryVecId, topK, centroids, radii, nProbe0, eps)
-
-  /** [[topKExactProbed]] over the persisted [[cellsFor]] frame — the
-    * query-serving shape when both the result and the pruning
-    * diagnostic are wanted (mirrors [[topKExactCached]]). */
-  def topKExactProbedCached(emb: DataFrame, key: String, queryVecId: Long, topK: Int,
-                            centroids: Array[Array[Double]], radii: Array[Double],
-                            nProbe0: Int = 3, eps: Double = 1e-6): (DataFrame, Seq[Int]) =
-    exactPlan(cellsFor(emb, key, centroids), queryVecId, topK, centroids, radii, nProbe0, eps)
 
   /** The query row's unit vector, with NAMED failures for the two
     * states `.head().getSeq(0)` would turn into opaque exceptions: a

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column handling: image/audio/video as opaque `binary`
-  * payloads plus typed metadata (see [[graft.model.Schemas.mediaAsset]]).
+  * payloads plus typed metadata.
   *
   * The Spark-side plumbing — schema, partition-batched decode loop,
   * feature projection — is real and tested. Decode itself is REAL for

@@ -274,6 +274,17 @@ object PairTxn {
   def commitAll(
       spark: SparkSession, coordDir: String,
       commits: Seq[SideCommit]): Seq[Long] = {
+    recoverPairs(spark, coordDir)
+    commitRecovered(spark, coordDir, commits)
+  }
+
+  /** [[commitAll]] without its roll-forward: stage every side, write
+    * the intent, publish. For a caller that has just run
+    * [[recoverPairs]] on `coordDir` itself and written nothing there
+    * since. */
+  private[graft] def commitRecovered(
+      spark: SparkSession, coordDir: String,
+      commits: Seq[SideCommit]): Seq[Long] = {
     require(commits.size >= 2,
       s"commitAll coordinates at least two tables (got ${commits.size}); " +
         "a single table is one ordinary TxTable commit")
@@ -286,7 +297,6 @@ object PairTxn {
     require(roots.distinct.size == roots.size,
       "commitAll coordinates DISTINCT tables; same-table multi-writes " +
         "are one ordinary commit")
-    recoverPairs(spark, coordDir)
     val (coordStore, coordRoot) = TxTable.storeOf(spark, coordDir)
     // the id exists BEFORE staging so every side's open-intent
     // sentinel can name it from the first staged byte

@@ -188,21 +188,6 @@ object Pq {
       .withColumn("_dist", sqrt(Similarity.dot(col("_diff"), col("_diff"))))
   }
 
-  /** ADC candidates + exact re-rank (the FAISS refine pattern): the
-    * code scan proposes `k × refine` candidates by approximate
-    * distance, then only those rows read their raw vectors for an
-    * exact L2 re-rank. Best-effort: the answer is exact iff the pool
-    * covered the true top-k; [[topKExact]] adds the residual bound
-    * that makes it provably exact. */
-  def topKRefined(coded: DataFrame, codebooks: Codebooks, query: Array[Double],
-                  k: Int, refine: Int = 5,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    withExactDist(topK(coded, codebooks, query, k * refine, idCol), query, vecCol)
-      .withColumn("dist", round(col("_dist"), 6))
-      .select(col(idCol), col("label"), col("dist"))
-      .orderBy(col("dist"), col(idCol))
-      .limit(k)
-
   /** EXACT top-k via ADC + the residual bound (the re-rank lane with a
     * guarantee, mirror of [[Ivf.topKExact]]): `pq_dist` is the EXACT
     * squared distance from the query to a row's PQ reconstruction, so

@@ -44,12 +44,6 @@ object TextAnalysis {
 
   def distinctTokenCount(text: Column): Column = TextProfile.profile(text)("n_distinct")
 
-  /** Count of tokens that are in `stops` (occurrence count, not
-    * distinct — quality scoring wants density). HOF formulation kept
-    * for ad-hoc lists; the profiled langs use [[TextProfile]]. */
-  def stopwordCount(text: Column, stops: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isin(stops: _*)))
-
   /** Punctuation characters per character. */
   def punctCount(text: Column): Column = TextProfile.profile(text)("n_punct")
 
@@ -121,18 +115,13 @@ object TextAnalysis {
       "\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b", "<IP>")
   }
 
-  /** Repetition score: fraction of word 3-grams that are repeats of an
-    * earlier 3-gram in the same doc (Gopher/C4-style quality signal —
+  /** Repetition score: fraction of word k-grams that are repeats of an
+    * earlier k-gram in the same doc (Gopher/C4-style quality signal —
     * high values mean boilerplate/spam). 0 for docs too short to have
-    * a 3-gram. */
-  def repetitionScore(text: Column, k: Int = 3): Column =
-    repetitionScoreOfTokens(tokens(text), k)
-
-  /** [[repetitionScore]] over a MATERIALIZED token-array attribute
-    * (see [[Dedup.withTokenArray]]) — the text form above inlines the
-    * tokenization into the shingle transform's interpreted lambda,
-    * which re-tokenizes per shingle; prefer this form in any plan that
-    * scans a corpus. */
+    * a k-gram. Takes a MATERIALIZED token-array attribute (see
+    * [[Dedup.withTokenArray]]): a tokenization inlined into the
+    * shingle transform's interpreted lambda would re-tokenize per
+    * shingle. */
   def repetitionScoreOfTokens(toks: Column, k: Int = 3): Column = {
     // size(shingles) == n_tokens − k + 1 when n_tokens >= k: computing
     // it from the (cheap, attribute-sized) token count leaves the
@@ -162,7 +151,7 @@ object TextAnalysis {
     *   - `top_bigram_frac` — occurrences of the doc's most frequent
     *     word bigram over all bigram slots (a high mode means a
     *     repeated header/footer dominates);
-    *   - `dup_trigram_frac` — [[repetitionScore]] (repeated 3-gram
+    *   - `dup_trigram_frac` — [[repetitionScoreOfTokens]] (repeated 3-gram
     *     mass).
     *
     * All signals are counts or single divisions of counts — exactly
@@ -219,17 +208,5 @@ object TextAnalysis {
         col("alpha_ratio") >= minAlphaRatio &&
         col("top_bigram_frac") <= maxTopBigramFrac &&
         col("dup_trigram_frac") <= maxDupTrigramFrac)
-  }
-
-  /** All stats as one projection over a `text` column. */
-  def withTextStats(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    docs
-      .withColumn("n_tokens", tokenCount(t))
-      .withColumn("n_distinct_tokens", distinctTokenCount(t))
-      .withColumn("n_chars", length(t))
-      .withColumn("quality", qualityScore(t))
-      .withColumn("lang_pred", langIdHeuristic(t))
-      .withColumn("fingerprint", fingerprint(t))
   }
 }

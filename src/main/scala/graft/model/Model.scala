@@ -47,17 +47,4 @@ object Schemas {
     StructField("value", DoubleType),
     StructField("props", StringType),
   ))
-
-  /** Multimodal asset row: opaque binary payload + typed metadata.
-    * The decode step is stubbed (no image/audio codecs in this
-    * environment) but the schema, partitioning, and batch plumbing in
-    * [[graft.ext.Multimodal]] are real. */
-  val mediaAsset: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false), // image | audio | video
-    StructField("payload", BinaryType, nullable = true),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("duration_ms", LongType, nullable = true),
-  ))
 }

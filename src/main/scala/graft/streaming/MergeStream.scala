@@ -265,8 +265,8 @@ object MergeStream {
     * rows, zero rewrites) and a replace side publishes the view over
     * the post-batch state — so a reader NEVER sees a fact the view
     * lags behind past the roll-forward window, at any crash point
-    * (the [[graft.ext.PairTxn]] matrix; `commitAll` rolls forward any
-    * predecessor before staging, so the stream self-heals).
+    * (the [[graft.ext.PairTxn]] matrix; each intent first rolls
+    * forward any predecessor, so the stream self-heals).
     *
     * Exactly-once under at-least-once foreachBatch: the fact side
     * carries the (appId, batchId) ledger tag — a replayed batch
@@ -335,8 +335,9 @@ object MergeStream {
         // fact: the snapshot pins its version when opened (the frame,
         // kept or fresh, reads exactly that version's live files), and
         // a view derived from a pre-recovery snapshot would silently
-        // miss the recovered batch (commitAll recovers too, but only
-        // after this read would have happened)
+        // miss the recovered batch. This stream writes nothing to the
+        // coordinator between here and the commit, so the commit skips
+        // commitAll's second roll-forward.
         graft.ext.PairTxn.recoverPairs(spark, coordDir)
         // ONE snapshot serves the frame (read's memo) and the ledger
         val m = graft.ext.TxTable.openSnapshot(spark, factDir, None)
@@ -365,7 +366,7 @@ object MergeStream {
                 Seq(keyCol), "left_anti")
               .unionByName(images)
           }
-        graft.ext.PairTxn.commitAll(spark, coordDir, Seq(
+        graft.ext.PairTxn.commitRecovered(spark, coordDir, Seq(
           graft.ext.PairTxn.MergeDvCommit(factDir, changes, keyCol,
             opCol, partitionCol, txn = Some((appId, batchId)),
             touchedHint = Some(touched)),

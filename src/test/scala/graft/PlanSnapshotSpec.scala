@@ -64,6 +64,9 @@ class PlanSnapshotSpec extends SparkSpec {
     Files.createDirectories(artifactDir)
     if (regen) Files.createDirectories(goldenDir)
     val dir = sf() // sf0.001 — plan shape, not data scale
+    // plan over a fact this spec builds itself: a fact an earlier suite
+    // persisted and ran would plan as a finished adaptive plan
+    graft.analysis.EventsFact.invalidate(spark, dir)
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(q => skipSnapshots(q._1)).foreach { case (name, fn) =>
